@@ -86,13 +86,14 @@ def main(argv: list[str] | None = None) -> int:
             print(f"step {step}: {steps[step]}")
             print(".")
 
+    inertia = elbow(yh, res.model)  # None on an empty input
     summary = {
         "k": args.k,
         "seed": args.seed,
         "iterations": res.n_iter,
         "converged": res.converged,
         "final_movement": round(res.movements[-1], 6) if res.movements else None,
-        "elbow": round(elbow(yh, res.model), 4),
+        "elbow": round(inertia, 4) if inertia is not None else None,
         "centroids": {j: [round(x, 4) for x in c] for j, c in res.model},
     }
     print(json.dumps(summary))

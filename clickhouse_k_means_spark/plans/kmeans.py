@@ -52,30 +52,55 @@ Model = list[tuple[int, list[float]]]  # [(j, C), ...]
 
 
 @contextmanager
-def _aqe_off(spark):
-    """Scope AQE off around the k-means|| init's bounded driver probes
-    (r14, guide §1.2/§2.4 measurement). With AQE on, every
-    exchange-bearing probe runs one JOB per query stage — a Φ
-    aggregation costs 2 — and the init pays that per-job fixed latency
-    serially. These probes are FIXED-SHAPE at every scale (global
-    partial→final aggs whose exchange carries ≤ one row per
-    partition), so AQE has nothing to re-plan: no join to convert, no
-    skew to split, and the post-shuffle row counts are bounded by
-    construction. Measured at sf0.1 k=64: init 18 → 9 jobs with the
-    cache change, converged floor 3.3-3.5 s vs 4.5-5.4 s, with
-    bit-identical picks (every sum is exact-integer / order-free by
-    design, so physical partitioning never touches the values). The
-    SEQUENTIAL init deliberately does NOT use this scope — the same
-    treatment there measured slower (see init_centroids). Results
-    elsewhere are unaffected — the flag is restored on exit
-    (exceptions included)."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
+def _aqe_off(spark, shuffle_partitions: int | None = None):
+    """Scope for the fit's bounded driver probes: AQE off and, when
+    ``shuffle_partitions`` is given, ``spark.sql.shuffle.partitions``
+    set to it. Both session confs are restored on exit, exceptions
+    included.
+
+    With AQE on, every exchange-bearing query runs one JOB per query
+    stage (an aggregate costs 2), and a driver loop pays that per-job
+    fixed latency serially. With AQE off the whole query is one job.
+    Only queries whose exchange output is bounded by construction
+    belong in this scope, because nothing re-plans them:
+
+    - the k-means|| Φ and basin-weight aggregates (global or k-group
+      aggs; keep the session's partition count — its ``groupBy`` is
+      not bounded by a constant);
+    - the ++ pick probes (``_weighted_pick``): a bucket-sum aggregate
+      over at most ``_N_BUCKETS`` groups and a window over ONE bucket
+      key. Both fit in one partition, so they run with
+      ``shuffle_partitions=1``. AQE off at the session's partition
+      count is the wrong shape for them: the same jobs, but near-empty
+      reduce tasks (k=4 fit on 100k points, 4-core local host: 58
+      tasks and 2.51 s CPU per fit vs 40 and 2.30 s at one partition);
+    - ``prepare_working_set``'s global count/first aggregate.
+
+    Every sum these probes take is exact-integer and order-free, so
+    the physical layout never changes a value (picks are bit-identical
+    under any setting of either conf)."""
+    confs = {"spark.sql.adaptive.enabled": "false"}
+    if shuffle_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    old = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint``-ed DataFrame now,
+    instead of whenever the ContextCleaner gets to them. Only for
+    frames nothing reads any more: a released checkpoint fails loudly
+    on the next read."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 @dataclass
@@ -95,6 +120,24 @@ class KMeansResult:
             [(int(s), int(j), [float(x) for x in c]) for s, j, c in self.history],
             "step bigint, j int, C array<double>",
         )
+
+
+def _step_appender(spark, state_store, state_table: str):
+    """The WCR log writer shared by ``fit`` and ``resume_fit``: append
+    each step's (step, j, C) rows to ``state_table``, step-partitioned,
+    as they are produced."""
+    from clickhouse_k_means_spark.sources.dataset import local_df
+
+    def append(step: int, model: Model) -> None:
+        rows = [(int(step), int(j), [float(x) for x in c]) for j, c in model]
+        # ONE partition for the k-row step batch (r14, guide §6):
+        # createDataFrame otherwise slices k rows across
+        # defaultParallelism, writing up to k near-empty files per step
+        # and running a 32-task job for a k-row append
+        df = local_df(spark, rows, "step bigint, j int, C array<double>")
+        state_store.append(df, state_table, partition_by=["step"])
+
+    return append
 
 
 def _euclid(a: list[float], b: list[float]) -> float:
@@ -241,30 +284,48 @@ class KMeansEngine:
         # Checkpointing truncates lineage to a flat scan per round. On a
         # real cluster swap for reliable checkpointing if executor loss
         # during init matters (init is cheap to restart regardless).
-        # (r14 NEGATIVE RESULT, kept as the record: a lazy least()
-        # chain over one cached base under an AQE-off scope cut the
-        # k=4 init from 15 to 8 jobs, but interleaved quiet-host solos
-        # measured it SLOWER — converged init floor ~1.8-2.2 s vs
-        # ~1.5-1.7 s for this shape, with much worse warm-up spikes
-        # (first timed init 19.9 s vs 2.7 s) — the saved bounded-probe
-        # jobs are cheaper than the chain re-evaluation + fixed
-        # 32-partition exchanges it bought. Reverted per guide §1.1:
-        # the empirical loop beats the first-principles job count. The
-        # parallel init KEEPS its cache+AQE-off form, which measured
-        # faster (floor 3.3-3.5 s vs 4.5-5.4 s at k=64).)
-        state = (
+        #
+        # LAZY checkpoints: a round's state is materialized by the first
+        # job that reads it — the next pick's bucket-sum aggregate —
+        # and is checkpointed right after that job, so the pick's window
+        # and the following round read flat blocks, never a chain. Each
+        # pick is then exactly two jobs (bucket sums, in-bucket window)
+        # and no round pays a standalone materialization job. This is
+        # NOT the lazy least() chain over one cached base that measured
+        # slower and was reverted (b7498f5): that shape re-evaluated the
+        # whole chain per probe and ran its exchanges at 32 partitions.
+        # A/B on 100k 3-d points, k=4, 4-core local host, one JVM, 10
+        # alternating fits per variant: 24 → 12 jobs per fit (init
+        # 17 → 8), median fit CPU 2.53 → 2.30 s, identical models.
+        #
+        # The distinct state is built with AQE on (its exchange scales
+        # with the data, AQE sizes it by bytes); the per-pick probes
+        # run in the bounded one-partition scope (see _aqe_off).
+        states = [
             yh.select("Y")
             .distinct()
             .select("Y", dist_to(model[0][1]).alias("d"), bucket.alias("b"))
-            .localCheckpoint(eager=True)
-        )
-        for j in range(2, self.k + 1):
-            c = self._weighted_pick(state, rng, round_no=j)
-            model.append((j, c))
-            if j < self.k:
-                state = state.select(
-                    "Y", F.least(F.col("d"), dist_to(c)).alias("d"), "b"
-                ).localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
+        ]
+        try:
+            with _aqe_off(yh.sparkSession, shuffle_partitions=1):
+                for j in range(2, self.k + 1):
+                    c = self._weighted_pick(states[-1], rng, round_no=j)
+                    model.append((j, c))
+                    # the pick's aggregate just materialized states[-1];
+                    # its predecessor is no longer read by anything
+                    for old in states[:-1]:
+                        _release_checkpoint(old)
+                    del states[:-1]
+                    if j < self.k:
+                        states.append(
+                            states[-1]
+                            .select("Y", F.least(F.col("d"), dist_to(c)).alias("d"), "b")
+                            .localCheckpoint(eager=False)
+                        )
+        finally:
+            for old in states:
+                _release_checkpoint(old)
         return model
 
     # weight quantization for the ++ sampling: 2^20 steps per distance
@@ -545,20 +606,15 @@ class KMeansEngine:
         if self.mean_scales is None:
             return self._lloyd_step_fused(yh, model, dim, n_parts=n_parts)
         j = nearest_centroid_struct("Y", model)["j"]
-        if self.mean_scales is not None:
-            aggs = []
-            for dd in range(dim):
-                s = self.mean_scales[dd]
-                aggs.append(
-                    (
-                        F.sum(F.round(F.col("Y")[dd] * s).cast("bigint")).cast(
-                            "double"
-                        )
-                        / (F.lit(float(s)) * F.count(F.lit(1)).cast("double"))
-                    ).alias(f"c{dd}")
-                )
-        else:
-            aggs = [F.avg(F.col("Y")[dd]).alias(f"c{dd}") for dd in range(dim)]
+        aggs = []
+        for dd in range(dim):
+            s = self.mean_scales[dd]
+            aggs.append(
+                (
+                    F.sum(F.round(F.col("Y")[dd] * s).cast("bigint")).cast("double")
+                    / (F.lit(float(s)) * F.count(F.lit(1)).cast("double"))
+                ).alias(f"c{dd}")
+            )
         rows = yh.select(j.alias("j"), "Y").groupBy("j").agg(*aggs).collect()
         return sorted(
             (int(r["j"]), [float(r[f"c{dd}"]) for dd in range(dim)]) for r in rows
@@ -627,11 +683,8 @@ class KMeansEngine:
 
     def prepare_working_set(self, yh: DataFrame):
         """Materialize the fit's iteration working set — the ONE setup
-        both ``fit`` and ``resume_fit`` run, and the one
-        ``scripts/kscale_profile.py`` must replay exactly for its phase
-        attribution to decompose the real fit (ADVICE r12: the
-        profiler previously re-implemented this inline and any fit()
-        change silently invalidated it).
+        both ``fit`` and ``resume_fit`` run (``scripts/kscale_profile.py``
+        calls it too, so its phase attribution follows any change here).
 
         Returns ``(cached, working, dim, n_parts)``: the CACHED handle
         (the caller must ``cached.unpersist()`` when done — kept
@@ -642,21 +695,33 @@ class KMeansEngine:
         the sequential fit loop never pays the per-step ``.rdd`` plan
         translation, VERDICT r12).
 
+        Cost: the cache is filled by ONE global ``agg(count, first(Y))``
+        that yields both the row count and the arity. It runs in the
+        bounded ``_aqe_off`` scope: the cached plan (and so the
+        repartition's width) is fixed when ``cache()`` is called,
+        before the scope, and a global aggregate's exchange carries one
+        row per partition. That is at most 2 jobs: the cached plan's
+        repartition stage, then the aggregate.
+
         Layout contract: same partition layout => same double-
         summation order => bit-identical steps — which is why
         ``resume_fit`` must run the IDENTICAL prep."""
         # spread narrow sources to full parallelism before caching: a
         # single-file scan yields few partitions, and every Lloyd
         # iteration would inherit that narrow parallelism from cache.
-        sc = yh.sparkSession.sparkContext
+        spark = yh.sparkSession
+        sc = spark.sparkContext
         if yh.rdd.getNumPartitions() < sc.defaultParallelism:
             yh = yh.repartition(sc.defaultParallelism)
         cached = yh.select("i", "Y").cache()
         try:
-            head = cached.select("Y").first()
-            if head is None:
+            with _aqe_off(spark, shuffle_partitions=1):
+                n, head = cached.agg(
+                    F.count(F.lit(1)), F.first("Y", ignorenulls=True)
+                ).collect()[0]
+            if n == 0:
                 raise ValueError("k-means: input DataFrame is empty")
-            dim = len(head[0])
+            dim = len(head)
             if dim == 0:
                 raise ValueError("k-means: Y must have arity >= 1")
             # right-size the iteration working set: below ~50k rows
@@ -665,7 +730,6 @@ class KMeansEngine:
             # (no second copy), so small inputs stop paying 32-task
             # latency on every Lloyd pass while huge inputs keep full
             # width.
-            n = cached.count()
             width = cached.rdd.getNumPartitions()
             target = max(4, min(width, (n // 50_000) + 1))
             working = cached.coalesce(target) if target < width else cached
@@ -701,26 +765,15 @@ class KMeansEngine:
         """
         if self.k < 1:
             raise ValueError(f"k must be >= 1, got {self.k}")
-
-        def _persist_step(step: int, model: Model) -> None:
-            if state_store is None:
-                return
-            rows = [(int(step), int(j), [float(x) for x in c]) for j, c in model]
-            # ONE partition for the k-row step batch (r14, guide §6):
-            # createDataFrame otherwise slices k rows across
-            # defaultParallelism, writing up to k near-empty files per
-            # step and running a 32-task job for a k-row append
-            from clickhouse_k_means_spark.sources.dataset import local_df
-
-            df = local_df(
-                yh.sparkSession, rows, "step bigint, j int, C array<double>"
-            )
-            state_store.append(df, state_table, partition_by=["step"])
-
+        persist_step = (
+            None
+            if state_store is None
+            else _step_appender(yh.sparkSession, state_store, state_table)
+        )
         cached, yh, dim, n_parts = self.prepare_working_set(yh)
         try:
             return self._fit_on_prepared(
-                yh, dim, n_parts, persist_step=_persist_step
+                yh, dim, n_parts, persist_step=persist_step
             )
         finally:
             cached.unpersist()
@@ -834,23 +887,14 @@ class KMeansEngine:
             if self.has_converged(moved):
                 return KMeansResult(model, history, last, True, [moved])
 
-        def _persist_step(step: int, m) -> None:
-            prows = [(int(step), int(j), [float(x) for x in c]) for j, c in m]
-            # same one-partition step batch as fit's _persist_step (r14)
-            from clickhouse_k_means_spark.sources.dataset import local_df
-
-            df = local_df(
-                spark, prows, "step bigint, j int, C array<double>"
-            )
-            state_store.append(df, state_table, partition_by=["step"])
-
         # identical working-set prep to fit() — same partition layout
         # => same double-summation order => the resumed steps are
         # bit-identical to the uninterrupted fit's
         cached, yh, dim, n_parts = self.prepare_working_set(yh)
         try:
             return self._run_lloyd(
-                yh, dim, model, history, last + 1, _persist_step,
+                yh, dim, model, history, last + 1,
+                _step_appender(spark, state_store, state_table),
                 n_parts=n_parts,
             )
         finally:
@@ -1009,13 +1053,14 @@ def bisecting_fit(
 
     Determinism: split seeds derive from (seed, split index); every
     subset is localCheckpoint-ed so lineage stays O(1) across the
-    k−1 driver-loop rounds (the components.py lesson). Returns
+    k−1 driver-loop rounds (the components.py lesson). A split
+    releases its parent's and its assignment frame's blocks once the
+    halves are checkpointed, so storage holds the live leaves only
+    (the returned assignments read them). Returns
     ``(assignments (i, j, dist), model)`` with leaves renumbered
     1..n_leaves in split order; ``dist`` is the distance to the
     leaf's own center (same contract as ``assign``).
     """
-    from clickhouse_k_means_spark.plans.optimal_k import elbow
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     # spread the base ONCE to full parallelism before checkpointing
@@ -1044,24 +1089,27 @@ def bisecting_fit(
         # splittability folded into the stats pass (r15, guide §1.2):
         # min(Y) != max(Y) over the array column (Spark's total array
         # ordering) iff the leaf holds >= 2 DISTINCT points — replaces
-        # the per-pick distinct().limit(2).count() probe job. (Y is
+        # the per-pick distinct().limit(2).count() probe job. Compared
+        # in Spark, not Python: Spark's NaN = NaN, so an all-duplicate
+        # NaN-bearing leaf is unsplittable, as distinct() says. (Y is
         # non-null by the YH contract; a null-bearing leaf would fail
         # the k=2 fit long before this probe mattered.)
-        + [F.min("Y").alias("ymin"), F.max("Y").alias("ymax")]
+        + [(F.min("Y") != F.max("Y")).alias("can_split")]
     )
 
     def _leaf_from(row) -> tuple | None:
         """One leaf record ``(df_placeholder, wcss, n, mean,
         can_split)`` from a stats row: count + per-dim sums + per-dim
-        sums of squares + min/max Y. The mean is sums/n (the identical
-        IEEE division Average performs); the WCSS uses the sum-of-
-        squares identity Σ‖x−μ‖² = Σ_d (Σx_d² − (Σx_d)²/n), clamped at
-        0 per dimension (fp cancellation can dip epsilon-negative on a
-        constant column). Mathematically equal to the elbow() re-scan
-        around the mean — WCSS only ORDERS the split picks, and the
-        literal-free aggregate is also a codegen-cache hit, unlike the
-        per-leaf elbow whose mean literals recompiled every call. The
-        caller attaches the leaf DataFrame (index 0)."""
+        sums of squares + the splittability bit. The mean is sums/n
+        (the identical IEEE division Average performs); the WCSS uses
+        the sum-of-squares identity Σ‖x−μ‖² = Σ_d (Σx_d² − (Σx_d)²/n),
+        clamped at 0 per dimension (fp cancellation can dip
+        epsilon-negative on a constant column). Mathematically equal
+        to the elbow() re-scan around the mean — WCSS only ORDERS the
+        split picks, and the literal-free aggregate is also a
+        codegen-cache hit, unlike the per-leaf elbow whose mean
+        literals recompiled every call. The caller attaches the leaf
+        DataFrame (index 0)."""
         n = int(row["n"])
         if n == 0:
             return None
@@ -1070,8 +1118,7 @@ def bisecting_fit(
             max(0.0, float(row[f"q{d}"]) - float(row[f"s{d}"]) ** 2 / n)
             for d in range(dim)
         )
-        can_split = list(row["ymin"]) != list(row["ymax"])
-        return (None, wcss, n, mean, can_split)
+        return (None, wcss, n, mean, bool(row["can_split"]))
 
     def _leaf(df: DataFrame) -> tuple | None:
         rec = _leaf_from(df.agg(*_STATS_AGGS(dim)).first())
@@ -1150,13 +1197,20 @@ def bisecting_fit(
                 .localCheckpoint(eager=True)
             )
             halves.append((part, *rec[1:]))
+        # the halves are eager checkpoints of their own: nothing reads
+        # `tagged` any more, so its parent-sized blocks go now
+        _release_checkpoint(tagged)
         if len(halves) <= 1:
             # degenerate split (duplicate points) — leaf is final and
             # permanently unsplittable (ADVICE r6: re-appending it to
             # the split pool looped forever when it was the only
             # >= min_rows leaf left)
+            for part, *_rest in halves:
+                _release_checkpoint(part)
             final.append(picked)
             continue
+        # the halves replace the parent leaf (base or an earlier half)
+        _release_checkpoint(df)
         leaves.extend(halves)
     # final model: per-leaf mean center (carried on the leaf record —
     # no extra pass); assignments by membership

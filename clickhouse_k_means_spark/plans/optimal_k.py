@@ -31,8 +31,10 @@ from clickhouse_k_means_spark.functions.distance import l2_distance, l2_fixed
 Model = list[tuple[int, list[float]]]
 
 
-def elbow(yh: DataFrame, model: Model, squared: bool = False) -> float:
+def elbow(yh: DataFrame, model: Model, squared: bool = False) -> float | None:
     """Σ min-distance to the model (OptimalK.sql:3-8; Q6 exact parity).
+    ``None`` on an empty input (SQL ``sum`` over zero rows), on both
+    paths.
 
     Large models take an Arrow partials path (r14, guide §4): past the
     same ``k·dim`` threshold the Lloyd assignment uses, the unrolled
@@ -60,7 +62,7 @@ def elbow(yh: DataFrame, model: Model, squared: bool = False) -> float:
     return yh.agg(F.sum(d).alias("elbow")).collect()[0][0]
 
 
-def _elbow_batch(yh: DataFrame, model: Model, squared: bool) -> float:
+def _elbow_batch(yh: DataFrame, model: Model, squared: bool) -> float | None:
     """Arrow partials for the large-k elbow: per-partition Σ of the
     min distance (same (x−c)² left fold per element as the unrolled
     expression), combined on the driver in partition order."""

@@ -65,6 +65,21 @@ def test_cli_parquet_input(tmp_path, capsys, sf_dir):
     assert len(summary["centroids"]) == 3
 
 
+def test_cli_summary_elbow_none_on_empty_input(capsys, monkeypatch, spark):
+    """elbow() returns None on an empty input; the CLI summary prints
+    null instead of failing in round(None, 4)."""
+    from clickhouse_k_means_spark.plans import optimal_k
+
+    real = optimal_k.elbow
+    assert real(spark.range(0).selectExpr("array(1.0D, 2.0D) AS Y"), [(1, [0.0, 0.0])]) is None
+    monkeypatch.setattr(
+        optimal_k, "elbow", lambda yh, model, **kw: real(yh.limit(0), model, **kw)
+    )
+    assert main(["--generate", "--k", "2", "--seed", "42", "--quiet"]) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["elbow"] is None and len(summary["centroids"]) == 2
+
+
 def test_cli_input_requires_key_features(capsys):
     assert main(["--input", "x.parquet"]) == 2
 

@@ -341,6 +341,21 @@ def test_bisecting_fit_degenerate_leaf_terminates(spark):
     assert labels[1] == labels[2] != labels[3]
 
 
+def test_bisecting_fit_nan_duplicate_leaf_is_final(spark):
+    """ADVICE r15: an all-duplicate leaf whose points carry NaN is
+    unsplittable. The split test compares min(Y) and max(Y) in Spark,
+    where NaN = NaN; a Python list compare (nan != nan) flagged the
+    leaf splittable and the k=2 fit failed on it."""
+    from clickhouse_k_means_spark.plans.kmeans import bisecting_fit
+
+    yh = spark.createDataFrame(
+        [(i, [float("nan"), 1.0]) for i in range(6)], "i bigint, Y array<double>"
+    )
+    assigned, model = bisecting_fit(yh, k=2, seed=1)
+    assert len(model) == 1
+    assert assigned.count() == 6
+
+
 def test_lloyd_step_fused_matches_exact_means(spark):
     """The fused single-stage Lloyd step (mapInPandas partials +
     driver combine) must produce the same assignment (argmin, ties →

@@ -16,7 +16,15 @@ refactor that regresses it fails here and not only in a bench number:
   broken on Y, so the pick is a pure function of the data, not of the
   partition layout / scan order.
 - ``_aqe_off``: scoped — the session flag is restored on exit, on
-  the exception path too.
+  the exception path too; so is ``spark.sql.shuffle.partitions`` when
+  the scope sets it.
+- the ++ fit's job floor: each pick is two jobs (bucket sums, in-bucket
+  window), prepare is at most two, so a k=4 fit that converges in two
+  Lloyd steps runs at most 12 jobs; the init is the same model at any
+  input layout in both the xxhash and the reproducible mode.
+- checkpoint blocks: an init round's state and a bisecting split's
+  assignment frame and parent are released once nothing reads them,
+  so stored blocks stay flat per round and per split.
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ from __future__ import annotations
 import glob
 import os
 import random
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,20 +113,136 @@ def test_init_first_pick_duplicate_keys_layout_independent(spark):
 def test_aqe_guard_restores_flag_on_exit_and_error(spark):
     from clickhouse_k_means_spark.plans.kmeans import _aqe_off
 
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "true")
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    old = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "true")
+    spark.conf.set(keys[1], "7")
     try:
+        # without shuffle_partitions the partition count is untouched
         with _aqe_off(spark):
-            assert spark.conf.get(key) == "false"
-        assert spark.conf.get(key) == "true"
-        with pytest.raises(RuntimeError):
-            with _aqe_off(spark):
-                assert spark.conf.get(key) == "false"
-                raise RuntimeError("boom")
-        assert spark.conf.get(key) == "true"
+            assert [spark.conf.get(k) for k in keys] == ["false", "7"]
+        assert [spark.conf.get(k) for k in keys] == ["true", "7"]
+        with _aqe_off(spark, shuffle_partitions=1):
+            assert [spark.conf.get(k) for k in keys] == ["false", "1"]
+        assert [spark.conf.get(k) for k in keys] == ["true", "7"]
+        for parts in (None, 1):
+            with pytest.raises(RuntimeError):
+                with _aqe_off(spark, shuffle_partitions=parts):
+                    raise RuntimeError("boom")
+            assert [spark.conf.get(k) for k in keys] == ["true", "7"]
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _blobs(spark, n_per: int = 250, seed: int = 0):
+    """Four 3-d blobs 1000 apart with spread 0.01, rounded to 2
+    decimals so ``mean_scales=[100] * 3`` is exact."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    anchors = np.asarray(
+        [(0, 0, 0), (1000, 0, 0), (0, 1000, 0), (0, 0, 1000)], dtype=float
+    )
+    pts = np.round(
+        np.repeat(anchors, n_per, axis=0) + 0.01 * rng.standard_normal((4 * n_per, 3)),
+        2,
+    )
+    return spark.createDataFrame(
+        [(i, [float(x) for x in p]) for i, p in enumerate(pts)],
+        "i bigint, Y array<double>",
+    )
+
+
+@contextmanager
+def _job_ids(sc, group: str):
+    """Collect the ids of every Spark job started inside the block."""
+    old = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", old)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plusplus_fit_and_init_job_floor(spark):
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
+
+    sc = spark.sparkContext
+    yh = _blobs(spark).cache()
+    try:
+        yh.count()
+        with _job_ids(sc, "pp-fit") as fit_jobs:
+            res = KMeansEngine(k=4, seed=7).fit(yh)
+        assert len(res.model) == 4 and res.n_iter == 2
+        assert len(fit_jobs) <= 12, fit_jobs
+        for k in (3, 6):
+            eng = KMeansEngine(k=k, seed=7)
+            with _job_ids(sc, f"pp-init-{k}") as init_jobs:
+                eng.init_centroids(yh, random.Random(7))
+            # first pick + the distinct state's exchange, then two per pick
+            assert len(init_jobs) <= 2 * (k - 1) + 2, (k, init_jobs)
+    finally:
+        yh.unpersist()
+
+
+@pytest.mark.parametrize("scales", [None, [100, 100, 100]], ids=["xxhash", "reproducible"])
+def test_plusplus_init_same_model_at_any_layout(spark, scales):
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
+
+    base = _blobs(spark, n_per=100, seed=1)
+    eng = KMeansEngine(k=4, seed=11, mean_scales=scales)
+    layouts = (1, 4, spark.sparkContext.defaultParallelism)
+    inits = [
+        eng.init_centroids(base.repartition(n), random.Random(11)) for n in layouts
+    ]
+    assert inits[0] == inits[1] == inits[2]
+    if scales is not None:
+        # reproducible mode: the whole fit, Lloyd means included
+        fits = [eng.fit(base.repartition(n)).model for n in layouts]
+        assert fits[0] == fits[1] == fits[2]
+
+
+def _stored_rdds(sc) -> set[int]:
+    """Ids of the RDDs that hold blocks in the block manager."""
+    return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+
+
+def test_plusplus_init_releases_round_states(spark, monkeypatch):
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
+
+    sc = spark.sparkContext
+    yh = _blobs(spark, n_per=100, seed=2)
+    before = _stored_rdds(sc)
+    held: list[int] = []
+    pick = KMeansEngine._weighted_pick
+
+    def counting_pick(self, state, rng, round_no):
+        out = pick(self, state, rng, round_no)
+        held.append(len(_stored_rdds(sc) - before))
+        return out
+
+    monkeypatch.setattr(KMeansEngine, "_weighted_pick", counting_pick)
+    KMeansEngine(k=6, seed=3).init_centroids(yh, random.Random(3))
+    # at most the state just read and its predecessor, in every round
+    assert len(held) == 5 and max(held) <= 2, held
+    assert not _stored_rdds(sc) - before
+
+
+def test_bisecting_fit_keeps_only_leaf_blocks(spark):
+    from clickhouse_k_means_spark.plans.kmeans import bisecting_fit
+
+    sc = spark.sparkContext
+    yh = _blobs(spark, n_per=100, seed=3)
+    before = _stored_rdds(sc)
+    assigned, model = bisecting_fit(yh, k=4, seed=5)
+    stored = _stored_rdds(sc) - before
+    # one checkpoint per leaf; no split parents or assignment frames
+    assert len(model) == 4 and len(stored) == 4, stored
+    assert assigned.count() == 400
 
 
 def test_hof_dot_cosine_bitwise_match_unrolled(spark):
