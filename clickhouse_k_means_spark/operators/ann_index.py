@@ -1,88 +1,94 @@
-"""Persistent IVF ANN index over the snapshot state store (VERDICT r8
-item 5): ``ivf_topk`` re-fits the coarse quantizer and re-buckets the
-whole corpus on EVERY call — its own docstring says the cell table "is
-what a real deployment materializes". This module materializes it:
+"""Persistent ANN indexes over the snapshot state store: IVF, PQ and
+IVF-PQ. The reference keeps its fitted model in persisted state tables
+(k-means.sql:10-11); this module keeps a retrieval index the same way:
+the geometry is fitted once and committed beside the encoded vectors
+(``similarity.ivf_topk``/``pq_topk`` re-fit it on every call). An index
+is ONE table and every change ONE atomic snapshot commit, so vectors
+never exist without their geometry. Geometry rows carry ``n IS NULL``;
+vector rows carry the key in ``n`` and the raw vector in ``v``::
 
-- ``ivf_index``  — fit the coarse quantizer once, bucket the corpus,
-  COMMIT quantizer + cell assignments as one snapshot version.
-- ``ivf_append`` — bucket NEW vectors through the COMMITTED quantizer
-  (no re-fit, no re-bucketing of history) and append them atomically;
-  the natural companion to ``incremental_embed_dedup``'s committed
-  band/vector tables.
-- ``ivf_query``  — probe the committed index: nprobe nearest cells per
-  query, exact-cosine re-rank of only those cells' vectors. Supports
-  snapshot pinning (time travel) — a query replayed at version N sees
-  exactly the index N committed.
+    family  columns                   geometry rows (n NULL)        vector rows
+    ivf     n cell v                  cell=j, v=centroid_j          cell, v
+    pq      n sub code codes v        sub=s, code=c, v=book_s[c]    codes, v
+    ivfpq   n cell sub code codes v   both (sub NULL on centroids)  cell, codes, v
 
-Single-table layout (the ADVICE-r8 atomicity lesson from
-``incremental_embed_dedup``): centroid rows and cell-assignment rows
-ride ONE table, discriminated by ``n IS NULL``::
+IVF fits its quantizer on raw vectors, PQ its codebooks on normalized
+ones, IVF-PQ a quantizer on normalized vectors and codebooks on the
+residuals ``x - centroid[cell]``. Each verb has ONE private
+implementation parameterised by the committed geometry ``(centroids |
+None, codebooks | None)``, and the ``ivf_*``/``pq_*``/``ivfpq_*``
+functions are one-call wrappers. Where the families' arithmetic differs
+(normalization, probe scoring, ADC kernel, PQ's unclamped code count)
+the branch follows the geometry present, so each family replays its
+committed results bit for bit.
 
-    n (nullable)  cell (int)  v (array<double>)
-    NULL          j           centroid_j            -- quantizer rows
-    vec_id        cell        vector                -- assignment rows
+**Reader** (``_geometry``): one snapshot read; the family comes from the
+layout's columns (a named ``ValueError`` for an unknown layout or another
+family than the caller's); the geometry rows are one small collect.
 
-``ivf_index`` commits both kinds in one append (atomic — a crash can
-never leave assignments without their quantizer); ``ivf_append``
-commits assignment rows only, so every version's quantizer stays the
-version-1 fit until ``ivf_refit`` commits a fresh one (VERDICT r9
-item 4: after heavy drifted ingest, cell occupancy skews and probe
-recall decays — ``ivf_stats`` is the occupancy diagnostic that shows
-it, ``ivf_refit`` the maintenance call that fixes it; both preserve
-time travel, so a query pinned at an old version replays the old
-quantizer exactly).
+**Build** (``_build``): one hash-ordered driver sample, one NumPy fit
+(``_fit``), one Arrow encode pass, one commit — an append that refuses
+existing geometry for an index build, a replace that inherits and never
+shrinks the committed sizes for a refit (old versions keep replaying).
 
-Scale shape: the index build is one Arrow-matmul pass + one commit
-(the corpus is never shuffled); appends touch only the batch;
-queries collect the nlist centroid rows (tiny), pick probe cells
-driver-side, and scan the assignment table with an ``isin`` cell
-filter that reaches the parquet scan (min/max row-group pruning; a
-deployment additionally partitions the store by cell — the same
-pruning axis, stronger). Reference parity: the committed quantizer
-plays the reference's persisted-model role (k-means.sql:10-11 state
-tables), generalized to the retrieval index a 100 TB embedding corpus
-needs.
+**Encode** (``_encode``): vectors through a geometry to layout rows, for
+index, append (key-idempotent, ``_fresh_rows``), refit, ``ann_upsert``
+and ``ann_cdc_apply``.
 
-Concurrency: same SINGLE WRITER PER TABLE contract as the other
-incremental operators; readers are snapshot-isolated by the store.
+**Query** (``_query``): the bounded query batch is collected once; with
+centroids, probe cells are picked driver-side (widened per query under
+``where=``) and pushed to the scan as ``cell isin``; with codebooks an
+ADC scan keeps a shortlist; then one exact-cosine rerank and rank tail
+that keeps the caller's query-key type.
+
+**Diagnostics**: occupancy (``_stats``/``_skew``, the IVF disease),
+quantization error of the stored codes on a bounded sample
+(``_qerr_sample``, the PQ disease) and the refit advisor
+(``_refit_due``, which scores the exact ``_fit`` a refit would run).
+
+Churn (``ann_delete``/``ann_upsert``/``ann_cdc_apply``), compaction and
+recall advisors work on any family. SINGLE WRITER PER TABLE; readers are
+snapshot-isolated, and ``version=`` pins geometry and vectors together.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+from functools import reduce
+from typing import NamedTuple
+
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.functions.distance import cosine_fixed
 from clickhouse_k_means_spark.functions.vector import (
+    ivfpq_adc_batch,
+    ivfpq_encode_batch,
     nearest_cells_batch,
+    normalize_rows,
     numpy_kmeans,
+    pq_adc_batch,
+    pq_encode_batch,
     quantizer_sample_n,
 )
 from clickhouse_k_means_spark.operators.topk import top_k_by_group
+from clickhouse_k_means_spark.sources.dataset import local_df
 
+_LAYOUTS = {
+    "ivf": "n bigint, cell int, v array<double>",
+    "pq": "n bigint, sub int, code int, codes array<int>, v array<double>",
+    "ivfpq": (
+        "n bigint, cell int, sub int, code int, codes array<int>, "
+        "v array<double>"
+    ),
+}
+_COLUMNS = {f: [c.split()[0] for c in s.split(", ")] for f, s in _LAYOUTS.items()}
 
-def _local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """A driver-built bounded DataFrame as ONE partition — see
-    ``sources.dataset.local_df`` (r14, guide §2.2/§6): kills both the
-    32-task jobs per action over k-row geometry frames and the ~32
-    near-empty parquet files per snapshot commit (the r14 gate runs
-    showed 33-task scans over a 2-file-worth index)."""
-    from clickhouse_k_means_spark.sources.dataset import local_df
-
-    return local_df(spark, rows, schema)
-
-
-def _committed_centroids(
-    spark: SparkSession, store, table: str, version: int | None
-) -> list[list[float]]:
-    """The committed quantizer: centroid rows collected (nlist-sized),
-    ordered by cell id so list index == cell id."""
-    snap = store.read(spark, table, version=version)
-    rows = snap.filter(F.col("n").isNull()).select("cell", "v").collect()
-    if not rows:
-        raise ValueError(f"ivf index {table!r} has no committed quantizer")
-    by_cell = {int(r["cell"]): list(map(float, r["v"])) for r in rows}
-    return [by_cell[j] for j in sorted(by_cell)]
+# quantization-error sample: bounded driver read (the quantizer-fit
+# contract — same hash-ordered deterministic protocol), sized so the
+# per-subspace means are stable but the collect stays milliseconds
+_PQ_STATS_SAMPLE_N = 4096
 
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
@@ -93,7 +99,7 @@ def _require_integral_key(df: DataFrame, key: str, fn: str) -> None:
     ``n IS NULL`` (module docstring), so the key column must cast to
     bigint WITHOUT minting new nulls — a string or already-null key
     would silently masquerade as centroid rows and corrupt every later
-    ``_committed_centroids`` read (ADVICE r9). Fail loudly instead."""
+    ``_geometry`` read (ADVICE r9). Fail loudly instead."""
     dtype = dict(df.dtypes).get(key)
     if dtype is None:
         raise ValueError(f"{fn}: no column {key!r} in {df.columns}")
@@ -244,283 +250,380 @@ def _adaptive_probes(q_mat, centroids, counts: dict[int, int], nprobe: int, need
     return probes, sorted({c for cs in probes for c in cs})
 
 
-def _has_quantizer(spark: SparkSession, store, table: str) -> bool:
-    """True iff the LATEST snapshot carries committed centroid rows.
-    A logically-truncated table (SnapshotStateStore.truncate commits
-    an empty version, so exists() stays True forever) has none — the
-    state ivf_index treats as rebuildable (review, r9: the rebuild
-    guard's own remedy, 'truncate it first', must actually work)."""
-    if not store.exists(table):
-        return False
-    try:
-        _committed_centroids(spark, store, table, None)
-        return True
-    except ValueError:
-        return False
+class _Geometry(NamedTuple):
+    family: str
+    snap: DataFrame
+    centroids: np.ndarray | None
+    books: list[np.ndarray] | None
 
 
-def ivf_index(
-    corpus: DataFrame,
-    store,
-    table: str = "ivf_index",
-    nlist: int = 16,
-    seed: int = 42,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> int:
-    """Build and COMMIT the IVF index: quantizer fit (the ``ivf_topk``
-    deterministic hash-ordered sample protocol, sized by
-    ``quantizer_sample_n`` — 2048 rows up to 256 cells, 8/centroid
-    past that) + full-corpus cell assignment, one atomic snapshot
-    commit. Returns the committed
-    version. Fails if the table already holds a committed quantizer
-    (rebuild = ``store.truncate(table)`` first — the logical truncate
-    empties the snapshot, which this guard accepts — or use a new
-    table name; an index rebuild that silently replaced the quantizer
-    would orphan every previously-committed assignment)."""
-    import numpy as np
-
-    _require_integral_key(corpus, key, "ivf_index")
-    if _has_quantizer(corpus.sparkSession, store, table):
+def _geometry(
+    spark: SparkSession, store, table: str, version: int | None = None,
+    family: str | None = None, fn: str = "ann_index", collect: bool = True,
+    require: bool = True,
+) -> _Geometry:
+    """The one geometry reader: snapshot ``version`` of ``table``, its
+    family (from the layout's column set), and — unless ``collect`` is
+    off — the committed centroids (ordered by cell id) and codebooks
+    (ordered by subspace, then code). Raises ``ValueError`` when the
+    layout is not an index, when ``family`` is given and the table
+    holds another one, and (``require``) when a geometry part the
+    layout carries has no committed rows — e.g. after a truncate."""
+    snap = store.read(spark, table, version=version)
+    cols = set(snap.columns)
+    found = next((f for f, c in _COLUMNS.items() if cols == set(c)), None)
+    if found is None:
         raise ValueError(
-            f"ivf index {table!r} already exists — truncate it first "
-            "(appends must go through ivf_append so they bucket via "
-            "the committed quantizer)"
+            f"{fn}: table {table!r} has layout {sorted(cols)}, "
+            "not a known index family"
         )
-    sample = (
-        corpus.select(F.col(key).alias("sk"), F.col(vec).alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(nlist))
-        .collect()
+    if family is not None and found != family:
+        raise ValueError(
+            f"{fn}: table {table!r} holds a {found} index, not a {family} index"
+        )
+    if not collect:
+        return _Geometry(found, snap, None, None)
+    cents: dict[int, list[float]] = {}
+    books: dict[int, dict[int, list[float]]] = {}
+    geo = [c for c in ("cell", "sub", "code", "v") if c in cols]
+    for r in snap.filter(F.col("n").isNull()).select(*geo).collect():
+        d = r.asDict()
+        if d.get("sub") is None:
+            cents[int(d["cell"])] = d["v"]
+        else:
+            books.setdefault(int(d["sub"]), {})[int(d["code"])] = d["v"]
+    if require:
+        for part, col, have in (
+            ("quantizer", "cell", cents), ("codebooks", "sub", books)
+        ):
+            if col in cols and not have:
+                raise ValueError(
+                    f"{found} index {table!r} has no committed {part}"
+                )
+
+    def mat(by):
+        return np.asarray([by[i] for i in sorted(by)], dtype=np.float64)
+
+    return _Geometry(
+        found, snap, mat(cents) if cents else None,
+        [mat(books[s]) for s in sorted(books)] or None,
+    )
+
+
+def _sample(df: DataFrame, key: str, seed: int, n: int) -> list:
+    """The deterministic bounded driver sample every fit, error
+    measure and recall probe draws: the first ``n`` rows in
+    ``xxhash64(seed, key)`` order (so a smaller draw is a prefix of a
+    larger one)."""
+    return df.orderBy(F.xxhash64(F.lit(seed), F.col(key))).limit(n).collect()
+
+
+def _sq_dists(a: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(len(a), len(c)) squared L2 distances, ``(a - c)²`` form."""
+    return ((a[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+
+
+def _fit(x: np.ndarray, nlist, m_sub, n_codes, seed: int):
+    """Fit ``(centroids | None, codebooks | None)`` on the sample ``x``:
+    a ``min(nlist, len(x))``-cell quantizer when ``nlist`` is set, and
+    ``m_sub`` codebooks of ``n_codes`` codes when ``m_sub`` is set —
+    trained on the residuals through the fresh quantizer when both are
+    (FAISS ``by_residual``). Subspace ``s`` seeds with ``seed + s``."""
+    cents = None
+    if nlist is not None:
+        cents = numpy_kmeans(x, k=min(nlist, len(x)), seed=seed, n_iter=10)
+    if m_sub is None:
+        return cents, None
+    src = x if cents is None else x - cents[_sq_dists(x, cents).argmin(axis=1)]
+    dsub = x.shape[1] // m_sub
+    return cents, [
+        numpy_kmeans(
+            src[:, s * dsub : (s + 1) * dsub], k=n_codes, seed=seed + s,
+            n_iter=10,
+        )
+        for s in range(m_sub)
+    ]
+
+
+def _encode(rows: DataFrame, n, v, cents, books) -> DataFrame:
+    """``rows`` encoded through the geometry ``(cents, books)`` as full
+    layout rows: ``n`` and ``v`` are the key and vector Columns (``n``
+    aliased). One Arrow UDF pass; never re-fits."""
+    if books is None:
+        cell = nearest_cells_batch(cents.tolist(), nprobe=1)(v)[0]
+        return rows.select(n, cell.alias("cell"), v.alias("v"))
+    if cents is None:
+        enc = rows.select(n, pq_encode_batch(books)(v).alias("codes"), v.alias("v"))
+    else:
+        enc = rows.select(
+            n, ivfpq_encode_batch(cents, books)(v).alias("e"), v.alias("v")
+        ).select(
+            "n", F.col("e.cell").alias("cell"),
+            F.col("e.codes").alias("codes"), "v",
+        )
+    null = F.lit(None).cast("int")
+    return enc.select(
+        "n", *(["cell"] if cents is not None else []),
+        null.alias("sub"), null.alias("code"), "codes", "v",
+    )
+
+
+def _geometry_rows(spark: SparkSession, family: str, cents, books) -> DataFrame:
+    """The ``n IS NULL`` rows that commit a geometry: one driver-built
+    frame per part (centroids, then codebooks)."""
+    parts = []
+    if cents is not None:
+        parts.append([{"cell": j, "v": c.tolist()} for j, c in enumerate(cents)])
+    if books is not None:
+        parts.append([{"sub": s, "code": c, "v": b[c].tolist()}
+                      for s, b in enumerate(books) for c in range(len(b))])
+    cols, schema = _COLUMNS[family], _LAYOUTS[family]
+    frames = [local_df(spark, [tuple(d.get(c) for c in cols) for d in p], schema)
+              for p in parts]
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _build(
+    rows: DataFrame, store, table: str, family: str, nlist, m_sub, n_codes,
+    seed: int, key: str = "n", vec: str = "v", refit: bool = False,
+) -> int:
+    """Fit a geometry on the hash-ordered sample of ``rows`` (sized by
+    ``quantizer_sample_n`` of the larger of nlist/n_codes), encode
+    every row through it, and commit geometry + vector rows in ONE
+    version: an append for an index build, a replace for a refit.
+    The corpus is read twice (sample, encode) and never shuffled.
+    Vectors are normalized for the PQ families; IVF fits raw vectors.
+    IVF-PQ clamps its code count to the sample, PQ keeps the requested
+    one. A refit refuses a sample smaller than the geometry it would
+    commit (no silent shrink)."""
+    fn = f"{family}_{'refit' if refit else 'index'}"
+    spark = rows.sparkSession
+    ks = [k for k in (nlist, n_codes) if k is not None]
+    sample = _sample(
+        rows.select(F.col(key).alias("sk"), F.col(vec).alias("sv")), "sk",
+        seed, quantizer_sample_n(max(ks)),
     )
     if not sample:
-        raise ValueError("ivf_index: empty corpus")
+        raise ValueError(
+            f"{fn}: index {table!r} holds no vectors" if refit
+            else f"{fn}: empty corpus"
+        )
     x = np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    centers = numpy_kmeans(x, k=min(nlist, len(sample)), seed=seed, n_iter=10)
-    centers_l = [list(map(float, c)) for c in centers]
-    spark = corpus.sparkSession
-    cent_rows = _local_df(spark,
-        [(None, j, c) for j, c in enumerate(centers_l)],
-        "n bigint, cell int, v array<double>",
-    )
-    cell1 = nearest_cells_batch(centers_l, nprobe=1)
-    assign = corpus.select(
-        _key_as_n(key, "ivf_index"),
-        cell1(F.col(vec).cast("array<double>"))[0].alias("cell"),
-        F.col(vec).cast("array<double>").alias("v"),
-    )
-    return store.append(cent_rows.unionByName(assign), table)
+    if m_sub is not None:
+        x = normalize_rows(x)
+        if x.shape[1] % m_sub:
+            raise ValueError(f"dim {x.shape[1]} not divisible by m_sub {m_sub}")
+    if refit and len(x) < max(ks):
+        inherited = "/".join(
+            f"{name}={k}" for name, k in (("nlist", nlist), ("n_codes", n_codes))
+            if k is not None
+        )
+        raise ValueError(
+            f"{fn}: corpus sample ({len(x)} rows) is smaller than the "
+            f"inherited {inherited}; refusing to silently shrink the "
+            "committed geometry"
+        )
+    if nlist is not None and n_codes is not None:
+        n_codes = min(n_codes, len(x))
+    cents, books = _fit(x, nlist, m_sub, n_codes, seed)
+    n = F.col("n") if refit else _key_as_n(key, fn)
+    assign = _encode(rows, n, F.col(vec).cast("array<double>"), cents, books)
+    geo = _geometry_rows(spark, family, cents, books)
+    commit = store.replace if refit else store.append
+    return commit(geo.unionByName(assign), table)
 
 
-def ivf_append(
-    new_vecs: DataFrame,
-    store,
-    table: str = "ivf_index",
-    key: str = "vec_id",
-    vec: str = "embedding",
+def _index(
+    corpus: DataFrame, store, table: str, family: str, seed: int, key: str,
+    vec: str, nlist=None, m_sub=None, n_codes=None,
 ) -> int:
-    """Bucket ``new_vecs`` through the COMMITTED quantizer and append
-    their assignment rows (one atomic commit, no re-fit, history
-    untouched). Returns the committed version.
+    """Build and commit a new index; refuses a table that already holds
+    committed geometry (rebuild = ``store.truncate(table)`` first, or a
+    new table: replacing the geometry under committed vector rows
+    would orphan or mis-score all of them)."""
+    fn = f"{family}_index"
+    _require_integral_key(corpus, key, fn)
+    if store.exists(table):
+        g = _geometry(corpus.sparkSession, store, table, family=family,
+                      fn=fn, require=False)
+        if g.centroids is not None or g.books is not None:
+            raise ValueError(
+                f"{family} index {table!r} already exists — truncate it "
+                f"first (appends must go through {family}_append so they "
+                "encode via the committed geometry)"
+            )
+    return _build(corpus, store, table, family, nlist, m_sub, n_codes, seed,
+                  key, vec)
 
-    Idempotent on retry (ADVICE r9): batch keys already committed are
-    SKIPPED, so a re-ingested batch (e.g. a retry that bypassed the
-    CLI's rollback) cannot append duplicate assignment rows that would
-    occupy top-k slots in ``ivf_query``. Scale shape: see
-    ``_fresh_rows`` (broadcast probe for micro-batches, shuffled
-    fallback for backfill-scale batches). Within-batch duplicate keys
-    are also collapsed (keep-any — vectors under one key are one
-    point by contract)."""
-    spark = new_vecs.sparkSession
-    _require_integral_key(new_vecs, key, "ivf_append")
-    centers_l = _committed_centroids(spark, store, table, None)
-    cell1 = nearest_cells_batch(centers_l, nprobe=1)
-    assign = new_vecs.select(
-        _key_as_n(key, "ivf_append"),
-        cell1(F.col(vec).cast("array<double>"))[0].alias("cell"),
-        F.col(vec).cast("array<double>").alias("v"),
-    ).dropDuplicates(["n"])
+
+def _refit(
+    spark: SparkSession, store, table: str, family: str, seed: int,
+    nlist=None, m_sub=None, n_codes=None,
+) -> int:
+    """Re-fit the geometry on the vectors the index holds NOW and
+    re-encode all of them as one replace-snapshot version. Geometry
+    sizes left ``None`` inherit the committed ones (the maintenance
+    loop ``if *_refit_due(...): *_refit(...)`` must not silently
+    resize); explicit values resize on purpose."""
+    g = _geometry(spark, store, table, family=family, fn=f"{family}_refit")
+    if g.centroids is not None and nlist is None:
+        nlist = len(g.centroids)
+    if g.books is not None:
+        m_sub = len(g.books) if m_sub is None else m_sub
+        n_codes = g.books[0].shape[0] if n_codes is None else n_codes
+    current = g.snap.filter(F.col("n").isNotNull()).select("n", "v")
+    return _build(current, store, table, family, nlist, m_sub, n_codes, seed,
+                  refit=True)
+
+
+def _append(new_vecs: DataFrame, store, table: str, family: str, key: str,
+            vec: str) -> int:
+    """Encode a batch through the committed geometry and append the
+    rows whose keys are not committed yet (one commit, no re-fit).
+    Within-batch duplicate keys collapse keep-any."""
+    fn = f"{family}_append"
+    _require_integral_key(new_vecs, key, fn)
+    assign = _encode_committed(new_vecs, store, table, key, vec, fn, family)
     return store.append(_fresh_rows(new_vecs, assign, store, table), table)
 
 
-def ivf_query(
-    queries: DataFrame,
-    store,
-    table: str = "ivf_index",
-    k: int = 10,
-    nprobe: int = 2,
-    query_key: str = "q",
-    vec: str = "embedding",
-    version: int | None = None,
-    where=None,
-    meta: DataFrame | None = None,
-    meta_key: str = "n",
-) -> DataFrame:
-    """Probe the committed index: ``(q, n, score, rank)`` — the
-    ``ivf_topk`` output contract served from persisted state. Queries
-    are the bounded broadcast side (same contract as the other ANN
-    query paths); ``version`` pins a snapshot for exact replays.
+def _encode_committed(batch: DataFrame, store, table: str, key: str,
+                      vec: str, fn: str, family: str | None = None) -> DataFrame:
+    """``batch`` encoded through ``table``'s committed geometry (of
+    ``family``, or of whichever family the layout holds), one row per
+    key."""
+    g = _geometry(batch.sparkSession, store, table, family=family, fn=fn)
+    return _encode(
+        batch, _key_as_n(key, fn), F.col(vec).cast("array<double>"),
+        g.centroids, g.books,
+    ).dropDuplicates(["n"])
 
-    ``where=`` (with optional ``meta=``/``meta_key=``) runs a FILTERED
-    search: the predicate is pushed into the candidate scan (see
-    ``_predicate_filter``) and the probe set widens per query until it
-    covers at least ``4*k`` predicate-surviving rows
-    (``_adaptive_probes``) — so the top-k among the survivors is
-    served from genuinely-scanned candidates, never post-filtered from
-    a fixed-k shortlist that under-returns."""
+
+def _probe_order(q_mat: np.ndarray, cents: np.ndarray, l2: bool) -> np.ndarray:
+    """Each query's cells, nearest first (stable: ties to the lowest
+    cell id). IVF scores ``-2 q·c + |c|²`` on raw queries (the
+    ``nearest_cells_batch`` arithmetic); IVF-PQ scores ``(q - c)²`` on
+    normalized ones. Both forms stay as committed, because their
+    rounding can order near-ties differently."""
+    if l2:
+        scores = _sq_dists(q_mat, cents)
+    else:
+        scores = -2.0 * (q_mat @ cents.T) + (cents * cents).sum(axis=1)
+    return np.argsort(scores, axis=1, kind="stable")
+
+
+def _query(
+    queries: DataFrame, store, table: str, family: str, k: int, nprobe,
+    rerank, query_key: str, vec: str, version, where, meta, meta_key: str,
+) -> DataFrame:
+    """Top-``k`` by exact cosine against the committed index:
+    ``(q, n, score, rank)``, ``q`` of the caller's key type. The query
+    batch is the bounded broadcast side and is collected once.
+
+    With centroids, each query probes ``min(nprobe, nlist)`` cells;
+    under ``where=`` the probe set widens per query (``_adaptive_probes``)
+    until it covers ``max(k, rerank)`` predicate-surviving rows, so the
+    top-k among survivors comes from scanned candidates. The probed
+    union reaches the parquet scan as ``cell isin``. With codebooks,
+    the ADC lookup tables are built driver-side from the (normalized)
+    queries and the scan keeps a ``rerank`` shortlist (default 4k) per
+    query — IVF-PQ's probe mask scores unprobed cells as +inf. The
+    survivors get one exact-cosine rerank and the rank tail."""
+    fn = f"{family}_query"
     spark = queries.sparkSession
+    g = _geometry(spark, store, table, version, family, fn)
+    cents, books = g.centroids, g.books
+    qtype = queries.schema[query_key].dataType.simpleString()
+    out_schema = f"q {qtype}, n bigint, score double, rank int"
+    scan = g.snap.filter(F.col("n").isNotNull())
     if where is not None:
-        return _ivf_query_filtered(
-            queries, store, table, k, nprobe, query_key, vec, version,
-            where, meta, meta_key,
-        )
-    import numpy as np
-
-    centers_l = _committed_centroids(spark, store, table, version)
-    dim = len(centers_l[0])
-    # collect the bounded query batch ONCE and pick probe cells
-    # driver-side (r14, guide §1.2): the previous shape paid one
-    # eager-checkpoint job plus one distinct().collect() job per query
-    # call just to learn the probed cell list. The arithmetic is the
-    # EXACT nearest_cells_batch scoring (-2 q·c + |c|², stable argsort,
-    # ties to the lowest cell id) on the same float64 values, so the
-    # probe sets — and therefore the results — are bit-identical; the
-    # pq/ivfpq/filtered arms already collect their query batch this
-    # way (the queries side is the bounded broadcast side by contract).
-    qtype = queries.schema[query_key].dataType.simpleString()
-    qrows = queries.select(
-        F.col(query_key).alias("q"),
-        F.col(vec).cast("array<double>").alias("qv"),
-    ).collect()
+        scan = _predicate_filter(where, meta, meta_key, fn)(scan)
+    qrows = queries.select(F.col(query_key).alias("q"),
+                           F.col(vec).cast("array<double>").alias("qv")).collect()
     if not qrows:
-        return _local_df(spark,
-            [], f"q {qtype}, n bigint, score double, rank int"
-        )
-    centers_np = np.asarray(centers_l, dtype=np.float64)
+        return local_df(spark, [], out_schema)
     q_mat = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
-    scores_np = -2.0 * (q_mat @ centers_np.T) + (centers_np * centers_np).sum(
-        axis=1
-    )
-    n_probe = min(nprobe, len(centers_l))
-    order = np.argsort(scores_np, axis=1, kind="stable")[:, :n_probe]
-    q = _local_df(
-        spark,
-        [
-            (r["q"], [float(x) for x in r["qv"]], [int(c) for c in order[i]])
-            for i, r in enumerate(qrows)
-        ],
-        f"q {qtype}, qv array<double>, cells array<int>",
-    ).select("q", "qv", F.explode("cells").alias("cell"))
-    probed = sorted({int(c) for row in order for c in row})
-    cells = (
-        store.read(spark, table, version=version)
-        .filter(F.col("n").isNotNull())
-        # driver-known probe list pushes to the parquet scan (row-group
-        # min/max pruning) — the snapshot is never fully re-read for a
-        # narrow query
-        .filter(F.col("cell").isin(probed))
-        .select("n", "cell", F.col("v").alias("cv"))
-    )
-    scored = cells.join(F.broadcast(q), "cell").select(
-        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
-    )
-    order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(scored, k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
-
-
-def _ivf_query_filtered(
-    queries: DataFrame,
-    store,
-    table: str,
-    k: int,
-    nprobe: int,
-    query_key: str,
-    vec: str,
-    version: int | None,
-    where,
-    meta: DataFrame | None,
-    meta_key: str,
-) -> DataFrame:
-    """The ``where=`` arm of ``ivf_query``. Plan: predicate → candidate
-    scan (semi-join or direct filter, ``_predicate_filter``), ONE
-    nlist-bounded aggregation for per-cell survivor counts, per-query
-    adaptive probe lists driver-side, then the family's scan-join-
-    rerank tail over ``cell isin (probed)`` — the isin pushes through
-    the semi join to the parquet scan, so the snapshot is never fully
-    re-read. Queries are collected driver-side (the bounded-broadcast
-    contract the PQ paths already use) because the adaptive widening
-    needs each query's own cell-distance order."""
-    import numpy as np
-
-    spark = queries.sparkSession
-    centers_l = _committed_centroids(spark, store, table, version)
-    dim = len(centers_l[0])
-    flt = _predicate_filter(where, meta, meta_key, "ivf_query")
-    allowed = flt(
-        store.read(spark, table, version=version)
-        .filter(F.col("n").isNotNull())
-    )
-    # the caller's query-key TYPE survives the driver round-trip
-    # (ADVICE r13: an int() coercion here made adding where= to an
-    # otherwise-identical call change the output schema — and crash on
-    # non-integral query keys — while the unfiltered arm preserved it)
-    qtype = queries.schema[query_key].dataType.simpleString()
-    qrows = queries.select(
-        F.col(query_key).alias("q"),
-        F.col(vec).cast("array<double>").alias("qv"),
-    ).collect()
-    counts = _filtered_cell_counts(allowed) if qrows else {}
-    if not qrows or not counts:
-        return _local_df(spark,
-            [], f"q {qtype}, n bigint, score double, rank int"
+    if books is not None:
+        q_mat = normalize_rows(q_mat)
+    rerank = rerank or 4 * k
+    if cents is not None:
+        n_probe = min(nprobe, len(cents))
+        if where is not None:
+            counts = _filtered_cell_counts(scan)
+            if not counts:
+                return local_df(spark, [], out_schema)
+            probes, probed = _adaptive_probes(
+                q_mat, cents, counts, nprobe=n_probe, need=max(k, rerank)
+            )
+        else:
+            order = _probe_order(q_mat, cents, books is not None)[:, :n_probe]
+            probes = [[int(c) for c in row] for row in order]
+            probed = sorted({c for row in probes for c in row})
+        # driver-known probe list -> parquet row-group pruning
+        scan = scan.filter(F.col("cell").isin(probed))
+    qv = [[float(x) for x in r["qv"]] for r in qrows]
+    dim = cents.shape[1] if cents is not None else sum(b.shape[1] for b in books)
+    if books is None:
+        qx = local_df(
+            spark,
+            [(r["q"], qv[i], probes[i]) for i, r in enumerate(qrows)],
+            f"q {qtype}, qv array<double>, cells array<int>",
+        ).select("q", "qv", F.explode("cells").alias("cell"))
+        scored = scan.select("n", "cell", F.col("v").alias("cv")).join(
+            F.broadcast(qx), "cell"
         )
-    q_mat = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
-    probes, probed = _adaptive_probes(
-        q_mat,
-        np.asarray(centers_l, dtype=np.float64),
-        counts,
-        nprobe=min(nprobe, len(centers_l)),
-        need=4 * k,
-    )
-    qdf = _local_df(spark,
-        [
-            (r["q"], [float(x) for x in r["qv"]], probes[i])
-            for i, r in enumerate(qrows)
-        ],
-        f"q {qtype}, qv array<double>, cells array<int>",
-    )
-    qx = qdf.select("q", "qv", F.explode("cells").alias("cell"))
-    cand = allowed.filter(F.col("cell").isin(probed)).select(
-        "n", "cell", F.col("v").alias("cv")
-    )
-    scored = cand.join(F.broadcast(qx), "cell").select(
-        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
-    )
+    else:
+        if cents is None:
+            adc = pq_adc_batch(books, q_mat)("codes")
+        else:
+            mask = np.zeros((len(q_mat), len(cents)), dtype=bool)
+            for qi, cs in enumerate(probes):
+                mask[qi, cs] = True
+            adc = ivfpq_adc_batch(cents, books, q_mat, probe_mask=mask)(
+                "cell", "codes"
+            )
+        short = scan.select(
+            "n", F.col("v").alias("cv"), F.posexplode(adc).alias("qi", "ad2")
+        )
+        if cents is not None:
+            short = short.filter(F.col("ad2") != float("inf"))
+        short = top_k_by_group(
+            short, rerank, "qi", [F.col("ad2").asc(), F.col("n").asc()]
+        )
+        qdf = local_df(
+            spark,
+            [(i, r["q"], qv[i]) for i, r in enumerate(qrows)],
+            f"qi int, q {qtype}, qv array<double>",
+        )
+        scored = short.join(F.broadcast(qdf), "qi")
+    scored = scored.select("q", "n", cosine_fixed("qv", "cv", dim).alias("score"))
     order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(scored, k, "q", order)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
+    return top_k_by_group(scored, k, "q", order).withColumn(
+        "rank", F.row_number().over(w)
+    )
 
 
-def _occupancy_stats(cells: DataFrame, counts: DataFrame) -> DataFrame:
-    """Shared occupancy tail for the cell-bearing indexes: left-join
-    counts onto the full cell list (EMPTY cells included), grand total
-    via broadcast cross-join scalar — the repo-wide convention
-    (VERDICT r10 what's-wrong #2: a Window.partitionBy() here was the
-    one SinglePartition window left in the codebase; post-agg and
-    nlist-sized so harmless, but it spammed WindowExec warnings and
-    forced the plan audit to carve out what it elsewhere bans
-    categorically). ``filled`` is nlist rows — the eager checkpoint
-    keeps the snapshot scan from re-deriving under both the total and
-    the final select."""
+def _stats(spark: SparkSession, store, table: str, version, family: str) -> DataFrame:
+    """Cell occupancy ``(cell, n_vecs, occupancy_ppm)``, one row per
+    committed cell, EMPTY cells included. Counts are left-joined onto
+    the cell list and the grand total rides a broadcast cross-join
+    scalar (no SinglePartition window); the nlist-row ``filled`` frame
+    is checkpointed so the snapshot scan is not re-derived for the
+    total and the final select."""
+    snap = _geometry(spark, store, table, version, family, f"{family}_stats",
+                     collect=False).snap
+    geo = F.col("n").isNull()
+    if "sub" in snap.columns:
+        geo = geo & F.col("sub").isNull()
+    counts = (
+        snap.filter(F.col("n").isNotNull())
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_vecs"))
+    )
     filled = (
-        cells.join(counts, "cell", "left")
+        snap.filter(geo).select("cell")
+        .join(counts, "cell", "left")
         .select("cell", F.coalesce("n_vecs", F.lit(0)).alias("n_vecs"))
         .localCheckpoint(eager=True)
     )
@@ -535,1274 +638,262 @@ def _occupancy_stats(cells: DataFrame, counts: DataFrame) -> DataFrame:
     )
 
 
-def ivf_stats(
-    spark: SparkSession,
-    store,
-    table: str = "ivf_index",
-    version: int | None = None,
-) -> DataFrame:
-    """Occupancy diagnostic (VERDICT r9 item 4a): one row per
-    quantizer cell — ``(cell, n_vecs, occupancy_ppm)`` — including
-    EMPTY cells (a drifted corpus shows up as a few overfull cells and
-    many empty ones; a query probing nprobe cells then scans far more
-    than nprobe/nlist of the corpus and recall decays). One tiny agg
-    over the snapshot (nlist output rows); ``version`` pins history.
-
-    Reading it: a healthy index has occupancy_ppm ≈ 1e6/nlist per
-    cell. max(occupancy_ppm) · nlist/1e6 is the skew factor — the
-    multiple of the fair share the hottest cell holds; past ~4 the
-    probe cost argument for IVF is gone and ``ivf_refit`` is due."""
-    snap = store.read(spark, table, version=version)
-    cells = snap.filter(F.col("n").isNull()).select("cell")
-    counts = (
-        snap.filter(F.col("n").isNotNull())
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-    )
-    return _occupancy_stats(cells, counts)
-
-
-def ivf_skew_factor(
-    spark: SparkSession,
-    store,
-    table: str = "ivf_index",
-    version: int | None = None,
-) -> float:
+def _skew(spark: SparkSession, store, table: str, version, family: str) -> float:
     """The occupancy skew factor: the multiple of the fair share the
-    hottest cell holds (``max(occupancy_ppm) * nlist / 1e6`` — 1.0 is
-    perfectly balanced). One nlist-row collect over ``ivf_stats``."""
-    rows = ivf_stats(spark, store, table, version).collect()
+    hottest cell holds (``max(occupancy_ppm) * nlist / 1e6``; 1.0 is
+    balanced; past ~4 the probe-cost argument for IVF is gone)."""
+    rows = _stats(spark, store, table, version, family).collect()
     if not rows:
-        raise ValueError(f"ivf index {table!r} has no cells")
+        raise ValueError(f"{family} index {table!r} has no cells")
     return max(int(r["occupancy_ppm"]) for r in rows) * len(rows) / 1e6
 
 
-def ivf_refit_due(
-    spark: SparkSession,
-    store,
-    table: str = "ivf_index",
-    threshold: float = 4.0,
-    version: int | None = None,
-) -> bool:
-    """The maintenance advisor: True when the skew factor exceeds
-    ``threshold`` (default 4 — past that the hottest cell costs 4x a
-    fair probe and the IVF probe-cost argument is gone; see
-    ``ivf_stats``). The scheduled-job form of the ``ivf_stats`` →
-    ``ivf_refit`` loop: ``if ivf_refit_due(...): ivf_refit(...)``."""
-    if threshold <= 1.0:
-        raise ValueError(f"threshold must exceed 1.0: {threshold}")
-    return ivf_skew_factor(spark, store, table, version) > threshold
-
-
-def ivf_refit(
-    spark: SparkSession,
-    store,
-    table: str = "ivf_index",
-    nlist: int | None = None,
-    seed: int = 42,
-) -> int:
-    """Re-fit the quantizer on the CURRENT corpus and re-commit
-    (VERDICT r9 item 4b): the maintenance call for a drifted index.
-    Fits a fresh quantizer with the same deterministic sample
-    protocol as ``ivf_index`` (``quantizer_sample_n``-sized) — but over the vectors the index holds
-    NOW — re-assigns every committed vector through it, and commits
-    quantizer + assignments as ONE replace-snapshot version (the
-    store's copy-on-write ``replace``). History stays time-travelable:
-    a query pinned at an earlier version replays the old quantizer and
-    old assignments exactly, like ``rollback``. Returns the version.
-
-    ``nlist=None`` (the default) INHERITS the committed quantizer's
-    cell count (ADVICE r10: the advertised maintenance loop
-    ``if ivf_refit_due(...): ivf_refit(...)`` must not silently
-    resize — a 64-cell index rebuilt with a bare-default 16 cells
-    degrades probe selectivity and recall with no error). Pass an
-    explicit ``nlist`` only to intentionally resize.
-
-    Scale shape: identical to ``ivf_index`` — one driver-side fit on a
-    bounded sample, one Arrow-matmul pass over the corpus for
-    re-assignment, one atomic commit; the corpus is never shuffled."""
-    import numpy as np
-
-    if nlist is None:
-        nlist = len(_committed_centroids(spark, store, table, None))
-    current = (
-        store.read(spark, table)
-        .filter(F.col("n").isNotNull())
-        .select("n", "v")
-    )
-    sample = (
-        current.select(F.col("n").alias("sk"), F.col("v").alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(nlist))
-        .collect()
-    )
-    if not sample:
-        raise ValueError(f"ivf_refit: index {table!r} holds no vectors")
-    if len(sample) < nlist:
-        # ADVICE r11 (pq_refit sibling): clamping would silently
-        # commit fewer cells than the inherited nlist
-        raise ValueError(
-            f"ivf_refit: corpus sample ({len(sample)} rows) is smaller "
-            f"than the inherited nlist={nlist}; refusing to silently "
-            "shrink the committed geometry"
-        )
-    x = np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    centers = numpy_kmeans(x, k=nlist, seed=seed, n_iter=10)
-    centers_l = [list(map(float, c)) for c in centers]
-    cent_rows = _local_df(spark,
-        [(None, j, c) for j, c in enumerate(centers_l)],
-        "n bigint, cell int, v array<double>",
-    )
-    cell1 = nearest_cells_batch(centers_l, nprobe=1)
-    assign = current.select(
-        "n", cell1(F.col("v"))[0].alias("cell"), F.col("v").alias("v")
-    )
-    return store.replace(cent_rows.unionByName(assign), table)
-
-
-# ---- persistent PQ index (r10) --------------------------------------
-#
-# The memory-side sibling of the IVF index above (Jégou et al. TPAMI
-# 2011; ``similarity.pq_topk`` is the in-query form whose docstring
-# says the code column "is what a real deployment materializes").
-# Same single-table atomic layout, discriminated by ``n IS NULL``::
-#
-#     n (nullable)  sub   code  codes        v
-#     NULL          s     c     NULL         codebook_s[c] (dsub dims)
-#     vec_id        NULL  NULL  array<int>   raw vector
-#
-# One commit carries codebooks + codes (a crash can never orphan
-# codes); ``pq_append`` encodes new vectors through the COMMITTED
-# codebooks; ``pq_query`` scores ADC against the committed code
-# column and exact-reranks only the shortlist. The raw vector rides
-# the assignment row so the rerank needs no second table — a real
-# deployment splits it into a gather table; the plan shape is the
-# same. Queries pinned at a version replay that version's codebooks
-# AND codes exactly.
-
-
-def _committed_codebooks(
-    spark: SparkSession, store, table: str, version: int | None
-):
-    """The committed PQ codebooks: ``m_sub`` ``(n_codes, dsub)``
-    matrices, collected (m_sub x n_codes rows — tiny)."""
-    import numpy as np
-
-    snap = store.read(spark, table, version=version)
-    rows = snap.filter(F.col("n").isNull()).select(
-        "sub", "code", "v"
-    ).collect()
-    if not rows:
-        raise ValueError(f"pq index {table!r} has no committed codebooks")
-    by_sub: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
-        by_sub.setdefault(int(r["sub"]), {})[int(r["code"])] = list(
-            map(float, r["v"])
-        )
-    books = []
-    for s in sorted(by_sub):
-        codes = by_sub[s]
-        books.append(
-            np.asarray([codes[c] for c in sorted(codes)], dtype=np.float64)
-        )
-    return books
-
-
-def _has_codebooks(spark: SparkSession, store, table: str) -> bool:
-    if not store.exists(table):
-        return False
-    try:
-        _committed_codebooks(spark, store, table, None)
-        return True
-    except ValueError:
-        return False
-
-
-_PQ_SCHEMA = "n bigint, sub int, code int, codes array<int>, v array<double>"
-
-
-def pq_index(
-    corpus: DataFrame,
-    store,
-    table: str = "pq_index",
-    m_sub: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> int:
-    """Build and COMMIT the PQ index: per-subspace codebook fit (the
-    deterministic hash-ordered sample, ``quantizer_sample_n``-sized,
-    trained on NORMALIZED vectors) + full-corpus encoding, one atomic
-    snapshot commit. Returns the version. Refuses a rebuild over
-    committed codebooks (truncate first) — replacing codebooks under
-    existing codes would silently mis-score every ADC lookup."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        normalize_rows,
-        pq_encode_batch,
-    )
-
-    _require_integral_key(corpus, key, "pq_index")
-    spark = corpus.sparkSession
-    if _has_codebooks(spark, store, table):
-        raise ValueError(
-            f"pq index {table!r} already exists — truncate it first "
-            "(appends must go through pq_append so they encode via "
-            "the committed codebooks)"
-        )
-    sample = (
-        corpus.select(F.col(key).alias("sk"), F.col(vec).alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(n_codes))
-        .collect()
-    )
-    if not sample:
-        raise ValueError("pq_index: empty corpus")
-    x = normalize_rows(
-        np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    )
-    dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    books = [
-        numpy_kmeans(
-            x[:, s * dsub : (s + 1) * dsub],
-            k=n_codes,
-            seed=seed + s,
-            n_iter=10,
-        )
-        for s in range(m_sub)
-    ]
-    book_rows = _local_df(spark,
-        [
-            (None, s, c, None, [float(v) for v in books[s][c]])
-            for s in range(m_sub)
-            for c in range(len(books[s]))
-        ],
-        _PQ_SCHEMA,
-    )
-    encode = pq_encode_batch(books)
-    assign = corpus.select(
-        _key_as_n(key, "pq_index"),
-        F.lit(None).cast("int").alias("sub"),
-        F.lit(None).cast("int").alias("code"),
-        encode(F.col(vec).cast("array<double>")).alias("codes"),
-        F.col(vec).cast("array<double>").alias("v"),
-    )
-    return store.append(book_rows.unionByName(assign), table)
-
-
-def pq_append(
-    new_vecs: DataFrame,
-    store,
-    table: str = "pq_index",
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> int:
-    """Encode ``new_vecs`` through the COMMITTED codebooks and append
-    their code rows (one atomic commit, no re-fit). Key-idempotent
-    like ``ivf_append`` (shared ``_fresh_rows`` probe: broadcast-semi
-    for micro-batches, shuffled fallback for backfill-scale batches),
-    so at-least-once retries add zero rows."""
-    from clickhouse_k_means_spark.functions.vector import pq_encode_batch
-
-    spark = new_vecs.sparkSession
-    _require_integral_key(new_vecs, key, "pq_append")
-    books = _committed_codebooks(spark, store, table, None)
-    encode = pq_encode_batch(books)
-    assign = new_vecs.select(
-        _key_as_n(key, "pq_append"),
-        F.lit(None).cast("int").alias("sub"),
-        F.lit(None).cast("int").alias("code"),
-        encode(F.col(vec).cast("array<double>")).alias("codes"),
-        F.col(vec).cast("array<double>").alias("v"),
-    ).dropDuplicates(["n"])
-    return store.append(_fresh_rows(new_vecs, assign, store, table), table)
-
-
-def pq_query(
-    queries: DataFrame,
-    store,
-    table: str = "pq_index",
-    k: int = 10,
-    rerank: int | None = None,
-    query_key: str = "q",
-    vec: str = "embedding",
-    version: int | None = None,
-    where=None,
-    meta: DataFrame | None = None,
-    meta_key: str = "n",
-) -> DataFrame:
-    """Probe the committed PQ index: ADC over the committed code
-    column (per-query lookup tables baked into the UDF closure — the
-    scan touches only ``codes``), exact-cosine re-rank of the
-    ``rerank`` shortlist (default 4k). ``(q, n, score, rank)`` —
-    ``pq_topk``'s contract served from persisted state; ``version``
-    pins a snapshot for exact replays. Queries are the bounded
-    broadcast side (collected driver-side for the lookup tables, the
-    ``pq_topk`` contract).
-
-    ``where=`` (with optional ``meta=``/``meta_key=``) runs a FILTERED
-    search: the predicate gates the code scan itself
-    (``_predicate_filter``), so the ADC shortlist is drawn from
-    predicate-surviving rows ONLY — k results survive by construction
-    whenever that many survivors exist, with no widening needed (a PQ
-    scan has no probe set to widen; the filter just shrinks the one
-    pass)."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        normalize_rows,
-        pq_adc_batch,
-    )
-
-    spark = queries.sparkSession
-    books = _committed_codebooks(spark, store, table, version)
-    dim = books[0].shape[1] * len(books)
-    rerank = rerank or 4 * k
-    qrows = queries.select(
-        F.col(query_key).alias("q"), F.col(vec).alias("qv")
-    ).collect()
-    if not qrows:
-        return _local_df(spark,
-            [], "q bigint, n bigint, score double, rank int"
-        )
-    q_mat = normalize_rows(
-        np.asarray([r["qv"] for r in qrows], dtype=np.float64)
-    )
-    adc = pq_adc_batch(books, q_mat)
-    coded = (
-        store.read(spark, table, version=version)
-        .filter(F.col("n").isNotNull())
-    )
-    if where is not None:
-        coded = _predicate_filter(where, meta, meta_key, "pq_query")(coded)
-    coded = coded.select("n", "codes", F.col("v").alias("cv"))
-    scored = coded.select(
-        "n", "cv", F.posexplode(adc("codes")).alias("qi", "ad2")
-    )
-    short = top_k_by_group(
-        scored, rerank, "qi", [F.col("ad2").asc(), F.col("n").asc()]
-    )
-    qdf = _local_df(spark,
-        [
-            (i, int(r["q"]), [float(v) for v in r["qv"]])
-            for i, r in enumerate(qrows)
-        ],
-        "qi int, q bigint, qv array<double>",
-    )
-    rer = short.join(F.broadcast(qdf), "qi").select(
-        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
-    )
-    order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(rer, k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
-
-
-# ---- PQ maintenance (r11) --------------------------------------------
-#
-# The PQ sibling of the IVF maintenance family above (VERDICT r10
-# item 4): ``pq_append`` encodes every batch through the version-1
-# codebooks forever, so after distribution drift the ADC quantization
-# error grows SILENTLY — queries keep returning, just ranked off
-# increasingly wrong distances. ``pq_stats`` is the drift diagnostic
-# (per-subspace mean squared quantization error of the STORED codes,
-# integerized so it is bit-deterministic and comparable across
-# versions), ``pq_refit_due`` the advisor, ``pq_refit`` the repair
-# (fresh codebooks + full re-encode + atomic replace, time travel
-# kept — the ``ivf_refit`` shape).
-
-
-# quantization-error sample: bounded driver read (the quantizer-fit
-# contract — same hash-ordered deterministic protocol), sized so the
-# per-subspace means are stable but the collect stays milliseconds
-_PQ_STATS_SAMPLE_N = 4096
-
-
-def _pq_sample_err(
-    spark: SparkSession,
-    store,
-    table: str,
-    version: int | None,
-    sample_n: int,
-    seed: int,
-):
-    """(per-subspace mean sq quantization error ndarray, sample matrix,
-    codebooks) over a deterministic hash-ordered sample of the
-    committed code rows at ``version``. The error is measured on the
-    STORED codes — the quantity ADC actually scores with — so drifted
-    appends (encoded through stale codebooks) surface directly."""
-    import numpy as np
-
-    books = _committed_codebooks(spark, store, table, version)
-    dsub = books[0].shape[1]
-    rows = (
-        store.read(spark, table, version=version)
-        .filter(F.col("n").isNotNull())
-        .select("n", "codes", "v")
-        .orderBy(F.xxhash64(F.lit(seed), F.col("n")))
-        .limit(sample_n)
-        .collect()
+def _qerr_sample(spark: SparkSession, store, table: str, version,
+                 sample_n: int, seed: int, family: str):
+    """``(per-subspace mean squared error, normalized sample, geometry)``
+    of the STORED codes on the hash-ordered sample of ``sample_n``
+    vector rows at ``version`` — the quantity ADC scores with, so
+    drifted appends encoded through stale codebooks show directly. The
+    residual is ``x - centroid[cell]`` with centroids, ``x`` without."""
+    g = _geometry(spark, store, table, version, family, f"{family}_qerr")
+    cols = ["n", "cell", "codes", "v"] if g.centroids is not None else ["n", "codes", "v"]
+    rows = _sample(
+        g.snap.filter(F.col("n").isNotNull()).select(*cols), "n", seed, sample_n
     )
     if not rows:
-        raise ValueError(f"pq index {table!r} holds no vectors")
-    from clickhouse_k_means_spark.functions.vector import normalize_rows
-
-    x = normalize_rows(
-        np.asarray([r["v"] for r in rows], dtype=np.float64)
-    )
+        raise ValueError(f"{family} index {table!r} holds no vectors")
+    x = normalize_rows(np.asarray([r["v"] for r in rows], dtype=np.float64))
     codes = np.asarray([r["codes"] for r in rows], dtype=np.int64)
-    errs = np.empty(len(books), dtype=np.float64)
-    for s, book in enumerate(books):
-        diff = x[:, s * dsub : (s + 1) * dsub] - book[codes[:, s]]
+    resid = x
+    if g.centroids is not None:
+        resid = x - g.centroids[np.asarray([r["cell"] for r in rows], dtype=np.int64)]
+    dsub = g.books[0].shape[1]
+    errs = np.empty(len(g.books), dtype=np.float64)
+    for s, book in enumerate(g.books):
+        diff = resid[:, s * dsub : (s + 1) * dsub] - book[codes[:, s]]
         errs[s] = (diff * diff).sum(axis=1).mean()
-    return errs, x, books
+    return errs, x, g
 
 
-def pq_stats(
-    spark: SparkSession,
-    store,
-    table: str = "pq_index",
-    version: int | None = None,
-    sample_n: int = _PQ_STATS_SAMPLE_N,
-    seed: int = 42,
-) -> DataFrame:
-    """Codebook-drift diagnostic (VERDICT r10 item 4a): one row per
-    subspace — ``(sub, n_sample, qerr_e9)`` where ``qerr_e9`` is the
-    mean squared quantization error of the STORED codes against the
-    committed codebooks, over a deterministic hash-ordered sample of
-    ``sample_n`` code rows, rounded half-up to 1e-9 units (the repo's
-    fixed-point rule, so the number is bit-deterministic and
-    comparable across versions and hosts). ``version`` pins history:
-    ``pq_stats(version=N)`` replays exactly what version N's queries
-    scored with.
-
-    Reading it: normalized vectors have unit norm, so a subspace's
-    fair share of "all information lost" is ``1/m_sub``; a healthy
-    16-code subspace sits far below that. A post-drift reading several
-    times the post-build reading means ADC is ranking on distances the
-    codebooks can no longer represent — ``pq_refit`` is due.
-
-    Scale shape: one bounded driver sample (the quantizer-fit
-    contract) + numpy — no corpus pass, no shuffle."""
-    import math
-
-    errs, x, _ = _pq_sample_err(spark, store, table, version, sample_n, seed)
-    return _local_df(spark,
-        [
-            (s, int(len(x)), int(math.floor(float(e) * 1e9 + 0.5)))
-            for s, e in enumerate(errs)
-        ],
+def _qerr(spark: SparkSession, store, table: str, version, sample_n: int,
+          seed: int, family: str, per_sub: bool = False):
+    """The overall mean squared quantization error (the sum of the
+    per-subspace means), or with ``per_sub`` the per-subspace table
+    ``(sub, n_sample, qerr_e9)`` rounded half-up to 1e-9 units (the
+    repo's fixed-point rule: bit-deterministic, comparable across
+    versions and hosts)."""
+    errs, x, _ = _qerr_sample(spark, store, table, version, sample_n, seed, family)
+    if not per_sub:
+        return float(errs.sum())
+    return local_df(
+        spark,
+        [(s, len(x), int(math.floor(float(e) * 1e9 + 0.5))) for s, e in enumerate(errs)],
         "sub int, n_sample bigint, qerr_e9 bigint",
     )
 
 
-def pq_qerr(
-    spark: SparkSession,
-    store,
-    table: str = "pq_index",
-    version: int | None = None,
-    sample_n: int = _PQ_STATS_SAMPLE_N,
-    seed: int = 42,
-) -> float:
-    """Overall mean squared quantization error (sum of the
-    per-subspace means — the expected ADC error term for a random
-    stored vector): the one-number drift summary over ``pq_stats``."""
-    errs, _, _ = _pq_sample_err(spark, store, table, version, sample_n, seed)
-    return float(errs.sum())
-
-
-def pq_refit_due(
-    spark: SparkSession,
-    store,
-    table: str = "pq_index",
-    threshold: float = 1.5,
-    sample_n: int = _PQ_STATS_SAMPLE_N,
-    seed: int = 42,
+def _refit_due(
+    spark: SparkSession, store, table: str, family: str,
+    skew_threshold: float | None = None, qerr_threshold: float | None = None,
+    sample_n: int = _PQ_STATS_SAMPLE_N, seed: int = 42, version=None,
 ) -> bool:
-    """The maintenance advisor: True when refitting would cut the
-    quantization error by more than ``threshold``×. Measures the
-    DECISION-RELEVANT quantity directly: fit candidate codebooks on
-    the EXACT sample protocol ``pq_refit`` uses — the first
-    ``quantizer_sample_n(n_codes)`` rows of the shared hash-ordered
-    sample (same ``xxhash64(seed, n)`` order, so the prefix IS the
-    refit's fit set; ADVICE r11: the advisor previously fit on the
-    full ``sample_n`` diagnostic sample and could disagree with the
-    actual refit) — then score the whole diagnostic sample through
-    them and compare ``qerr_current / qerr_candidate``. No version
-    archaeology needed (unlike a commit-time-baseline design, this
-    stays correct after truncate/rebuild cycles and on stores that
-    predate the diagnostic), and the advisor costs one bounded sample
-    fit — no corpus pass. Degenerate edge: on a corpus smaller than
-    ``n_codes`` the advisor CLAMPS its candidate fit where the refit
-    itself would raise (the no-silent-resize rule applies to commits,
-    not diagnostics). The scheduled-job form:
-    ``if pq_refit_due(...): pq_refit(...)``."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        quantizer_sample_n,
-    )
-
-    if threshold <= 1.0:
-        raise ValueError(f"threshold must exceed 1.0: {threshold}")
-    errs, x, books = _pq_sample_err(
-        spark, store, table, None, sample_n, seed
-    )
-    n_codes = books[0].shape[0]
-    fit_n = quantizer_sample_n(n_codes)
+    """True when the occupancy skew (at ``version``) exceeds
+    ``skew_threshold``, or when a candidate refit would cut the
+    quantization error by more than ``qerr_threshold``×. The candidate
+    is the exact ``_fit`` a refit runs, on the refit's own fit set —
+    the first ``quantizer_sample_n`` rows of the shared hash order,
+    redrawn when that prefix outgrows the diagnostic sample — scored
+    over the whole diagnostic sample. On a corpus smaller than the
+    geometry the candidate clamps where the refit would raise (the
+    no-silent-resize rule applies to commits, not diagnostics)."""
+    for t in (skew_threshold, qerr_threshold):
+        if t is not None and t <= 1.0:
+            raise ValueError(f"threshold must exceed 1.0: {t}")
+    if skew_threshold is not None:
+        if _skew(spark, store, table, version, family) > skew_threshold:
+            return True
+    if qerr_threshold is None:
+        return False
+    errs, x, g = _qerr_sample(spark, store, table, None, sample_n, seed, family)
+    nlist = None if g.centroids is None else len(g.centroids)
+    n_codes = g.books[0].shape[0]
+    fit_n = quantizer_sample_n(max(k for k in (nlist, n_codes) if k is not None))
     if fit_n > sample_n and len(x) == sample_n:
-        # geometry-bound redraw (ADVICE r12): past n_codes > sample_n/8
-        # the refit's fit prefix outgrows the diagnostic sample, and
-        # truncating to it would reintroduce the advisor/refit
-        # disagreement the prefix contract exists to fix. The hash
-        # order is shared, so the original draw is the new one's
-        # prefix; skipped when the corpus itself is smaller than
-        # sample_n (a redraw could not return more rows).
-        errs, x, books = _pq_sample_err(
-            spark, store, table, None, fit_n, seed
-        )
-    dsub = books[0].shape[1]
-    current = float(errs.sum())
+        errs, x, g = _qerr_sample(spark, store, table, None, fit_n, seed, family)
     x_fit = x[:fit_n]
+    cents, books = _fit(x_fit, nlist, len(g.books), min(n_codes, len(x_fit)), seed)
+    resid = x if cents is None else x - cents[_sq_dists(x, cents).argmin(axis=1)]
+    dsub = books[0].shape[1]
     candidate = 0.0
-    for s in range(len(books)):
-        xs = x[:, s * dsub : (s + 1) * dsub]
-        book = numpy_kmeans(
-            x_fit[:, s * dsub : (s + 1) * dsub],
-            k=min(n_codes, len(x_fit)),
-            seed=seed + s,
-            n_iter=10,
-        )
-        d2 = ((xs[:, None, :] - book[None, :, :]) ** 2).sum(axis=2)
+    for s, book in enumerate(books):
+        d2 = _sq_dists(resid[:, s * dsub : (s + 1) * dsub], book)
         candidate += float(d2.min(axis=1).mean())
-    if candidate == 0.0:
-        return current > 0.0
-    return current / candidate > threshold
-
-
-def pq_refit(
-    spark: SparkSession,
-    store,
-    table: str = "pq_index",
-    m_sub: int | None = None,
-    n_codes: int | None = None,
-    seed: int = 42,
-) -> int:
-    """Re-fit the codebooks on the CURRENT corpus and re-encode
-    (VERDICT r10 item 4b): the repair for a drifted PQ index. Fits
-    fresh per-subspace codebooks with the same deterministic sample
-    protocol as ``pq_index`` (``quantizer_sample_n``-sized,
-    normalized) — but over the vectors the index holds NOW —
-    re-encodes EVERY committed vector through them (one Arrow
-    ``pq_encode_batch`` pass over the raw-vector column), and commits
-    codebooks + codes as ONE replace-snapshot version. History stays
-    time-travelable: a query pinned at an earlier version replays the
-    old codebooks AND old codes exactly. Returns the version.
-
-    ``m_sub``/``n_codes`` default to INHERITING the committed
-    codebooks' geometry (the ``ivf_refit`` ADVICE-r10 lesson: the
-    advertised maintenance loop must not silently resize — a 64-code
-    index rebuilt at a bare default would degrade ADC resolution with
-    no error). Pass explicit values only to intentionally resize;
-    ``m_sub`` must still divide the vector arity.
-
-    Scale shape: identical to ``pq_index`` — one bounded driver-side
-    sample fit, one Arrow pass over the corpus for re-encoding, one
-    atomic commit; the corpus is never shuffled."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        normalize_rows,
-        pq_encode_batch,
-    )
-
-    books = _committed_codebooks(spark, store, table, None)
-    if m_sub is None:
-        m_sub = len(books)
-    if n_codes is None:
-        n_codes = books[0].shape[0]
-    current = (
-        store.read(spark, table)
-        .filter(F.col("n").isNotNull())
-        .select("n", "v")
-    )
-    sample = (
-        current.select(F.col("n").alias("sk"), F.col("v").alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(n_codes))
-        .collect()
-    )
-    if not sample:
-        raise ValueError(f"pq_refit: index {table!r} holds no vectors")
-    x = normalize_rows(
-        np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    )
-    dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    if len(x) < n_codes:
-        # ADVICE r11: clamping k to the sample would silently commit a
-        # SMALLER geometry than the inherited n_codes — the documented
-        # no-silent-resize rule says fail loudly instead
-        raise ValueError(
-            f"pq_refit: corpus sample ({len(x)} rows) is smaller than "
-            f"the inherited n_codes={n_codes}; refusing to silently "
-            "shrink the committed geometry"
-        )
-    dsub = dim // m_sub
-    fresh = [
-        numpy_kmeans(
-            x[:, s * dsub : (s + 1) * dsub],
-            k=n_codes,
-            seed=seed + s,
-            n_iter=10,
-        )
-        for s in range(m_sub)
-    ]
-    book_rows = _local_df(spark,
-        [
-            (None, s, c, None, [float(v) for v in fresh[s][c]])
-            for s in range(m_sub)
-            for c in range(len(fresh[s]))
-        ],
-        _PQ_SCHEMA,
-    )
-    encode = pq_encode_batch(fresh)
-    assign = current.select(
-        "n",
-        F.lit(None).cast("int").alias("sub"),
-        F.lit(None).cast("int").alias("code"),
-        encode(F.col("v")).alias("codes"),
-        F.col("v").alias("v"),
-    )
-    return store.replace(book_rows.unionByName(assign), table)
-
-
-# ---- persistent IVF-PQ index (r11) -----------------------------------
-#
-# The composed index (Jégou et al. TPAMI 2011 §IV — FAISS's IVFPQ, the
-# architecture every production billion-vector deployment runs): the
-# IVF coarse quantizer buys SELECTIVITY (a query scans nprobe/nlist of
-# the corpus) and the PQ codes buy MEMORY (the scan reads m bytes per
-# row, not dim x 8) — the two bargains the standalone indexes above
-# make separately, taken together. PQ here quantizes the RESIDUAL
-# ``x - centroid[cell]`` (not x): residual energy is a small fraction
-# of vector energy, so the same code budget yields far finer
-# resolution — the reason IVFPQ beats flat PQ at equal bytes.
-#
-# Same single-table atomic layout, three row kinds discriminated by
-# (n IS NULL, sub IS NULL)::
-#
-#     n (nullable)  cell   sub   code  codes        v
-#     NULL          j      NULL  NULL  NULL         coarse centroid_j
-#     NULL          NULL   s     c     NULL         residual codebook
-#     vec_id        cell   NULL  NULL  array<int>   raw vector
-#
-# One commit carries quantizer + codebooks + codes (a crash can never
-# orphan any layer); appends encode through the COMMITTED geometry;
-# queries probe nprobe cells and ADC-scan only those cells' code
-# rows (cell isin -> row-group pruning; the LUT folds the centroid
-# into the residual entry so scoring stays m lookups per row). Time
-# travel pins all three layers at once.
-
-
-_IVFPQ_SCHEMA = (
-    "n bigint, cell int, sub int, code int, "
-    "codes array<int>, v array<double>"
-)
-
-
-def _committed_ivfpq(
-    spark: SparkSession, store, table: str, version: int | None
-):
-    """(coarse centroid matrix, residual codebooks) committed at
-    ``version`` — nlist + m_sub*n_codes rows, collected (tiny)."""
-    import numpy as np
-
-    snap = store.read(spark, table, version=version)
-    rows = snap.filter(F.col("n").isNull()).select(
-        "cell", "sub", "code", "v"
-    ).collect()
-    cents = {
-        int(r["cell"]): list(map(float, r["v"]))
-        for r in rows
-        if r["sub"] is None
-    }
-    if not cents:
-        raise ValueError(f"ivfpq index {table!r} has no committed quantizer")
-    by_sub: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
-        if r["sub"] is not None:
-            by_sub.setdefault(int(r["sub"]), {})[int(r["code"])] = list(
-                map(float, r["v"])
-            )
-    if not by_sub:
-        raise ValueError(f"ivfpq index {table!r} has no committed codebooks")
-    centroids = np.asarray(
-        [cents[j] for j in sorted(cents)], dtype=np.float64
-    )
-    books = [
-        np.asarray(
-            [by_sub[s][c] for c in sorted(by_sub[s])], dtype=np.float64
-        )
-        for s in sorted(by_sub)
-    ]
-    return centroids, books
-
-
-def _has_ivfpq(spark: SparkSession, store, table: str) -> bool:
-    if not store.exists(table):
-        return False
-    try:
-        _committed_ivfpq(spark, store, table, None)
-        return True
-    except ValueError:
-        return False
-
-
-def ivfpq_index(
-    corpus: DataFrame,
-    store,
-    table: str = "ivfpq_index",
-    nlist: int = 8,
-    m_sub: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> int:
-    """Build and COMMIT the IVF-PQ index: coarse quantizer fit +
-    global residual-codebook fit (both on the same deterministic
-    hash-ordered NORMALIZED sample, ``quantizer_sample_n``-sized for
-    the larger of nlist/n_codes) + full-corpus encode in ONE Arrow
-    pass (cell assignment and residual codes together), one atomic
-    commit. Returns the version. Refuses a rebuild over a committed
-    index (truncate first) — replacing the quantizer or codebooks
-    under existing codes would silently mis-score every ADC lookup."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        ivfpq_encode_batch,
-        normalize_rows,
-    )
-
-    _require_integral_key(corpus, key, "ivfpq_index")
-    spark = corpus.sparkSession
-    if _has_ivfpq(spark, store, table):
-        raise ValueError(
-            f"ivfpq index {table!r} already exists — truncate it first "
-            "(appends must go through ivfpq_append so they encode via "
-            "the committed quantizer + codebooks)"
-        )
-    sample = (
-        corpus.select(F.col(key).alias("sk"), F.col(vec).alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(max(nlist, n_codes)))
-        .collect()
-    )
-    if not sample:
-        raise ValueError("ivfpq_index: empty corpus")
-    x = normalize_rows(
-        np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    )
-    dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    centroids = numpy_kmeans(
-        x, k=min(nlist, len(x)), seed=seed, n_iter=10
-    )
-    # residuals of the SAME sample through the fresh quantizer train
-    # the global residual codebooks (FAISS by_residual default)
-    d2 = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-    resid = x - centroids[d2.argmin(axis=1)]
-    books = [
-        numpy_kmeans(
-            resid[:, s * dsub : (s + 1) * dsub],
-            k=min(n_codes, len(x)),
-            seed=seed + s,
-            n_iter=10,
-        )
-        for s in range(m_sub)
-    ]
-    cent_rows = _local_df(spark,
-        [
-            (None, j, None, None, None, [float(v) for v in centroids[j]])
-            for j in range(len(centroids))
-        ],
-        _IVFPQ_SCHEMA,
-    )
-    book_rows = _local_df(spark,
-        [
-            (None, None, s, c, None, [float(v) for v in books[s][c]])
-            for s in range(m_sub)
-            for c in range(len(books[s]))
-        ],
-        _IVFPQ_SCHEMA,
-    )
-    encode = ivfpq_encode_batch(centroids, books)
-    enc = corpus.select(
-        _key_as_n(key, "ivfpq_index"),
-        encode(F.col(vec).cast("array<double>")).alias("e"),
-        F.col(vec).cast("array<double>").alias("v"),
-    )
-    assign = enc.select(
-        "n",
-        F.col("e.cell").alias("cell"),
-        F.lit(None).cast("int").alias("sub"),
-        F.lit(None).cast("int").alias("code"),
-        F.col("e.codes").alias("codes"),
-        "v",
-    )
-    return store.append(
-        cent_rows.unionByName(book_rows).unionByName(assign), table
-    )
-
-
-def ivfpq_append(
-    new_vecs: DataFrame,
-    store,
-    table: str = "ivfpq_index",
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> int:
-    """Encode ``new_vecs`` through the COMMITTED quantizer + codebooks
-    and append their code rows (one atomic commit, no re-fit).
-    Key-idempotent like the other appends (shared ``_fresh_rows``
-    probe), so at-least-once retries add zero rows."""
-    from clickhouse_k_means_spark.functions.vector import ivfpq_encode_batch
-
-    spark = new_vecs.sparkSession
-    _require_integral_key(new_vecs, key, "ivfpq_append")
-    centroids, books = _committed_ivfpq(spark, store, table, None)
-    encode = ivfpq_encode_batch(centroids, books)
-    assign = new_vecs.select(
-        _key_as_n(key, "ivfpq_append"),
-        encode(F.col(vec).cast("array<double>")).alias("e"),
-        F.col(vec).cast("array<double>").alias("v"),
-    ).select(
-        "n",
-        F.col("e.cell").alias("cell"),
-        F.lit(None).cast("int").alias("sub"),
-        F.lit(None).cast("int").alias("code"),
-        F.col("e.codes").alias("codes"),
-        "v",
-    ).dropDuplicates(["n"])
-    return store.append(_fresh_rows(new_vecs, assign, store, table), table)
-
-
-def ivfpq_query(
-    queries: DataFrame,
-    store,
-    table: str = "ivfpq_index",
-    k: int = 10,
-    nprobe: int = 2,
-    rerank: int | None = None,
-    query_key: str = "q",
-    vec: str = "embedding",
-    version: int | None = None,
-    where=None,
-    meta: DataFrame | None = None,
-    meta_key: str = "n",
-) -> DataFrame:
-    """Probe the committed IVF-PQ index: per-query nprobe nearest
-    cells (driver-side over the nlist centroids), ADC over ONLY those
-    cells' code rows (``cell isin`` pushes to row-group pruning; the
-    probe-masked LUT poisons unprobed (query, cell) pairs to +inf so
-    per-query selectivity needs no join), exact-cosine re-rank of the
-    ``rerank`` shortlist (default 4k). ``(q, n, score, rank)`` —
-    the family's output contract served from persisted state;
-    ``version`` pins all three layers for exact replays. Queries are
-    the bounded broadcast side (collected for the LUT).
-
-    ``where=`` (with optional ``meta=``/``meta_key=``) runs a FILTERED
-    search: the predicate gates the code scan (``_predicate_filter``)
-    and each query's probe set widens — in its own cell-distance order
-    — until it covers at least ``max(k, rerank)`` predicate-surviving
-    rows (``_adaptive_probes``), so the ADC shortlist and hence the
-    exact re-rank are drawn from survivors only and k results survive
-    the filter whenever that many exist in the index."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        ivfpq_adc_batch,
-        normalize_rows,
-    )
-
-    spark = queries.sparkSession
-    centroids, books = _committed_ivfpq(spark, store, table, version)
-    nlist, dim = centroids.shape
-    nprobe = min(nprobe, nlist)
-    rerank = rerank or 4 * k
-    qrows = queries.select(
-        F.col(query_key).alias("q"), F.col(vec).alias("qv")
-    ).collect()
-    if not qrows:
-        return _local_df(spark,
-            [], "q bigint, n bigint, score double, rank int"
-        )
-    q_mat = normalize_rows(
-        np.asarray([r["qv"] for r in qrows], dtype=np.float64)
-    )
-    scan = store.read(spark, table, version=version).filter(
-        F.col("n").isNotNull()
-    )
-    if where is not None:
-        allowed = _predicate_filter(where, meta, meta_key, "ivfpq_query")(
-            scan
-        )
-        counts = _filtered_cell_counts(allowed)
-        if not counts:
-            return _local_df(spark,
-                [], "q bigint, n bigint, score double, rank int"
-            )
-        # the IVF-PQ cell metric is squared L2 of the NORMALIZED query
-        # against the coarse centroids — _adaptive_probes scores the
-        # rank-equivalent -2q·c + |c|² form (|q|² is rank-invariant)
-        # with the same stable argsort / lowest-cell-id tie rule
-        probes, probed = _adaptive_probes(
-            q_mat, centroids, counts, nprobe=nprobe, need=max(k, rerank)
-        )
-        mask = np.zeros((len(q_mat), nlist), dtype=bool)
-        for qi, cs in enumerate(probes):
-            mask[qi, cs] = True
-        scan = allowed
-    else:
-        qd2 = ((q_mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        # stable sort: an exact distance tie breaks to the LOWEST cell
-        # id (the nearest_cells_batch convention), not quicksort's
-        # platform-dependent order — probe sets must replay
-        # bit-identically
-        probe = np.argsort(qd2, axis=1, kind="stable")[:, :nprobe]
-        mask = np.zeros((len(q_mat), nlist), dtype=bool)
-        np.put_along_axis(mask, probe, True, axis=1)
-        probed = sorted({int(c) for c in probe.ravel()})
-    adc = ivfpq_adc_batch(centroids, books, q_mat, probe_mask=mask)
-    coded = (
-        scan
-        # driver-known probe list -> parquet row-group pruning; the
-        # LUT mask then narrows per query within the union
-        .filter(F.col("cell").isin(probed))
-        .select("n", "cell", "codes", F.col("v").alias("cv"))
-    )
-    scored = coded.select(
-        "n", "cv", F.posexplode(adc("cell", "codes")).alias("qi", "ad2")
-    ).filter(F.col("ad2") != float("inf"))
-    short = top_k_by_group(
-        scored, rerank, "qi", [F.col("ad2").asc(), F.col("n").asc()]
-    )
-    qdf = _local_df(spark,
-        [
-            (i, int(r["q"]), [float(v) for v in r["qv"]])
-            for i, r in enumerate(qrows)
-        ],
-        "qi int, q bigint, qv array<double>",
-    )
-    rer = short.join(F.broadcast(qdf), "qi").select(
-        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
-    )
-    order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(rer, k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
-
-
-# ---- IVF-PQ maintenance (r11) ----------------------------------------
-#
-# Both parents' failure modes apply to the composition: drifted ingest
-# skews CELL OCCUPANCY (the IVF disease — probes scan far more than
-# nprobe/nlist of the corpus) AND inflates RESIDUAL quantization error
-# (the PQ disease — ADC ranks on distances the codebooks can't
-# represent). The diagnostics mirror the parents (``ivfpq_stats`` =
-# occupancy, ``ivfpq_qerr`` = residual error), the advisor fires on
-# EITHER, and one refit repairs BOTH layers atomically.
-
-
-def _ivfpq_sample(
-    spark: SparkSession,
-    store,
-    table: str,
-    version: int | None,
-    sample_n: int,
-    seed: int,
-):
-    """Deterministic hash-ordered sample of committed code rows:
-    (normalized matrix, cell vector, code matrix) + the committed
-    geometry — the bounded driver read both diagnostics share."""
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import normalize_rows
-
-    centroids, books = _committed_ivfpq(spark, store, table, version)
-    rows = (
-        store.read(spark, table, version=version)
-        .filter(F.col("n").isNotNull())
-        .select("n", "cell", "codes", "v")
-        .orderBy(F.xxhash64(F.lit(seed), F.col("n")))
-        .limit(sample_n)
-        .collect()
-    )
-    if not rows:
-        raise ValueError(f"ivfpq index {table!r} holds no vectors")
-    x = normalize_rows(
-        np.asarray([r["v"] for r in rows], dtype=np.float64)
-    )
-    cells = np.asarray([r["cell"] for r in rows], dtype=np.int64)
-    codes = np.asarray([r["codes"] for r in rows], dtype=np.int64)
-    return x, cells, codes, centroids, books
-
-
-def ivfpq_stats(
-    spark: SparkSession,
-    store,
-    table: str = "ivfpq_index",
-    version: int | None = None,
-) -> DataFrame:
-    """Cell-occupancy diagnostic for the composed index — the
-    ``ivf_stats`` contract (``(cell, n_vecs, occupancy_ppm)``
-    including EMPTY cells, skew factor = max ppm · nlist/1e6) over the
-    IVFPQ layout's centroid/code rows."""
-    snap = store.read(spark, table, version=version)
-    cells = snap.filter(
-        F.col("n").isNull() & F.col("sub").isNull()
-    ).select("cell")
-    counts = (
-        snap.filter(F.col("n").isNotNull())
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-    )
-    return _occupancy_stats(cells, counts)
-
-
-def ivfpq_skew_factor(
-    spark: SparkSession,
-    store,
-    table: str = "ivfpq_index",
-    version: int | None = None,
-) -> float:
-    """Occupancy skew factor (``ivf_skew_factor`` contract) over the
-    composed index."""
-    rows = ivfpq_stats(spark, store, table, version).collect()
-    if not rows:
-        raise ValueError(f"ivfpq index {table!r} has no cells")
-    return max(int(r["occupancy_ppm"]) for r in rows) * len(rows) / 1e6
-
-
-def ivfpq_qerr(
-    spark: SparkSession,
-    store,
-    table: str = "ivfpq_index",
-    version: int | None = None,
-    sample_n: int = _PQ_STATS_SAMPLE_N,
-    seed: int = 42,
-) -> float:
-    """Mean squared RESIDUAL quantization error of the stored codes
-    (the ``pq_qerr`` contract, measured against
-    ``x - centroid[cell]``): the memory-layer drift summary for the
-    composed index. One bounded driver sample, no corpus pass."""
-    x, cells, codes, centroids, books = _ivfpq_sample(
-        spark, store, table, version, sample_n, seed
-    )
-    dsub = books[0].shape[1]
-    resid = x - centroids[cells]
-    total = 0.0
-    for s, book in enumerate(books):
-        diff = resid[:, s * dsub : (s + 1) * dsub] - book[codes[:, s]]
-        total += float((diff * diff).sum(axis=1).mean())
-    return total
-
-
-def ivfpq_refit_due(
-    spark: SparkSession,
-    store,
-    table: str = "ivfpq_index",
-    skew_threshold: float = 4.0,
-    qerr_threshold: float = 1.5,
-    sample_n: int = _PQ_STATS_SAMPLE_N,
-    seed: int = 42,
-) -> bool:
-    """The composed advisor: True when EITHER parent's disease is
-    present — cell-occupancy skew past ``skew_threshold`` (the
-    ``ivf_refit_due`` signal) or a candidate two-layer refit on the
-    REFIT'S OWN sample protocol (the first
-    ``quantizer_sample_n(max(nlist, n_codes))`` rows of the shared
-    hash-ordered sample — the prefix is exactly ``ivfpq_refit``'s fit
-    set; ADVICE r11) would cut the residual quantization error, scored
-    over the whole diagnostic sample, by more than ``qerr_threshold``x
-    (the ``pq_refit_due`` decision-relevant measurement). The
-    scheduled-job form:
-    ``if ivfpq_refit_due(...): ivfpq_refit(...)``."""
-    from clickhouse_k_means_spark.functions.vector import (
-        quantizer_sample_n,
-    )
-
-    if skew_threshold <= 1.0 or qerr_threshold <= 1.0:
-        raise ValueError(
-            "thresholds must exceed 1.0: "
-            f"{skew_threshold}/{qerr_threshold}"
-        )
-    if ivfpq_skew_factor(spark, store, table) > skew_threshold:
-        return True
-    x, cells, codes, centroids, books = _ivfpq_sample(
-        spark, store, table, None, sample_n, seed
-    )
-    nlist = centroids.shape[0]
-    n_codes = books[0].shape[0]
-    fit_n = quantizer_sample_n(max(nlist, n_codes))
-    if fit_n > sample_n and len(x) == sample_n:
-        # geometry-bound redraw (ADVICE r12) — same contract as
-        # pq_refit_due: the fit prefix must never truncate to the
-        # diagnostic sample, or the advisor fits on a different set
-        # than ivfpq_refit would. Shared hash order makes the original
-        # draw the redraw's prefix.
-        x, cells, codes, centroids, books = _ivfpq_sample(
-            spark, store, table, None, fit_n, seed
-        )
-    dsub = books[0].shape[1]
-    resid = x - centroids[cells]
-    current = 0.0
-    for s, book in enumerate(books):
-        diff = resid[:, s * dsub : (s + 1) * dsub] - book[codes[:, s]]
-        current += float((diff * diff).sum(axis=1).mean())
-    # candidate: the exact two-layer fit ivfpq_refit would run, scored
-    # on the full diagnostic sample
-    x_fit = x[:fit_n]
-    cand_cent = numpy_kmeans(
-        x_fit, k=min(nlist, len(x_fit)), seed=seed, n_iter=10
-    )
-    d2 = ((x[:, None, :] - cand_cent[None, :, :]) ** 2).sum(axis=2)
-    cand_resid = x - cand_cent[d2.argmin(axis=1)]
-    fit_resid = cand_resid[: len(x_fit)]
-    candidate = 0.0
-    for s in range(len(books)):
-        rs = cand_resid[:, s * dsub : (s + 1) * dsub]
-        book = numpy_kmeans(
-            fit_resid[:, s * dsub : (s + 1) * dsub],
-            k=min(n_codes, len(x_fit)),
-            seed=seed + s,
-            n_iter=10,
-        )
-        bd2 = ((rs[:, None, :] - book[None, :, :]) ** 2).sum(axis=2)
-        candidate += float(bd2.min(axis=1).mean())
+    current = float(errs.sum())
     if candidate == 0.0:
         return current > 0.0
     return current / candidate > qerr_threshold
 
 
-def ivfpq_refit(
-    spark: SparkSession,
-    store,
-    table: str = "ivfpq_index",
-    nlist: int | None = None,
-    m_sub: int | None = None,
-    n_codes: int | None = None,
-    seed: int = 42,
-) -> int:
-    """Re-fit BOTH layers on the CURRENT corpus and re-encode: fresh
-    coarse quantizer + fresh residual codebooks (the ``ivfpq_index``
-    sample protocol over the vectors the index holds NOW), every
-    committed vector re-encoded in ONE Arrow pass, quantizer +
-    codebooks + codes committed as ONE replace-snapshot version.
-    History stays time-travelable. Geometry defaults to INHERITING
-    the committed nlist/m_sub/n_codes (the family's ADVICE-r10 rule:
-    the maintenance loop must not silently resize). Returns the
-    version.
+# ---- family wrappers: each is one call into the shared verbs ---------
 
-    Scale shape: identical to ``ivfpq_index`` — one bounded driver
-    sample fit, one Arrow encode pass, one atomic commit; the corpus
-    is never shuffled."""
-    import numpy as np
 
-    from clickhouse_k_means_spark.functions.vector import (
-        ivfpq_encode_batch,
-        normalize_rows,
-    )
+def ivf_index(corpus: DataFrame, store, table: str = "ivf_index", nlist: int = 16,
+              seed: int = 42, key: str = "vec_id", vec: str = "embedding") -> int:
+    """Build and commit an ``nlist``-cell IVF index (``_index``); returns the version."""
+    return _index(corpus, store, table, "ivf", seed, key, vec, nlist=nlist)
 
-    centroids, books = _committed_ivfpq(spark, store, table, None)
-    if nlist is None:
-        nlist = centroids.shape[0]
-    if m_sub is None:
-        m_sub = len(books)
-    if n_codes is None:
-        n_codes = books[0].shape[0]
-    current = (
-        store.read(spark, table)
-        .filter(F.col("n").isNotNull())
-        .select("n", "v")
-    )
-    sample = (
-        current.select(F.col("n").alias("sk"), F.col("v").alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(max(nlist, n_codes)))
-        .collect()
-    )
-    if not sample:
-        raise ValueError(f"ivfpq_refit: index {table!r} holds no vectors")
-    x = normalize_rows(
-        np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    )
-    dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    if len(x) < max(nlist, n_codes):
-        # ADVICE r11: the no-silent-resize rule — never clamp the
-        # committed geometry down to a small sample
-        raise ValueError(
-            f"ivfpq_refit: corpus sample ({len(x)} rows) is smaller "
-            f"than the inherited nlist={nlist}/n_codes={n_codes}; "
-            "refusing to silently shrink the committed geometry"
-        )
-    dsub = dim // m_sub
-    fresh_cent = numpy_kmeans(x, k=nlist, seed=seed, n_iter=10)
-    d2 = ((x[:, None, :] - fresh_cent[None, :, :]) ** 2).sum(axis=2)
-    resid = x - fresh_cent[d2.argmin(axis=1)]
-    fresh_books = [
-        numpy_kmeans(
-            resid[:, s * dsub : (s + 1) * dsub],
-            k=n_codes,
-            seed=seed + s,
-            n_iter=10,
-        )
-        for s in range(m_sub)
-    ]
-    cent_rows = _local_df(spark,
-        [
-            (None, j, None, None, None, [float(v) for v in fresh_cent[j]])
-            for j in range(len(fresh_cent))
-        ],
-        _IVFPQ_SCHEMA,
-    )
-    book_rows = _local_df(spark,
-        [
-            (None, None, s, c, None, [float(v) for v in fresh_books[s][c]])
-            for s in range(m_sub)
-            for c in range(len(fresh_books[s]))
-        ],
-        _IVFPQ_SCHEMA,
-    )
-    encode = ivfpq_encode_batch(fresh_cent, fresh_books)
-    assign = current.select(
-        "n", encode(F.col("v")).alias("e"), "v"
-    ).select(
-        "n",
-        F.col("e.cell").alias("cell"),
-        F.lit(None).cast("int").alias("sub"),
-        F.lit(None).cast("int").alias("code"),
-        F.col("e.codes").alias("codes"),
-        "v",
-    )
-    return store.replace(
-        cent_rows.unionByName(book_rows).unionByName(assign), table
-    )
+
+def ivf_append(new_vecs: DataFrame, store, table: str = "ivf_index",
+               key: str = "vec_id", vec: str = "embedding") -> int:
+    """Bucket a batch through the committed quantizer (``_append``)."""
+    return _append(new_vecs, store, table, "ivf", key, vec)
+
+
+def ivf_query(queries: DataFrame, store, table: str = "ivf_index", k: int = 10,
+              nprobe: int = 2, query_key: str = "q", vec: str = "embedding",
+              version: int | None = None, where=None,
+              meta: DataFrame | None = None, meta_key: str = "n") -> DataFrame:
+    """Top-k over each query's ``nprobe`` nearest cells (``_query``)."""
+    return _query(queries, store, table, "ivf", k, nprobe, None, query_key,
+                  vec, version, where, meta, meta_key)
+
+
+def ivf_stats(spark: SparkSession, store, table: str = "ivf_index",
+              version: int | None = None) -> DataFrame:
+    """Cell occupancy ``(cell, n_vecs, occupancy_ppm)`` (``_stats``)."""
+    return _stats(spark, store, table, version, "ivf")
+
+
+def ivf_skew_factor(spark: SparkSession, store, table: str = "ivf_index",
+                    version: int | None = None) -> float:
+    """``max(occupancy_ppm) * nlist / 1e6`` (``_skew``)."""
+    return _skew(spark, store, table, version, "ivf")
+
+
+def ivf_refit_due(spark: SparkSession, store, table: str = "ivf_index",
+                  threshold: float = 4.0, version: int | None = None) -> bool:
+    """True when the skew factor exceeds ``threshold`` (``_refit_due``)."""
+    return _refit_due(spark, store, table, "ivf", skew_threshold=threshold,
+                      version=version)
+
+
+def ivf_refit(spark: SparkSession, store, table: str = "ivf_index",
+              nlist: int | None = None, seed: int = 42) -> int:
+    """Re-fit and re-bucket; ``nlist=None`` inherits the committed one (``_refit``)."""
+    return _refit(spark, store, table, "ivf", seed, nlist=nlist)
+
+
+def pq_index(corpus: DataFrame, store, table: str = "pq_index", m_sub: int = 8,
+             n_codes: int = 16, seed: int = 42, key: str = "vec_id",
+             vec: str = "embedding") -> int:
+    """Build and commit an ``m_sub`` x ``n_codes`` PQ index (``_index``)."""
+    return _index(corpus, store, table, "pq", seed, key, vec, m_sub=m_sub,
+                  n_codes=n_codes)
+
+
+def pq_append(new_vecs: DataFrame, store, table: str = "pq_index",
+              key: str = "vec_id", vec: str = "embedding") -> int:
+    """Encode a batch through the committed codebooks (``_append``)."""
+    return _append(new_vecs, store, table, "pq", key, vec)
+
+
+def pq_query(queries: DataFrame, store, table: str = "pq_index", k: int = 10,
+             rerank: int | None = None, query_key: str = "q",
+             vec: str = "embedding", version: int | None = None, where=None,
+             meta: DataFrame | None = None, meta_key: str = "n") -> DataFrame:
+    """ADC over all codes, exact rerank of ``rerank`` (default 4k) (``_query``)."""
+    return _query(queries, store, table, "pq", k, None, rerank, query_key,
+                  vec, version, where, meta, meta_key)
+
+
+def pq_stats(spark: SparkSession, store, table: str = "pq_index",
+             version: int | None = None, sample_n: int = _PQ_STATS_SAMPLE_N,
+             seed: int = 42) -> DataFrame:
+    """Per-subspace error ``(sub, n_sample, qerr_e9)`` of the stored codes (``_qerr``)."""
+    return _qerr(spark, store, table, version, sample_n, seed, "pq", per_sub=True)
+
+
+def pq_qerr(spark: SparkSession, store, table: str = "pq_index",
+            version: int | None = None, sample_n: int = _PQ_STATS_SAMPLE_N,
+            seed: int = 42) -> float:
+    """Overall mean squared quantization error (``_qerr``)."""
+    return _qerr(spark, store, table, version, sample_n, seed, "pq")
+
+
+def pq_refit_due(spark: SparkSession, store, table: str = "pq_index",
+                 threshold: float = 1.5, sample_n: int = _PQ_STATS_SAMPLE_N,
+                 seed: int = 42) -> bool:
+    """True when a refit would cut the error ``threshold``× (``_refit_due``)."""
+    return _refit_due(spark, store, table, "pq", qerr_threshold=threshold,
+                      sample_n=sample_n, seed=seed)
+
+
+def pq_refit(spark: SparkSession, store, table: str = "pq_index",
+             m_sub: int | None = None, n_codes: int | None = None,
+             seed: int = 42) -> int:
+    """Re-fit and re-encode; ``None`` sizes inherit the committed ones (``_refit``)."""
+    return _refit(spark, store, table, "pq", seed, m_sub=m_sub, n_codes=n_codes)
+
+
+def ivfpq_index(corpus: DataFrame, store, table: str = "ivfpq_index",
+                nlist: int = 8, m_sub: int = 8, n_codes: int = 16,
+                seed: int = 42, key: str = "vec_id",
+                vec: str = "embedding") -> int:
+    """Build and commit an IVF-PQ index (``_index``); returns the version."""
+    return _index(corpus, store, table, "ivfpq", seed, key, vec, nlist=nlist,
+                  m_sub=m_sub, n_codes=n_codes)
+
+
+def ivfpq_append(new_vecs: DataFrame, store, table: str = "ivfpq_index",
+                 key: str = "vec_id", vec: str = "embedding") -> int:
+    """Encode a batch through the committed two-layer geometry (``_append``)."""
+    return _append(new_vecs, store, table, "ivfpq", key, vec)
+
+
+def ivfpq_query(queries: DataFrame, store, table: str = "ivfpq_index",
+                k: int = 10, nprobe: int = 2, rerank: int | None = None,
+                query_key: str = "q", vec: str = "embedding",
+                version: int | None = None, where=None,
+                meta: DataFrame | None = None, meta_key: str = "n") -> DataFrame:
+    """ADC over the ``nprobe`` nearest cells, exact rerank (``_query``)."""
+    return _query(queries, store, table, "ivfpq", k, nprobe, rerank,
+                  query_key, vec, version, where, meta, meta_key)
+
+
+def ivfpq_stats(spark: SparkSession, store, table: str = "ivfpq_index",
+                version: int | None = None) -> DataFrame:
+    """Cell occupancy of the composed index (``_stats``)."""
+    return _stats(spark, store, table, version, "ivfpq")
+
+
+def ivfpq_skew_factor(spark: SparkSession, store, table: str = "ivfpq_index",
+                      version: int | None = None) -> float:
+    """Occupancy skew factor of the composed index (``_skew``)."""
+    return _skew(spark, store, table, version, "ivfpq")
+
+
+def ivfpq_qerr(spark: SparkSession, store, table: str = "ivfpq_index",
+               version: int | None = None, sample_n: int = _PQ_STATS_SAMPLE_N,
+               seed: int = 42) -> float:
+    """Mean squared RESIDUAL quantization error of the stored codes (``_qerr``)."""
+    return _qerr(spark, store, table, version, sample_n, seed, "ivfpq")
+
+
+def ivfpq_refit_due(spark: SparkSession, store, table: str = "ivfpq_index",
+                    skew_threshold: float = 4.0, qerr_threshold: float = 1.5,
+                    sample_n: int = _PQ_STATS_SAMPLE_N, seed: int = 42) -> bool:
+    """True on skew past ``skew_threshold`` OR a refit cutting the residual
+    error more than ``qerr_threshold``× (``_refit_due``)."""
+    return _refit_due(spark, store, table, "ivfpq", skew_threshold=skew_threshold,
+                      qerr_threshold=qerr_threshold, sample_n=sample_n, seed=seed)
+
+
+def ivfpq_refit(spark: SparkSession, store, table: str = "ivfpq_index",
+                nlist: int | None = None, m_sub: int | None = None,
+                n_codes: int | None = None, seed: int = 42) -> int:
+    """Re-fit both layers and re-encode; ``None`` sizes inherit (``_refit``)."""
+    return _refit(spark, store, table, "ivfpq", seed, nlist=nlist, m_sub=m_sub,
+                  n_codes=n_codes)
 
 
 # ---- key-level delete (r12) ------------------------------------------
@@ -1915,7 +1006,7 @@ def ann_delete(
         ks = sorted({int(k) for k in keys})
         if not ks:
             return store.latest_version(table)
-        kdf = _local_df(spark, [(k,) for k in ks], "n bigint")
+        kdf = local_df(spark, [(k,) for k in ks], "n bigint")
         small = True
     probe = F.broadcast(kdf) if small else kdf
     cur = store.read(spark, table)
@@ -1989,76 +1080,12 @@ def ann_upsert(
     new_vecs = new_vecs.localCheckpoint(eager=True)
     if not new_vecs.head(1):
         return store.latest_version(table)
-    assign = _encode_through_committed(
-        new_vecs, spark, store, table, key, vec, "ann_upsert"
-    ).dropDuplicates(["n"])
+    assign = _encode_committed(new_vecs, store, table, key, vec, "ann_upsert")
     return store.merge_delta(
         table, "n",
         tombstones=assign.select("n"),
         fresh=assign,
         metadata=metadata,
-    )
-
-
-def _encode_through_committed(
-    new_vecs: DataFrame,
-    spark: SparkSession,
-    store,
-    table: str,
-    key: str,
-    vec: str,
-    fn: str,
-) -> DataFrame:
-    """Encode a batch through the COMMITTED geometry of whichever
-    index family ``table`` holds (detected from the committed
-    layout's columns — the ``ann_upsert`` contract, shared with the
-    CDC apply path): full-schema rows ready to land as fresh rows in
-    a delta layer or append. Never re-fits; raises on an unknown
-    layout."""
-    cur = store.read(spark, table)
-    cols = set(cur.columns)
-    if cols == {"n", "cell", "sub", "code", "codes", "v"}:
-        from clickhouse_k_means_spark.functions.vector import (
-            ivfpq_encode_batch,
-        )
-
-        centroids, books = _committed_ivfpq(spark, store, table, None)
-        encode = ivfpq_encode_batch(centroids, books)
-        return new_vecs.select(
-            _key_as_n(key, fn),
-            encode(F.col(vec).cast("array<double>")).alias("e"),
-            F.col(vec).cast("array<double>").alias("v"),
-        ).select(
-            "n",
-            F.col("e.cell").alias("cell"),
-            F.lit(None).cast("int").alias("sub"),
-            F.lit(None).cast("int").alias("code"),
-            F.col("e.codes").alias("codes"),
-            "v",
-        )
-    if cols == {"n", "sub", "code", "codes", "v"}:
-        from clickhouse_k_means_spark.functions.vector import pq_encode_batch
-
-        books = _committed_codebooks(spark, store, table, None)
-        encode = pq_encode_batch(books)
-        return new_vecs.select(
-            _key_as_n(key, fn),
-            F.lit(None).cast("int").alias("sub"),
-            F.lit(None).cast("int").alias("code"),
-            encode(F.col(vec).cast("array<double>")).alias("codes"),
-            F.col(vec).cast("array<double>").alias("v"),
-        )
-    if cols == {"n", "cell", "v"}:
-        centers_l = _committed_centroids(spark, store, table, None)
-        cell1 = nearest_cells_batch(centers_l, nprobe=1)
-        return new_vecs.select(
-            _key_as_n(key, fn),
-            cell1(F.col(vec).cast("array<double>"))[0].alias("cell"),
-            F.col(vec).cast("array<double>").alias("v"),
-        )
-    raise ValueError(
-        f"{fn}: table {table!r} has layout {sorted(cols)}, "
-        "not a known index family"
     )
 
 
@@ -2113,9 +1140,7 @@ def ann_cdc_apply(
     keys = batch.select(_key_as_n(key, "ann_cdc_apply")).distinct()
     fresh = None
     if ups.head(1):
-        fresh = _encode_through_committed(
-            ups, spark, store, table, key, vec, "ann_cdc_apply"
-        ).dropDuplicates(["n"])
+        fresh = _encode_committed(ups, store, table, key, vec, "ann_cdc_apply")
     return store.merge_delta(
         table, "n", tombstones=keys, fresh=fresh, metadata=metadata
     )
@@ -2233,9 +1258,9 @@ def ann_recall_probe(
         brute_force_topk,
     )
 
-    cur = store.read(spark, table, version=version)
-    cols = set(cur.columns)
-    vec_rows = cur.filter(F.col("n").isNotNull())
+    g = _geometry(spark, store, table, version, fn="ann_recall_probe",
+                  collect=False)
+    vec_rows = g.snap.filter(F.col("n").isNotNull())
     if where is not None:
         pool = _predicate_filter(where, meta, meta_key, "ann_recall_probe")(
             vec_rows
@@ -2244,42 +1269,21 @@ def ann_recall_probe(
     else:
         pool = vec_rows
         fkw = {}
-    qrows = (
-        pool.select("n", "v")
-        .orderBy(F.xxhash64(F.lit(seed), F.col("n")))
-        .limit(sample_n)
-        .collect()
-    )
+    qrows = _sample(pool.select("n", "v"), "n", seed, sample_n)
     if not qrows:
         raise ValueError(
             f"ann_recall_probe: {table!r} holds no vectors"
             + (" matching the predicate" if where is not None else "")
         )
-    queries = _local_df(
+    queries = local_df(
         spark,
         [(int(r["n"]), [float(x) for x in r["v"]]) for r in qrows],
         "q bigint, embedding array<double>",
     )
-    if cols == {"n", "cell", "sub", "code", "codes", "v"}:
-        approx = ivfpq_query(
-            queries, store, table=table, k=k, version=version, **fkw,
-            **query_kw,
-        )
-    elif cols == {"n", "sub", "code", "codes", "v"}:
-        approx = pq_query(
-            queries, store, table=table, k=k, version=version, **fkw,
-            **query_kw,
-        )
-    elif cols == {"n", "cell", "v"}:
-        approx = ivf_query(
-            queries, store, table=table, k=k, version=version, **fkw,
-            **query_kw,
-        )
-    else:
-        raise ValueError(
-            f"ann_recall_probe: table {table!r} has layout {sorted(cols)}, "
-            "not a known index family"
-        )
+    query = {"ivf": ivf_query, "pq": pq_query, "ivfpq": ivfpq_query}[g.family]
+    approx = query(
+        queries, store, table=table, k=k, version=version, **fkw, **query_kw
+    )
     exact = brute_force_topk(
         queries,
         pool.select(F.col("n").alias("vec_id"), F.col("v").alias("embedding")),

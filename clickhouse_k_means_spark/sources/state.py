@@ -437,8 +437,16 @@ class SnapshotStateStore:
                     )
             return df
         # single-join fold: origin-tagged union vs ordinal-tagged
-        # tombstone keys (docstring above proves equality to the chain)
-        origin, tl = "__ckms_origin", "__ckms_tl"
+        # tombstone keys (docstring above proves equality to the chain);
+        # the tag names avoid every table column (case-insensitively)
+        taken = {c.lower() for c in df.columns}
+
+        def free(name: str) -> str:
+            while name.lower() in taken:
+                name += "_"
+            return name
+
+        origin, tl = free("__ckms_origin"), free("__ckms_tl")
         out = df.withColumn(origin, F.lit(0))
         tombs = None
         key = keys.pop() if keys else None
@@ -543,8 +551,8 @@ class SnapshotStateStore:
         the ingest CLI's failed-write rollback uses it for tables that
         did not exist before the failed run (ADVICE r9: truncating a
         just-created table leaves a permanently 'existing' empty table
-        that downstream exists()-guards misread — ivf_index needed the
-        _has_quantizer workaround for exactly that artifact). No-op if
+        that downstream exists()-guards misread — the ANN index builds
+        needed a geometry probe to tell it apart). No-op if
         the table does not exist."""
         t = self._table(table)
         if t.exists():

@@ -4263,6 +4263,75 @@ def test_ivf_query_filtered_preserves_query_key_type(spark, tmp_path):
     rows = filt.collect()
     assert rows and all(int(r["n"]) % 2 == 0 for r in rows)
     assert {r["q"] for r in rows} == {"qa", "qb"}
+    # the PQ families share the query tail: a string key survives both
+    # the unfiltered and the filtered path there too
+    from clickhouse_k_means_spark.operators.ann_index import (
+        ivfpq_index,
+        ivfpq_query,
+        pq_index,
+        pq_query,
+    )
+
+    pq_store = SnapshotStateStore(str(tmp_path / "pq"))
+    pq_index(vecs, pq_store, m_sub=2, n_codes=4, seed=42)
+    ivfpq_store = SnapshotStateStore(str(tmp_path / "ivfpq"))
+    ivfpq_index(vecs, ivfpq_store, nlist=2, m_sub=2, n_codes=4, seed=42)
+    for query, st, kw in (
+        (pq_query, pq_store, {}),
+        (ivfpq_query, ivfpq_store, {"nprobe": 2}),
+    ):
+        for where in (None, "n % 2 = 0"):
+            out = query(
+                queries, st, k=3, query_key="qid", where=where, **kw
+            )
+            assert dict(out.dtypes)["q"] == "string", (query, where)
+            rows = out.collect()
+            assert {r["q"] for r in rows} == {"qa", "qb"}, (query, where)
+            assert len(rows) == 6
+            if where is not None:
+                assert all(int(r["n"]) % 2 == 0 for r in rows)
+
+
+def test_family_wrapper_on_another_familys_table_raises_named_error(
+    spark, tmp_path
+):
+    """Every ivf_*/pq_*/ivfpq_* wrapper reads the committed layout
+    first: pointed at another family's table it raises a ValueError
+    naming both families instead of an analysis or type error from
+    deep inside the plan."""
+    from clickhouse_k_means_spark.operators import ann_index as A
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 7) + 1.0, float(i % 5) + 1.0]) for i in range(40)],
+        "vec_id bigint, embedding array<double>",
+    )
+    store = SnapshotStateStore(str(tmp_path / "store"))
+    A.ivf_index(vecs, store, table="ivf", nlist=2, seed=42)
+    A.pq_index(vecs, store, table="pq", m_sub=2, n_codes=4, seed=42)
+    A.ivfpq_index(vecs, store, table="ivfpq", nlist=2, m_sub=2, n_codes=4)
+    batch = vecs.limit(2)
+    qk = {"query_key": "vec_id"}
+    calls = [
+        ("ivfpq", "ivf", lambda t: A.ivf_append(batch, store, table=t)),
+        ("ivf", "pq", lambda t: A.pq_append(batch, store, table=t)),
+        ("pq", "ivfpq", lambda t: A.ivfpq_append(batch, store, table=t)),
+        ("pq", "ivf", lambda t: A.ivf_query(batch, store, table=t, **qk)),
+        ("ivf", "pq", lambda t: A.pq_query(batch, store, table=t, **qk)),
+        ("ivf", "ivfpq", lambda t: A.ivfpq_query(batch, store, table=t, **qk)),
+        ("pq", "ivf", lambda t: A.ivf_stats(spark, store, table=t)),
+        ("pq", "ivfpq", lambda t: A.ivfpq_skew_factor(spark, store, table=t)),
+        ("ivf", "pq", lambda t: A.pq_qerr(spark, store, table=t)),
+        ("ivf", "ivfpq", lambda t: A.ivfpq_refit_due(spark, store, table=t)),
+        ("ivfpq", "pq", lambda t: A.pq_refit(spark, store, table=t)),
+        ("pq", "ivf", lambda t: A.ivf_refit(spark, store, table=t)),
+        ("pq", "ivf", lambda t: A.ivf_index(vecs, store, table=t)),
+    ]
+    for table, family, call in calls:
+        with pytest.raises(
+            ValueError, match=f"holds a {table} index, not a {family} index"
+        ):
+            call(table)
 
 
 def test_ann_recall_due_version_pinned(spark, tmp_path):

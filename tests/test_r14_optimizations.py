@@ -25,6 +25,9 @@ refactor that regresses it fails here and not only in a bench number:
 - checkpoint blocks: an init round's state and a bisecting split's
   assignment frame and parent are released once nothing reads them,
   so stored blocks stay flat per round and per split.
+- ANN query job counts: an unfiltered ``ivf_query``/``pq_query``/
+  ``ivfpq_query`` on a fresh index runs no more jobs than the three
+  per-family query paths did before they became one.
 """
 
 from __future__ import annotations
@@ -334,3 +337,40 @@ def test_streaming_batch_single_materialization_contract(spark, tmp_path):
     # two consumers, one execution of the parent plan each -> same rows
     assert eager.count() == 2
     assert sorted(map(tuple, eager.collect())) == [(1, "a"), (2, "b")]
+
+
+# Spark jobs of one unfiltered top-k query on a freshly built
+# 64-vector index (geometry read, query collect, scan and rerank),
+# measured before the three query paths became one
+_ANN_QUERY_JOBS = {"ivf": 7, "pq": 8, "ivfpq": 8}
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
+def test_ann_query_job_count(spark, tmp_path, family):
+    import math
+
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / family))
+    vecs = spark.createDataFrame(
+        [
+            (i, [math.cos(i * 0.1), math.sin(i * 0.1), 0.1 * (i % 3), 0.2])
+            for i in range(64)
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    geometry = {
+        "ivf": {"nlist": 4},
+        "pq": {"m_sub": 2, "n_codes": 4},
+        "ivfpq": {"nlist": 4, "m_sub": 2, "n_codes": 4},
+    }[family]
+    getattr(ann_index, f"{family}_index")(vecs, store, seed=42, **geometry)
+    queries = vecs.filter(F.col("vec_id").isin(3, 40))
+    sc = spark.sparkContext
+    with _job_ids(sc, f"ann-query-{family}") as jobs:
+        rows = getattr(ann_index, f"{family}_query")(
+            queries, store, k=5, query_key="vec_id"
+        ).collect()
+    assert len(rows) == 10 and {r["q"] for r in rows} == {3, 40}
+    assert len(jobs) <= _ANN_QUERY_JOBS[family], jobs

@@ -276,7 +276,7 @@ def test_ivf_refit_inherits_committed_nlist(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_k_means_spark.operators.ann_index import (
-        _committed_centroids,
+        _geometry,
         ivf_index,
         ivf_refit,
     )
@@ -291,8 +291,8 @@ def test_ivf_refit_inherits_committed_nlist(spark, tmp_path):
         ).alias("embedding"),
     )
     ivf_index(vecs, store, nlist=6, seed=7)
-    assert len(_committed_centroids(spark, store, "ivf_index", None)) == 6
+    assert len(_geometry(spark, store, "ivf_index").centroids) == 6
     ivf_refit(spark, store)  # no nlist: must inherit 6, not default 16
-    assert len(_committed_centroids(spark, store, "ivf_index", None)) == 6
+    assert len(_geometry(spark, store, "ivf_index").centroids) == 6
     ivf_refit(spark, store, nlist=3)  # explicit resize still works
-    assert len(_committed_centroids(spark, store, "ivf_index", None)) == 3
+    assert len(_geometry(spark, store, "ivf_index").centroids) == 3

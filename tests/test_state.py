@@ -972,6 +972,26 @@ def test_merge_delta_append_rollback_vacuum_interplay(spark, snap):
     assert {r["n"]: r["val"] for r in snap.read(spark, "t").collect()} == got
 
 
+def test_merge_delta_fold_keeps_user_columns_named_like_its_tags(spark, snap):
+    """The single-join fold tags rows with internal origin/ordinal
+    columns; a table that already has columns of those names must read
+    back with its own values, not have them overwritten and dropped."""
+    schema = "n bigint, __ckms_origin string, __ckms_tl bigint"
+    snap.append(
+        spark.createDataFrame([(1, "base-1", 10), (2, "base-2", 20)], schema), "t"
+    )
+    snap.merge_delta(
+        "t", "n",
+        tombstones=spark.createDataFrame([(2,)], "n bigint"),
+        fresh=spark.createDataFrame([(2, "fresh-2", 21)], schema),
+    )
+    got = snap.read(spark, "t")
+    assert got.columns == ["n", "__ckms_origin", "__ckms_tl"]
+    assert sorted(map(tuple, got.collect())) == [
+        (1, "base-1", 10), (2, "fresh-2", 21)
+    ]
+
+
 def test_merge_delta_validates_inputs(spark, snap):
     snap.append(spark.createDataFrame([(1, 2)], "n bigint, val bigint"), "t")
     with pytest.raises(ValueError, match="nothing to commit"):
