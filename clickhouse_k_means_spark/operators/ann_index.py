@@ -1171,9 +1171,12 @@ def ann_compact_due(
     - pending merge-on-read delta layers exceed ``max_delta_layers``
       (r14: ``ann_delete``/``ann_upsert`` churn commits are O(batch)
       delta layers now, so the disease they accrete is READ
-      amplification — every resolve pays one anti-join + union per
-      layer — not dead bytes; ``optimize`` folds the layers back into
-      a packed base).
+      amplification, not dead bytes. Planning a read costs 0 Spark
+      jobs at any layer count; what a layer adds is one broadcast
+      build per fresh union branch that a later tombstone hits, on
+      every action over the read — at 8 layers the geometry collect
+      runs 7 jobs, 6 of them broadcasts. ``optimize`` folds the
+      layers back into a packed base).
 
     The scheduled-job form (the ``ivf_refit_due`` pattern applied to
     storage)::

@@ -26,8 +26,11 @@ refactor that regresses it fails here and not only in a bench number:
   assignment frame and parent are released once nothing reads them,
   so stored blocks stay flat per round and per split.
 - ANN query job counts: an unfiltered ``ivf_query``/``pq_query``/
-  ``ivfpq_query`` on a fresh index runs no more jobs than the three
-  per-family query paths did before they became one.
+  ``ivfpq_query`` on a fresh index, and an ``ivfpq_query`` on an index
+  with 4 pending delta layers, run no more jobs than pinned.
+- snapshot reads: ``SnapshotStateStore.read`` starts no Spark job on a
+  base-only table, under 8 delta layers, on a delta-only table after
+  ``truncate`` and on a mixed-key chain.
 """
 
 from __future__ import annotations
@@ -340,37 +343,101 @@ def test_streaming_batch_single_materialization_contract(spark, tmp_path):
 
 
 # Spark jobs of one unfiltered top-k query on a freshly built
-# 64-vector index (geometry read, query collect, scan and rerank),
-# measured before the three query paths became one
-_ANN_QUERY_JOBS = {"ivf": 7, "pq": 8, "ivfpq": 8}
+# 64-vector index (geometry read, query collect, scan and rerank), and
+# on an IVF-PQ index carrying 4 delta layers (upsert, delete, append,
+# upsert); measured once store reads took their schema from the
+# manifest
+_ANN_QUERY_JOBS = {"ivf": 5, "pq": 6, "ivfpq": 6, "ivfpq-churn": 12}
 
 
-@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
-def test_ann_query_job_count(spark, tmp_path, family):
+@pytest.mark.parametrize("case", ["ivf", "pq", "ivfpq", "ivfpq-churn"])
+def test_ann_query_job_count(spark, tmp_path, case):
     import math
 
     from clickhouse_k_means_spark.operators import ann_index
     from clickhouse_k_means_spark.sources.state import SnapshotStateStore
 
+    family = case.split("-")[0]
+    table = f"{family}_index"
     store = SnapshotStateStore(str(tmp_path / family))
-    vecs = spark.createDataFrame(
-        [
-            (i, [math.cos(i * 0.1), math.sin(i * 0.1), 0.1 * (i % 3), 0.2])
-            for i in range(64)
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
+
+    def vectors(ids, phase=0.0):
+        return spark.createDataFrame(
+            [
+                (i, [math.cos(i * 0.1 + phase), math.sin(i * 0.1 + phase),
+                     0.1 * (i % 3), 0.2])
+                for i in ids
+            ],
+            "vec_id bigint, embedding array<double>",
+        )
+
+    vecs = vectors(range(64))
     geometry = {
         "ivf": {"nlist": 4},
         "pq": {"m_sub": 2, "n_codes": 4},
         "ivfpq": {"nlist": 4, "m_sub": 2, "n_codes": 4},
     }[family]
     getattr(ann_index, f"{family}_index")(vecs, store, seed=42, **geometry)
+    if case == "ivfpq-churn":
+        ann_index.ann_upsert(vectors([3, 5], phase=1.0), store, table)
+        ann_index.ann_delete(spark, [7, 41], store, table)
+        ann_index.ivfpq_append(vectors([70, 71]), store, table)
+        ann_index.ann_upsert(vectors([3, 70], phase=2.0), store, table)
+        assert store.delta_layers(table) == 4
     queries = vecs.filter(F.col("vec_id").isin(3, 40))
     sc = spark.sparkContext
-    with _job_ids(sc, f"ann-query-{family}") as jobs:
+    with _job_ids(sc, f"ann-query-{case}") as jobs:
         rows = getattr(ann_index, f"{family}_query")(
             queries, store, k=5, query_key="vec_id"
         ).collect()
     assert len(rows) == 10 and {r["q"] for r in rows} == {3, 40}
-    assert len(jobs) <= _ANN_QUERY_JOBS[family], jobs
+    assert len(jobs) <= _ANN_QUERY_JOBS[case], jobs
+
+
+def _job_free_read_table(spark, store, shape: str) -> list[int]:
+    """Commit table ``t`` in one of four shapes; returns the keys
+    (column ``a``) its head snapshot holds."""
+
+    def rows(ids):
+        return spark.createDataFrame(
+            [(i, i % 3, float(i)) for i in ids], "a bigint, b bigint, v double"
+        )
+
+    def keys(col, ids):
+        return spark.createDataFrame([(i,) for i in ids], f"{col} bigint")
+
+    store.append(rows(range(16)), "t")
+    if shape == "base":
+        return list(range(16))
+    if shape == "layers":
+        # even layers: tombstones + fresh rows; odd: tombstones only,
+        # two of which hit an earlier layer's fresh row
+        for i in range(8):
+            gone = [i] + ([15 + i] if i in (1, 5) else [])
+            fresh = rows([16 + i]) if i % 2 == 0 else None
+            store.merge_delta("t", "a", tombstones=keys("a", gone), fresh=fresh)
+        return list(range(8, 16)) + [18, 22]
+    if shape == "truncated":
+        store.truncate("t")
+        store.merge_delta("t", "a", fresh=rows(range(16, 20)))
+        return list(range(16, 20))
+    # mixed per-layer keys: the sequential chain
+    store.merge_delta("t", "a", tombstones=keys("a", [1]), fresh=rows([16, 17]))
+    store.merge_delta("t", "b", tombstones=keys("b", [2]))
+    return [i for i in range(18) if i != 1 and i % 3 != 2]
+
+
+@pytest.mark.parametrize("shape", ["base", "layers", "truncated", "mixed_keys"])
+def test_snapshot_read_starts_no_job(spark, tmp_path, shape):
+    """``SnapshotStateStore.read`` plans every scan from the manifest's
+    schema: resolving a snapshot starts no Spark job at any layer
+    count, so no parquet footer is read for schema inference."""
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "store"))
+    want = _job_free_read_table(spark, store, shape)
+    with _job_ids(spark.sparkContext, f"read-{shape}") as jobs:
+        df = store.read(spark, "t")
+    assert jobs == []
+    assert df.columns == ["a", "b", "v"]
+    assert sorted(r["a"] for r in df.collect()) == want

@@ -150,6 +150,9 @@ def test_snapshot_commit_race_no_lost_update(spark, snap):
     v = snap.append(_batch(spark, 1, 2.0), "wcr")
     assert v == 3
     assert snap.read(spark, "wcr").count() == 3
+    # the racer's manifest records no schema: reads never infer one
+    with pytest.raises(ValueError, match="records no schema"):
+        snap.read(spark, "wcr", version=2)
 
 
 def test_snapshot_vacuum_reclaims_unreferenced(spark, snap):
@@ -228,6 +231,72 @@ def test_snapshot_empty_read_keeps_table_schema(spark, snap):
     empty = snap.read(spark, "wcr")
     assert empty.count() == 0
     assert empty.schema == cols
+
+
+_WCR_SCHEMA = "struct<step:bigint,j:int,C:array<double>>"
+
+
+@pytest.mark.parametrize(
+    "change",
+    ["extra", "missing", "retyped"],
+)
+def test_snapshot_append_rejects_a_batch_that_redefines_the_table(
+    spark, snap, change
+):
+    """Reads apply the manifest's schema to every file, so an append
+    may not add, drop or retype a column: it raises, naming the table
+    and both schemas, and commits nothing."""
+    snap.append(_batch(spark, 0, 1.0), "wcr")
+    batch = _batch(spark, 1, 2.0)
+    batch = {
+        "extra": batch.withColumn("extra", F.lit(1)),
+        "missing": batch.drop("C"),
+        "retyped": batch.withColumn("j", F.col("j").cast("bigint")),
+    }[change]
+    with pytest.raises(ValueError, match="does not match the table schema") as e:
+        snap.append(batch, "wcr")
+    assert "'wcr'" in str(e.value)
+    assert batch.schema.simpleString() in str(e.value)
+    assert _WCR_SCHEMA in str(e.value)
+    assert snap.latest_version("wcr") == 1
+
+
+def test_snapshot_merge_delta_rejects_a_batch_that_redefines_the_table(
+    spark, snap
+):
+    snap.append(_batch(spark, 0, 1.0), "wcr")
+    retyped = _batch(spark, 1, 2.0).withColumn("j", F.col("j").cast("bigint"))
+    with pytest.raises(ValueError, match=f"batch schema .* {_WCR_SCHEMA}"):
+        snap.merge_delta("wcr", "step", fresh=retyped)
+    int_keys = spark.createDataFrame([(0,)], "step int")
+    with pytest.raises(ValueError, match="tombstone schema struct<step:int>"):
+        snap.merge_delta("wcr", "step", tombstones=int_keys)
+    assert snap.latest_version("wcr") == 1
+    # the table's own key type still commits
+    snap.merge_delta(
+        "wcr", "step", tombstones=int_keys.select(F.col("step").cast("bigint"))
+    )
+    assert snap.read(spark, "wcr").count() == 0
+
+
+def test_snapshot_append_in_another_column_order_reads_in_table_order(
+    spark, snap
+):
+    """Column order and nullability do not count: a reordered batch
+    (here also with a non-null array element type) appends and reads
+    back in the table's column order. A replace may still redefine."""
+    snap.append(_batch(spark, 0, 1.0), "wcr")
+    snap.append(
+        spark.createDataFrame([(1, 2)], "j int, step bigint").select(
+            F.array(F.lit(2.0)).alias("C"), "step", "j"
+        ),
+        "wcr",
+    )
+    got = snap.read(spark, "wcr")
+    assert got.columns == ["step", "j", "C"]
+    assert sorted(map(tuple, got.collect())) == [(0, 1, [1.0]), (2, 1, [2.0])]
+    snap.replace(spark.createDataFrame([("x",)], "s string"), "wcr")
+    assert snap.read(spark, "wcr").columns == ["s"]
 
 
 def test_truncate_then_ingest_does_not_crash(spark, snap):
