@@ -945,8 +945,8 @@ def ann_delete(
     layer (r14 — VERDICT r13 item 2): only the tombstone key set is
     staged, so the commit writes O(batch) bytes where the previous
     copy-on-write replace staged the whole next snapshot (deleting 10
-    keys from a 100-TB index wrote 100 TB). Readers anti-join the
-    tombstones out at resolve time (``SnapshotStateStore.read``);
+    keys from a 100-TB index wrote 100 TB). Readers drop the
+    tombstoned keys at resolve time (``SnapshotStateStore.read``);
     ``optimize`` folds accrued layers back into a packed base and
     ``ann_compact_due`` says when. ``version=`` pins on any reader
     replay the pre-delete index exactly, as before.
@@ -1064,7 +1064,7 @@ def ann_upsert(
     Scale shape: one encode pass over the batch (Arrow), one O(batch)
     staging write, one atomic manifest commit; the corpus is never
     read, rewritten, or shuffled — the old rows' removal is a
-    batch-sized tombstone anti-join applied at read time. Geometry
+    batch-sized tombstone join applied at read time. Geometry
     rows carry NULL keys and pass through every layer untouched. A
     large upsert shifts the data distribution like a large append
     does — run the family's maintenance advisor afterwards."""
@@ -1172,11 +1172,12 @@ def ann_compact_due(
       (r14: ``ann_delete``/``ann_upsert`` churn commits are O(batch)
       delta layers now, so the disease they accrete is READ
       amplification, not dead bytes. Planning a read costs 0 Spark
-      jobs at any layer count; what a layer adds is one broadcast
-      build per fresh union branch that a later tombstone hits, on
-      every action over the read — at 8 layers the geometry collect
-      runs 7 jobs, 6 of them broadcasts. ``optimize`` folds the
-      layers back into a packed base).
+      jobs at any layer count, and every action over it pays one
+      tombstone build whatever the count — at 8 layers the geometry
+      collect runs 2 jobs and an ``ivfpq_query`` 8, against 1 and 6
+      on a folded index. What each layer still adds is one union
+      branch, i.e. one more parquet scan per action. ``optimize``
+      folds the layers back into a packed base).
 
     The scheduled-job form (the ``ivf_refit_due`` pattern applied to
     storage)::

@@ -30,7 +30,9 @@ refactor that regresses it fails here and not only in a bench number:
   with 4 pending delta layers, run no more jobs than pinned.
 - snapshot reads: ``SnapshotStateStore.read`` starts no Spark job on a
   base-only table, under 8 delta layers, on a delta-only table after
-  ``truncate`` and on a mixed-key chain.
+  ``truncate`` and on mixed per-layer keys; a collect over 8 delta
+  layers builds the tombstone side once (one join above the union,
+  filters pushed into every scan), not once per union branch.
 """
 
 from __future__ import annotations
@@ -345,9 +347,9 @@ def test_streaming_batch_single_materialization_contract(spark, tmp_path):
 # Spark jobs of one unfiltered top-k query on a freshly built
 # 64-vector index (geometry read, query collect, scan and rerank), and
 # on an IVF-PQ index carrying 4 delta layers (upsert, delete, append,
-# upsert); measured once store reads took their schema from the
-# manifest
-_ANN_QUERY_JOBS = {"ivf": 5, "pq": 6, "ivfpq": 6, "ivfpq-churn": 12}
+# upsert); measured once the delta fold built its tombstone side once
+# per action
+_ANN_QUERY_JOBS = {"ivf": 5, "pq": 6, "ivfpq": 6, "ivfpq-churn": 8}
 
 
 @pytest.mark.parametrize("case", ["ivf", "pq", "ivfpq", "ivfpq-churn"])
@@ -421,7 +423,7 @@ def _job_free_read_table(spark, store, shape: str) -> list[int]:
         store.truncate("t")
         store.merge_delta("t", "a", fresh=rows(range(16, 20)))
         return list(range(16, 20))
-    # mixed per-layer keys: the sequential chain
+    # mixed per-layer keys: one fold join per key column
     store.merge_delta("t", "a", tombstones=keys("a", [1]), fresh=rows([16, 17]))
     store.merge_delta("t", "b", tombstones=keys("b", [2]))
     return [i for i in range(18) if i != 1 and i % 3 != 2]
@@ -441,3 +443,39 @@ def test_snapshot_read_starts_no_job(spark, tmp_path, shape):
     assert jobs == []
     assert df.columns == ["a", "b", "v"]
     assert sorted(r["a"] for r in df.collect()) == want
+
+
+def test_layered_read_builds_tombstones_once(spark, tmp_path):
+    """A collect over a read with 8 delta layers runs at most 2 jobs
+    more than over the base-only read: the fold is one join above the
+    union of base and fresh rows, so the tombstone side is built once
+    per action, not once per union branch. A filter on the key column
+    still reaches every parquet scan, tombstone scans included."""
+    import re
+
+    from clickhouse_k_means_spark.plans.audit import plan_string
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    sc = spark.sparkContext
+    counts = {}
+    for shape in ("base", "layers"):
+        store = SnapshotStateStore(str(tmp_path / shape))
+        want = _job_free_read_table(spark, store, shape)
+        df = store.read(spark, "t")
+        with _job_ids(sc, f"fold-{shape}") as jobs:
+            got = df.collect()
+        assert sorted(r["a"] for r in got) == want
+        counts[shape] = len(jobs)
+    assert counts["layers"] <= counts["base"] + 2, counts
+
+    df = store.read(spark, "t").filter("a >= 4")
+    assert sorted(r["a"] for r in df.collect()) == [a for a in want if a >= 4]
+    plan = plan_string(df).split("== Initial Plan ==")[0]
+    ops = re.findall(r"^[\s:+-]*(?:\*\(\d+\) )?(\w+)", plan, re.M)
+    joins = [i for i, op in enumerate(ops) if op.endswith("Join")]
+    assert len(joins) == 1 and joins[0] < ops.index("Union"), ops
+    assert ops.count("BroadcastExchange") <= 1, ops
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    # base + 4 fresh layers + 8 tombstone layers
+    assert len(scans) == 13, plan
+    assert all("GreaterThanOrEqual(a,4)" in line for line in scans), plan

@@ -1061,6 +1061,80 @@ def test_merge_delta_fold_keeps_user_columns_named_like_its_tags(spark, snap):
     ]
 
 
+def _random_layers(seed: int, mixed: bool) -> tuple[list, list]:
+    """A base and 7 random delta layers over rows ``(a, b, v)``, each
+    layer ``(key, tombstones or None, fresh rows or None)``: a mix of
+    tombstone-only, fresh-only and tombstone+fresh layers, with NULL
+    keys (in both key columns) among the rows and the tombstones.
+    Pinned inside the random mix: ``a = 100`` is tombstoned at layers
+    2 and 5 with a fresh row at layer 3 (dead at the head), and
+    ``a = 101`` is tombstoned at layer 2 and re-added at layer 4 (live
+    at the head). ``mixed`` keys some tombstone layers on ``b``
+    instead of ``a``."""
+    import random
+
+    rng = random.Random(seed)
+    base = [(a, a % 3, 0.0) for a in range(12)] + [(100, 50, 0.0), (101, 50, 0.0)]
+    base += [(None, None, -1.0), (None, None, -2.0)]
+    layers = []
+    for i in range(1, 8):
+        kinds = {2: ("tomb", "both"), 5: ("tomb", "both"), 3: ("fresh", "both"),
+                 4: ("fresh", "both")}.get(i, ("tomb", "fresh", "both"))
+        kind = rng.choice(kinds)
+        key = "b" if mixed and i not in (2, 5) and rng.random() < 0.5 else "a"
+        tomb = fresh = None
+        if kind != "fresh":
+            pool = range(3) if key == "b" else range(14)
+            tomb = rng.sample(pool, 1 if key == "b" else 3)
+            tomb += [None] if rng.random() < 0.5 else []
+            tomb += {2: [100, 101], 5: [100]}.get(i, [])
+        if kind != "tomb":
+            fresh = [(a, a % 3, float(100 * i + a)) for a in rng.sample(range(14), 2)]
+            fresh += [(None, None, -10.0 * i)] if rng.random() < 0.5 else []
+            fresh += {3: [(100, 50, 300.0)], 4: [(101, 50, 401.0)]}.get(i, [])
+        layers.append((key, tomb, fresh))
+    return base, layers
+
+
+@pytest.mark.parametrize("seed,mixed", [(1, False), (2, False), (3, True)])
+def test_merge_delta_fold_matches_layer_by_layer_model(spark, snap, seed, mixed):
+    """``read`` at every version equals a plain-Python model that
+    applies the layers one by one: each layer drops the rows whose
+    key it tombstones, then adds its fresh rows. NULL keys never
+    match a tombstone."""
+    schema = "a bigint, b bigint, v double"
+    base, layers = _random_layers(seed, mixed)
+    model = list(base)
+    versions = [(snap.append(spark.createDataFrame(base, schema), "t"), list(model))]
+    for key, tomb, fresh in layers:
+        if tomb is not None:
+            col = 0 if key == "a" else 1
+            model = [r for r in model if r[col] is None or r[col] not in tomb]
+        model += fresh or []
+        v = snap.merge_delta(
+            "t", key,
+            tombstones=None if tomb is None else spark.createDataFrame(
+                [(k,) for k in tomb], f"{key} bigint"
+            ),
+            fresh=None if fresh is None else spark.createDataFrame(fresh, schema),
+        )
+        versions.append((v, list(model)))
+
+    def rows(version):
+        got = snap.read(spark, "t", version=version).collect()
+        return sorted(map(tuple, got), key=repr)
+
+    for v, want in versions:
+        assert rows(v) == sorted(want, key=repr), v
+    head = rows(None)
+    assert not [r for r in head if r[0] == 100]
+    assert [r for r in head if r[0] == 101] == [(101, 50, 401.0)]
+    nulls = [r for _, _, fresh in layers for r in fresh or [] if r[0] is None]
+    assert [r for r in head if r[0] is None] == sorted(
+        [r for r in base if r[0] is None] + nulls, key=repr
+    )
+
+
 def test_merge_delta_validates_inputs(spark, snap):
     snap.append(spark.createDataFrame([(1, 2)], "n bigint, val bigint"), "t")
     with pytest.raises(ValueError, match="nothing to commit"):
