@@ -3964,20 +3964,16 @@ def q_resume_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     result must be bit-identical."""
 
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
-    from clickhouse_k_means_spark.sources.state import ParquetStateStore
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
 
     yh = load_yh(spark, sf_dir, "lineitem")
     d = _scratch_dir("resume_fit_")
-    full_store = ParquetStateStore(f"{d}/full")
+    full_store = SnapshotStateStore(f"{d}/full")
     full = KMeansEngine(k=3, seed=42, max_iter=6).fit(
         yh, state_store=full_store, state_table="wcr"
     )
-    crashed = ParquetStateStore(f"{d}/crashed")
-    crashed.append(
-        full_store.read(spark, "wcr").filter("step <= 1"),
-        "wcr",
-        partition_by=["step"],
-    )
+    crashed = SnapshotStateStore(f"{d}/crashed")
+    crashed.append(full_store.read(spark, "wcr").filter("step <= 1"), "wcr")
     resumed = KMeansEngine(k=3, seed=999, max_iter=6).resume_fit(
         yh, crashed, state_table="wcr"
     )

@@ -160,8 +160,8 @@ class IncrementalDistinct:
     batch arrival by scanning only the new batch plus n_batches
     few-KB rows, never the history.
 
-    Works with either state store; with ``SnapshotStateStore`` reads
-    are snapshot-isolated and each update is one atomic commit.
+    On ``SnapshotStateStore`` reads are snapshot-isolated and each
+    update is one atomic commit.
     ``hll_sketch_agg`` accepts int/bigint/string/binary columns —
     cast doubles (or hash composites) to one of those first.
     """
@@ -342,12 +342,6 @@ class IncrementalRollup:
 
     def compact(self, spark) -> None:
         """Collapse the state history to |keys| rows (the merge a
-        MergeTree background thread would do). Requires a store with
-        ``replace`` (snapshot semantics); append-only stores keep
-        history."""
-        if not hasattr(self.store, "replace"):
-            raise ValueError(
-                "IncrementalRollup.compact needs a snapshot store with "
-                "replace(); append-only stores retain per-batch history"
-            )
+        MergeTree background thread would do) with one ``replace``
+        commit."""
         self.store.replace(self.merged(spark), self.table)

@@ -58,7 +58,7 @@ from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.functions.distance import cosine_fixed
@@ -72,7 +72,10 @@ from clickhouse_k_means_spark.functions.vector import (
     pq_encode_batch,
     quantizer_sample_n,
 )
-from clickhouse_k_means_spark.operators.topk import top_k_by_group
+from clickhouse_k_means_spark.operators.topk import (
+    ranked_top_k_by_group,
+    top_k_by_group,
+)
 from clickhouse_k_means_spark.sources.dataset import local_df
 
 _LAYOUTS = {
@@ -598,10 +601,7 @@ def _query(
         scored = short.join(F.broadcast(qdf), "qi")
     scored = scored.select("q", "n", cosine_fixed("qv", "cv", dim).alias("score"))
     order = [F.col("score").desc(), F.col("n").asc()]
-    w = Window.partitionBy("q").orderBy(*order)
-    return top_k_by_group(scored, k, "q", order).withColumn(
-        "rank", F.row_number().over(w)
-    )
+    return ranked_top_k_by_group(scored, k, "q", order)
 
 
 def _stats(spark: SparkSession, store, table: str, version, family: str) -> DataFrame:

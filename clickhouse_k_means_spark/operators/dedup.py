@@ -331,9 +331,9 @@ def incremental_exact_dedup(
     — the production ingest shape (the batch ``exact_dedup`` only sees
     its own rows).
 
-    Protocol: (1) read the persisted hash table (any state store from
-    ``sources/state.py``; with ``SnapshotStateStore`` the read is
-    snapshot-isolated, so a concurrent ingest can't tear it), (2)
+    Protocol: (1) read the persisted hash table (a
+    ``SnapshotStateStore`` read is snapshot-isolated, so a concurrent
+    ingest can't tear it), (2)
     dedup the batch internally (keep-first by key), (3) check the
     batch's survivors against history (``_history_anti_join``), (4)
     append the NEW survivors' hashes as the next commit. Returns

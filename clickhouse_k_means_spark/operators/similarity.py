@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.functions.distance import (
@@ -45,7 +45,10 @@ from clickhouse_k_means_spark.functions.vector import (
     quantizer_sample_n,
     srp_buckets_batch,
 )
-from clickhouse_k_means_spark.operators.topk import top_k_by_group
+from clickhouse_k_means_spark.operators.topk import (
+    ranked_top_k_by_group,
+    top_k_by_group,
+)
 from clickhouse_k_means_spark.sources.dataset import local_df
 
 
@@ -88,11 +91,7 @@ def brute_force_topk(
     score, desc = _sim_col(metric, "qv", "cv", dim)
     scored = c.crossJoin(F.broadcast(q)).select("q", "n", score.alias("score"))
     order = [F.col("score").desc() if desc else F.col("score").asc(), F.col("n").asc()]
-    ranked = top_k_by_group(scored, k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
+    return ranked_top_k_by_group(scored, k, "q", order)
 
 
 def srp_hyperplanes(dim: int, n_bits: int = 8, seed: int = 42) -> list[list[float]]:
@@ -299,11 +298,7 @@ def ivf_topk(
         "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
     )
     order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(scored, k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
+    return ranked_top_k_by_group(scored, k, "q", order)
 
 
 def srp_bucketed_topk(
@@ -371,11 +366,7 @@ def srp_bucketed_topk(
         "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
     )
     order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(cand.dropDuplicates(["q", "n"]), k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
+    return ranked_top_k_by_group(cand.dropDuplicates(["q", "n"]), k, "q", order)
 
 
 def pq_topk(
@@ -467,11 +458,7 @@ def pq_topk(
         "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
     )
     order = [F.col("score").desc(), F.col("n").asc()]
-    ranked = top_k_by_group(rer, k, "q", order)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q").orderBy(*order)
-    return ranked.withColumn("rank", F.row_number().over(w))
+    return ranked_top_k_by_group(rer, k, "q", order)
 
 
 def _auto_n_bits(n: int, per_bucket: int = 32) -> int:
@@ -578,10 +565,8 @@ def knn_join(
     scored = _cosine_scored(cand, va, vb, dim).localCheckpoint(
         eager=True  # same 64 KB-codegen barrier
     )
-    w = Window.partitionBy("a").orderBy(F.col("sim").desc(), F.col("b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return ranked_top_k_by_group(
+        scored, k, "a", [F.col("sim").desc(), F.col("b")]
     )
 
 
@@ -790,10 +775,8 @@ def knn_join_partitioned(
     scored = _cosine_scored(cand, va, vb, dim).localCheckpoint(
         eager=True  # same 64 KB-codegen barrier
     )
-    w = Window.partitionBy("a").orderBy(F.col("sim").desc(), F.col("b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return ranked_top_k_by_group(
+        scored, k, "a", [F.col("sim").desc(), F.col("b")]
     )
 
 
@@ -840,9 +823,8 @@ def incremental_embed_dedup(
     (``k, t, bucket, v=NULL`` — the probe index) and one vector row
     (``k, t=NULL, bucket=NULL, v`` — the verify payload), unioned into
     a single append, so the history commit is atomic (one manifest
-    link on ``SnapshotStateStore``, one committer rename on
-    ``ParquetStateStore``) and a crash can never leave a band row
-    whose vector payload is missing. Readers split the table back by
+    link on ``SnapshotStateStore``) and a crash can never leave a band
+    row whose vector payload is missing. Readers split the table back by
     ``t IS [NOT] NULL``. Returns ``(survivors_df, n_committed)``.
     Same single-writer-per-table contract as the other incremental
     forms.

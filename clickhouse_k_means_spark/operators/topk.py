@@ -21,21 +21,36 @@ def top_k(df: DataFrame, k: int, order: str | Column | Sequence) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
+def _rank_filter(
+    df: DataFrame,
+    k: int,
+    group: str | Sequence[str],
+    order: str | Column | Sequence,
+    rank: str,
+) -> DataFrame:
+    group = [group] if isinstance(group, str) else list(group)
+    order = [order] if isinstance(order, (str, Column)) else list(order)
+    order = [F.col(o) if isinstance(o, str) else o for o in order]
+    w = Window.partitionBy(*group).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
 def top_k_by_group(
     df: DataFrame, k: int, group: str | Sequence[str], order: str | Column | Sequence
 ) -> DataFrame:
     """Top-k rows per group — rank-filter form; Spark ≥3.5 rewrites it
     to a partial WindowGroupLimit so only k rows per group per input
     partition reach the shuffle."""
-    group = [group] if isinstance(group, str) else list(group)
-    order = [order] if isinstance(order, (str, Column)) else list(order)
-    order = [F.col(o) if isinstance(o, str) else o for o in order]
-    w = Window.partitionBy(*group).orderBy(*order)
-    return (
-        df.withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= k)
-        .drop("__rank")
-    )
+    return _rank_filter(df, k, group, order, "__rank").drop("__rank")
+
+
+def ranked_top_k_by_group(
+    df: DataFrame, k: int, group: str | Sequence[str], order: str | Column | Sequence
+) -> DataFrame:
+    """``top_k_by_group`` that keeps the 1-based ``row_number`` under
+    ``order`` as an ``int`` column ``rank`` — one window, the same
+    WindowGroupLimit plan. The rank tail of every similarity search."""
+    return _rank_filter(df, k, group, order, "rank")
 
 
 def frequent_terms(

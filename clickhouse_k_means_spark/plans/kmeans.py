@@ -39,6 +39,7 @@ reference (model = rows of the latest step only, k-means.sql:36).
 
 from __future__ import annotations
 
+import copy
 import random
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -124,8 +125,8 @@ class KMeansResult:
 
 def _step_appender(spark, state_store, state_table: str):
     """The WCR log writer shared by ``fit`` and ``resume_fit``: append
-    each step's (step, j, C) rows to ``state_table``, step-partitioned,
-    as they are produced."""
+    each step's (step, j, C) rows to ``state_table`` as they are
+    produced, one committed version per step."""
     from clickhouse_k_means_spark.sources.dataset import local_df
 
     def append(step: int, model: Model) -> None:
@@ -135,7 +136,7 @@ def _step_appender(spark, state_store, state_table: str):
         # defaultParallelism, writing up to k near-empty files per step
         # and running a 32-task job for a k-row append
         df = local_df(spark, rows, "step bigint, j int, C array<double>")
-        state_store.append(df, state_table, partition_by=["step"])
+        state_store.append(df, state_table)
 
     return append
 
@@ -683,8 +684,7 @@ class KMeansEngine:
 
     def prepare_working_set(self, yh: DataFrame):
         """Materialize the fit's iteration working set — the ONE setup
-        both ``fit`` and ``resume_fit`` run (``scripts/kscale_profile.py``
-        calls it too, so its phase attribution follows any change here).
+        both ``fit`` and ``resume_fit`` run.
 
         Returns ``(cached, working, dim, n_parts)``: the CACHED handle
         (the caller must ``cached.unpersist()`` when done — kept
@@ -754,14 +754,14 @@ class KMeansEngine:
     ) -> KMeansResult:
         """Run init + Lloyd loop; optionally persist WCR state per step.
 
-        ``state_store`` (a ``sources.state.ParquetStateStore``) maps the
-        reference's per-step ``INSERT INTO WCR SELECT ...``
+        ``state_store`` (a ``sources.state.SnapshotStateStore``) maps
+        the reference's per-step ``INSERT INTO WCR SELECT ...``
         (k-means.sql:42-46 executed by the k-means.sh loop): each
         step's (step, j, C) rows are appended to ``state_table`` AS
-        PRODUCED — step-partitioned, so a crash mid-fit leaves a
-        resumable log and ``delta_finish`` reads prune to the steps
-        they need. k rows per append: driver-side createDataFrame is
-        the right tool, no distributed state involved.
+        PRODUCED — one committed version per step, so a crash mid-fit
+        leaves a resumable log (``resume_fit``). k rows per append:
+        driver-side createDataFrame is the right tool, no distributed
+        state involved.
         """
         if self.k < 1:
             raise ValueError(f"k must be >= 1, got {self.k}")
@@ -915,9 +915,8 @@ class KMeansEngine:
         best: tuple[float, KMeansResult] | None = None
         try:
             for r in range(n_init):
-                eng = KMeansEngine(
-                    self.k, self.seed + r, self.max_iter, self.one_delta, self.squared_weights
-                )
+                eng = copy.copy(self)  # every setting but the seed
+                eng.seed = self.seed + r
                 res = eng.fit(yh)
                 inertia = elbow(yh, res.model, squared=True)
                 if best is None or inertia < best[0]:

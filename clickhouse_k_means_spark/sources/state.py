@@ -4,28 +4,27 @@ The reference keeps the centroid log in a ``MergeTree ORDER BY step``
 table (k-means.sql:10-11): state written once per step, appended
 forever, read back sorted for the ``deltaFinish`` view, and TRUNCATEd
 between runs (k-means.sh:7). This module is the Spark-native mapping:
-an append-only partitioned parquet directory per logical table.
+``SnapshotStateStore``, a manifest-versioned parquet table per logical
+table.
 
 Scale mapping (100 TB):
-- append = one atomic directory write per batch (Spark's parquet
-  committer); no compaction needed because state batches are tiny
-  relative to data (k rows per step, component labels per corpus pass).
-- partition columns (``step``, ``run_id``, a date) give partition
-  PRUNING on read-back — the ``ORDER BY step`` role: reading "latest
-  two steps" touches two directories, not the log.
+- append = one batch of immutable data files plus one atomic manifest
+  commit; no compaction needed for state logs because state batches
+  are tiny relative to data (k rows per step, component labels per
+  corpus pass). Churn-heavy tables fold their merge-on-read layers
+  with ``optimize``.
+- versions are the ``ORDER BY step`` role: each append is a snapshot
+  boundary, so "the latest two steps" is two version reads.
 - readers get a plain DataFrame: every downstream operator
   (``delta_finish``, dedup canonical joins) works unchanged on
   persisted state.
 
-Two stores, two guarantees:
-- ``ParquetStateStore`` — plain parquet-append; the dependency-free
-  minimum (append, read, truncate). Single-writer.
-- ``SnapshotStateStore`` (r4) — manifest-based versioned snapshots:
-  optimistic-concurrency commits (exclusive-create on the version
-  file), snapshot-isolated reads, time travel, logical truncate, and
-  vacuum — the Delta/Iceberg log design re-expressed dependency-free.
-  Swapping in a real Delta/Iceberg table remains a one-class change;
-  the commit/read protocol is deliberately the same shape.
+The store gives optimistic-concurrency commits (exclusive-create on
+the version file), snapshot-isolated reads, time travel, logical
+truncate, and vacuum — the Delta/Iceberg log design re-expressed
+dependency-free. Swapping in a real Delta/Iceberg table remains a
+one-class change; the commit/read protocol is deliberately the same
+shape.
 """
 
 from __future__ import annotations
@@ -63,41 +62,6 @@ def _require_schema(
             f"{table!r}: {what} schema {batch.simpleString()} does not "
             f"match the table schema {committed.simpleString()}"
         )
-
-
-class ParquetStateStore:
-    """Append-only parquet state tables under one root directory."""
-
-    def __init__(self, root: str):
-        self.root = Path(root)
-
-    def path(self, table: str) -> str:
-        return str(self.root / table)
-
-    def append(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        """Append a batch (the reference's INSERT INTO WCR SELECT ...).
-
-        ``partition_by`` columns become directory partitions — pruned
-        on read-back filters, the MergeTree ORDER BY analogue.
-        """
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
-
-    def exists(self, table: str) -> bool:
-        return Path(self.path(table)).exists()
-
-    def truncate(self, table: str) -> None:
-        """The reference's TRUNCATE TABLE (k-means.sh:7)."""
-        p = Path(self.path(table))
-        if p.exists():
-            shutil.rmtree(p)
 
 
 class CommitProtocol:
@@ -335,19 +299,13 @@ class SnapshotStateStore:
         self,
         df: DataFrame,
         table: str,
-        partition_by: list[str] | None = None,
         metadata: dict | None = None,
     ) -> int:
         """Stage the batch as immutable data files, then commit
         latest-snapshot-files + new-files as the next version.
         Returns the committed version number. Raises ``ValueError``
         when the batch's column names or types differ from the
-        table's (column order does not count).
-
-        ``partition_by`` is accepted for ParquetStateStore interface
-        compatibility (fit's per-step persist) and ignored: versions
-        are the pruning axis here — each append IS a snapshot
-        boundary, so 'read the latest two steps' is two version reads."""
+        table's (column order does not count)."""
         new_files = self._stage(df, table)
         return self._commit(
             table, new_files, schema_json=df.schema.json(), metadata=metadata

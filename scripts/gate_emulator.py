@@ -2,9 +2,12 @@
 ``oracle_sql()`` twin on DuckDB at sf0.01 in registration order, timing
 each, and report mismatches — a local stand-in for CORRECTNESS_r{N}.json
 so driver truncation/timeout behavior is diagnosable before the round
-ends.
+ends. The DuckDB views and the canonical form come from
+``tests/test_oracle_parity.py``; ``_vhash`` is the value hash to compare
+a registry entry's output across commits.
 
 Usage: python scripts/gate_emulator.py [key ...]   (default: all keys)
+Exit code 0 when every key ran and every oracle hash matched, else 1.
 """
 
 from __future__ import annotations
@@ -13,29 +16,16 @@ import hashlib
 import json
 import sys
 import time
+from pathlib import Path
 
-import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-import __spark_entry__ as entry_mod
-from clickhouse_k_means_spark.session import get_spark
-from clickhouse_k_means_spark.sources.dataset import TABLES
+from clickhouse_k_means_spark.session import get_spark  # noqa: E402
+from tests.test_oracle_parity import ORACLES, QUERIES, _canon, _duck  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pdf[sorted(pdf.columns)].copy()
-    for c in out.columns:
-        if out[c].dtype == object:
-            out[c] = out[c].astype(str)
-        elif str(out[c].dtype).startswith(("int", "uint", "Int")):
-            out[c] = out[c].astype("int64")
-        elif str(out[c].dtype).startswith("float"):
-            out[c] = out[c].astype("float64")
-    return out.sort_values(by=list(out.columns), ignore_index=True)
 
 
 def _vhash(pdf: pd.DataFrame) -> str:
@@ -48,32 +38,23 @@ def _vhash(pdf: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
-def main() -> None:
-    keys = sys.argv[1:]
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    if not keys:
-        keys = list(queries)
+def main(argv: list[str] | None = None) -> int:
+    keys = list(sys.argv[1:] if argv is None else argv) or list(QUERIES)
     spark = get_spark("gate-emulator")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = _duck(SF_DIR)
     t_all = time.time()
     results: dict[str, dict] = {}
     for key in keys:
         t0 = time.time()
         row: dict = {}
         try:
-            got = _canon(queries[key](spark, SF_DIR).toPandas())
+            got = _canon(QUERIES[key](spark, SF_DIR).toPandas())
             t_spark = time.time() - t0
             row["spark_rows"] = len(got)
             row["spark_s"] = round(t_spark, 2)
-            if key in oracles:
+            if key in ORACLES:
                 t1 = time.time()
-                want = _canon(con.execute(oracles[key]).df())
+                want = _canon(con.execute(ORACLES[key]).df())
                 row["oracle_s"] = round(time.time() - t1, 2)
                 row["rows_match"] = len(got) == len(want)
                 row["schema_match"] = list(got.columns) == list(want.columns)
@@ -91,6 +72,7 @@ def main() -> None:
         ok = row.get("hash_match", row.get("spark_rows") is not None)
         flag = "OK " if ok and "err" not in row else "BAD"
         print(f"{flag} {key:24s} {row.get('total_s', 0):7.2f}s  {row}", flush=True)
+    con.close()
     print(f"\nTOTAL {time.time() - t_all:.1f}s over {len(keys)} queries")
     bad = {
         k: v
@@ -99,8 +81,9 @@ def main() -> None:
     }
     if bad:
         print("FAILURES:\n" + json.dumps(bad, indent=2))
-        sys.exit(1)
+        return 1
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

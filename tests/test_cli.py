@@ -1000,3 +1000,63 @@ def test_pipeline_cli_ann_stats_recall_where(tmp_path, capsys, spark):
         "--where", "n % 2 = 0",
     ])
     assert s["recall_ppm"] == 1_000_000
+
+
+def _script_uses(tree) -> set[str]:
+    """Script stems a test module imports (``scripts.X``) or names as a
+    path to run (a ``"X.py"`` / ``"scripts/X.py"`` string outside a
+    docstring)."""
+    import ast
+
+    docstrings = {
+        id(n.value)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+    }
+    used = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.ImportFrom) and n.module:
+            if n.module == "scripts":
+                used |= {a.name for a in n.names}
+            elif n.module.startswith("scripts."):
+                used.add(n.module.split(".")[1])
+        elif isinstance(n, ast.Import):
+            used |= {
+                a.name.split(".")[1]
+                for a in n.names
+                if a.name.startswith("scripts.")
+            }
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.endswith(".py")
+            and id(n) not in docstrings
+        ):
+            used.add(Path(n.value).stem)
+    return used
+
+
+def test_every_script_is_imported_or_run_by_a_test():
+    """No orphan scripts: each ``scripts/*.py`` is imported or run by
+    some test, so it cannot rot unnoticed."""
+    import ast
+
+    used = set()
+    for f in Path(REPO_ROOT, "tests").rglob("*.py"):
+        used |= _script_uses(ast.parse(f.read_text()))
+    scripts = {p.stem for p in Path(REPO_ROOT, "scripts").glob("*.py")}
+    orphans = sorted(scripts - used)
+    assert not orphans, f"scripts no test imports or runs: {orphans}"
+
+
+def test_gate_emulator_matches_oracle_hash(spark, capsys):
+    """The gate emulator runs a registry key against its DuckDB oracle
+    and reports a value-hash match."""
+    import sys
+
+    sys.path.insert(0, REPO_ROOT)
+    from scripts.gate_emulator import main as gate_main
+
+    assert gate_main(["elbow_total"]) == 0
+    out = capsys.readouterr().out
+    assert "OK  elbow_total" in out and "'hash_match': True" in out

@@ -199,6 +199,47 @@ def test_fit_best_wcss_parity_with_canonical_kmeanspp(spark, golden):
         yh.unpersist()
 
 
+def test_fit_best_restarts_keep_every_setting_but_the_seed(spark, monkeypatch):
+    """Each fit_best restart runs the caller's engine with only the
+    seed changed: a k-means|| or reproducible-mode engine must not
+    quietly fall back to the sequential ++ init or the fused Lloyd
+    step."""
+    seen = []
+    fit = KMeansEngine.fit
+    parallel_init = KMeansEngine.init_centroids_parallel
+
+    def spy_fit(self, yh, *args, **kwargs):
+        seen.append(
+            (self.k, self.seed, self.max_iter, self.one_delta,
+             self.squared_weights, self.mean_scales, self.init)
+        )
+        return fit(self, yh, *args, **kwargs)
+
+    def spy_init(self, *args, **kwargs):
+        seen.append(("parallel_init", self.seed))
+        return parallel_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(KMeansEngine, "fit", spy_fit)
+    monkeypatch.setattr(KMeansEngine, "init_centroids_parallel", spy_init)
+    yh = from_table(
+        golden_points(spark, n_clusters=3, points_per_cluster=50, seed=7),
+        "i",
+        ["x", "y"],
+    )
+    eng = KMeansEngine(
+        k=3, seed=11, max_iter=3, one_delta=1000.0, squared_weights=True,
+        mean_scales=[100, 100], init="parallel",
+    )
+    res = eng.fit_best(yh, n_init=2)
+    assert len(res.model) == 3
+    rest = (3, 1000.0, True, [100, 100], "parallel")  # max_iter .. init
+    assert seen == [
+        (3, 11, *rest), ("parallel_init", 11),
+        (3, 12, *rest), ("parallel_init", 12),
+    ]
+    assert eng.seed == 11  # the caller's engine is not mutated
+
+
 def test_delta_finish_matches_fit_movement(spark):
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine, delta_finish
 

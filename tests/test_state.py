@@ -9,94 +9,41 @@ from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.plans.kmeans import KMeansEngine, delta_finish
 from clickhouse_k_means_spark.sources.dataset import load_yh
-from clickhouse_k_means_spark.sources.state import ParquetStateStore
+from clickhouse_k_means_spark.sources.state import SnapshotStateStore
 
 
 @pytest.fixture()
-def store(tmp_path):
-    return ParquetStateStore(str(tmp_path / "state"))
+def snap(tmp_path):
+    return SnapshotStateStore(str(tmp_path / "snap"))
 
 
-def test_history_roundtrip_delta_finish(spark, sf_dir, store):
+def test_history_roundtrip_delta_finish(spark, sf_dir, snap):
     yh = load_yh(spark, "/root/testdata/sf0.001", "lineitem")
     res = KMeansEngine(k=3, seed=42, max_iter=8).fit(yh)
     hist = res.history_df(spark)
     want = delta_finish(hist)
 
-    store.append(hist, "wcr", partition_by=["step"])
-    back = store.read(spark, "wcr").withColumn(
-        "step", F.col("step").cast("bigint")
-    )
+    snap.append(hist, "wcr")
+    back = snap.read(spark, "wcr")
     assert back.count() == hist.count()
     assert delta_finish(back) == want
-    # partition pruning: latest-step read touches one directory
-    last = back.agg(F.max("step")).collect()[0][0]
-    plan = back.filter(F.col("step") == last)._jdf.queryExecution().toString()
-    assert "PartitionFilters" in plan or "step=" in plan
 
 
-def test_fit_persists_state_per_step(spark, sf_dir, store):
-    """State store wired INTO the fit (VERDICT r3 item 6): WCR rows
-    are appended per step as produced; the persisted table replays
-    delta_finish identically to the in-memory history, and the log is
-    step-partitioned (resumable / pruned read-back)."""
-    from pathlib import Path
-
-    yh = load_yh(spark, "/root/testdata/sf0.001", "lineitem")
-    eng = KMeansEngine(k=3, seed=42, max_iter=8)
-    res = eng.fit(yh, state_store=store, state_table="wcr_live")
-
-    back = store.read(spark, "wcr_live").withColumn(
-        "step", F.col("step").cast("bigint")
-    )
-    # every in-memory WCR row made it to disk, no extras
-    assert back.count() == len(res.history)
-    # per-step directory partitions exist for step 0..n_iter
-    step_dirs = {p.name for p in Path(store.path("wcr_live")).glob("step=*")}
-    assert step_dirs == {f"step={s}" for s in range(res.n_iter + 1)}
-    # convergence metric replayed from the persisted table matches the
-    # one replayed from the in-memory history
-    assert delta_finish(back) == delta_finish(res.history_df(spark))
-
-
-def test_append_accumulates_runs(spark, store):
-    df1 = spark.createDataFrame([(0, 1, [1.0])], "step bigint, j int, C array<double>")
-    df2 = spark.createDataFrame([(1, 1, [2.0])], "step bigint, j int, C array<double>")
-    store.append(df1, "wcr", partition_by=["step"])
-    store.append(df2, "wcr", partition_by=["step"])
-    assert store.read(spark, "wcr").count() == 2
-
-
-def test_truncate(spark, store):
-    df = spark.createDataFrame([(0, 1, [1.0])], "step bigint, j int, C array<double>")
-    store.append(df, "wcr")
-    assert store.exists("wcr")
-    store.truncate("wcr")
-    assert not store.exists("wcr")
-
-
-def test_dedup_components_roundtrip(spark, sf_dir, store):
+def test_dedup_components_roundtrip(spark, sf_dir, snap):
     from clickhouse_k_means_spark.operators.components import dedup_components
 
     pairs = spark.createDataFrame(
         [(10, 20), (20, 30), (50, 60)], "a long, b long"
     )
     comp = dedup_components(pairs)
-    store.append(comp, "components")
-    back = store.read(spark, "components")
+    snap.append(comp, "components")
+    back = snap.read(spark, "components")
     got = {(r["n"], r["component"], r["is_canonical"]) for r in back.collect()}
     want = {(r["n"], r["component"], r["is_canonical"]) for r in comp.collect()}
     assert got == want
 
 
 # ---- SnapshotStateStore (r4): versioned snapshots / time travel ----
-
-
-@pytest.fixture()
-def snap(tmp_path):
-    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
-
-    return SnapshotStateStore(str(tmp_path / "snap"))
 
 
 def _batch(spark, step, val):
@@ -124,6 +71,7 @@ def test_snapshot_isolation_reader_pinned(spark, snap):
 
 def test_snapshot_logical_truncate_and_time_travel(spark, snap):
     snap.append(_batch(spark, 0, 1.0), "wcr")
+    assert snap.exists("wcr")
     v = snap.truncate("wcr")
     assert snap.read(spark, "wcr").count() == 0
     assert snap.read(spark, "wcr", version=v - 1).count() == 1  # still there
@@ -635,19 +583,18 @@ def test_scd2_history_survives_time_travel(spark, tmp_path):
 def test_resume_fit_replays_uninterrupted_fit(spark, tmp_path):
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
     from clickhouse_k_means_spark.sources.dataset import load_yh
-    from clickhouse_k_means_spark.sources.state import ParquetStateStore
 
     yh = load_yh(spark, "/root/testdata/sf0.001", "lineitem")
-    full_store = ParquetStateStore(str(tmp_path / "full"))
+    full_store = SnapshotStateStore(str(tmp_path / "full"))
     eng = KMeansEngine(k=3, seed=42, max_iter=8)
     full = eng.fit(yh, state_store=full_store, state_table="wcr")
     assert full.n_iter >= 2, "fixture fit too short to test resume"
 
     # simulate a crash after step `cut`: copy only steps <= cut
     cut = 1
-    crashed = ParquetStateStore(str(tmp_path / "crashed"))
+    crashed = SnapshotStateStore(str(tmp_path / "crashed"))
     log = full_store.read(spark, "wcr").filter(f"step <= {cut}")
-    crashed.append(log, "wcr", partition_by=["step"])
+    crashed.append(log, "wcr")
 
     resumed = KMeansEngine(k=3, seed=999, max_iter=8).resume_fit(
         yh, crashed, state_table="wcr"
@@ -672,10 +619,9 @@ def test_resume_fit_validates(spark, tmp_path):
 
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
     from clickhouse_k_means_spark.sources.dataset import load_yh
-    from clickhouse_k_means_spark.sources.state import ParquetStateStore
 
     yh = load_yh(spark, "/root/testdata/sf0.001", "lineitem")
-    store = ParquetStateStore(str(tmp_path / "s"))
+    store = SnapshotStateStore(str(tmp_path / "s"))
     with pytest.raises((ValueError, Exception)):
         KMeansEngine(k=3).resume_fit(yh, store)
     eng = KMeansEngine(k=3, seed=42, max_iter=2)
@@ -777,10 +723,9 @@ def test_resume_fit_after_convergence_is_noop(spark, tmp_path):
     replaying an extra Lloyd step or appending spurious state."""
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
     from clickhouse_k_means_spark.sources.dataset import load_yh
-    from clickhouse_k_means_spark.sources.state import ParquetStateStore
 
     yh = load_yh(spark, "/root/testdata/sf0.001", "lineitem")
-    store = ParquetStateStore(str(tmp_path / "s"))
+    store = SnapshotStateStore(str(tmp_path / "s"))
     # k=1 converges by construction: step 1 lands on the global mean,
     # step 2 recomputes the identical mean -> movement 0
     full = KMeansEngine(k=1, seed=42, max_iter=6).fit(

@@ -253,10 +253,7 @@ def test_incremental_rollup_merge_equals_single_shot(spark, tmp_path):
 
 def test_incremental_rollup_empty_and_validation(spark, tmp_path):
     from clickhouse_k_means_spark.functions.sketches import IncrementalRollup
-    from clickhouse_k_means_spark.sources.state import (
-        ParquetStateStore,
-        SnapshotStateStore,
-    )
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
 
     roll = IncrementalRollup(
         SnapshotStateStore(str(tmp_path / "a")), keys=["k"], metrics=["v"]
@@ -264,12 +261,6 @@ def test_incremental_rollup_empty_and_validation(spark, tmp_path):
     assert roll.merged(spark).count() == 0  # empty store → empty relation
     with pytest.raises(ValueError, match="keys and metrics"):
         IncrementalRollup(None, keys=[], metrics=["v"])
-    ap = IncrementalRollup(
-        ParquetStateStore(str(tmp_path / "b")), keys=["k"], metrics=["v"]
-    )
-    ap.update(spark.createDataFrame([("a", 1)], "k string, v bigint"))
-    with pytest.raises(ValueError, match="snapshot store"):
-        ap.compact(spark)  # append-only store cannot replace
     # empty-store merged() honors declared non-string key dtypes
     typed = IncrementalRollup(
         SnapshotStateStore(str(tmp_path / "c")),
