@@ -22,20 +22,29 @@ functions are one-call wrappers. Where the families' arithmetic differs
 the branch follows the geometry present, so each family replays its
 committed results bit for bit.
 
-**Reader** (``_geometry``): one snapshot read; the family comes from the
-layout's columns (a named ``ValueError`` for an unknown layout or another
-family than the caller's); the geometry rows are one small collect.
+**Reader** (``_geometry``): one snapshot read, planned in 0 jobs; the
+family comes from the layout's columns (a named ``ValueError`` for an
+unknown layout or another family than the caller's). The geometry rows
+live in the snapshot's base files only, so the centroids and codebooks
+are a pure function of ``(store root, table, base file list)`` and are
+served from a small driver-side memo under that key. A miss collects
+the ``n IS NULL`` rows of the base files in 1 job at any layer count;
+a build or refit seeds the memo with what it committed.
 
 **Build** (``_build``): one hash-ordered driver sample, one NumPy fit
-(``_fit``), one Arrow encode pass, one commit — an append that refuses
-existing geometry for an index build, a replace that inherits and never
-shrinks the committed sizes for a refit (old versions keep replaying).
+(``_fit``), one Arrow encode pass, one replace commit, so the geometry
+lands in the base at any layer count — an index build refuses existing
+geometry, a refit inherits and never shrinks the committed sizes (old
+versions keep replaying).
 
 **Encode** (``_encode``): vectors through a geometry to layout rows, for
 index, append (key-idempotent, ``_fresh_rows``), refit, ``ann_upsert``
-and ``ann_cdc_apply``.
+and ``ann_cdc_apply``. The pass raises on a NULL, wrong-size or
+non-finite vector (``_checked_vec``); a zero vector is stored, and the
+query rerank skips it.
 
-**Query** (``_query``): the bounded query batch is collected once; with
+**Query** (``_query``): the bounded query batch is collected once and
+checked on the driver (dimension, finite, non-zero norm); with
 centroids, probe cells are picked driver-side (widened per query under
 ``where=``) and pushed to the scan as ``cell isin``; with codebooks an
 ADC scan keeps a shortlist; then one exact-cosine rerank and rank tail
@@ -54,6 +63,8 @@ snapshot-isolated, and ``version=`` pins geometry and vectors together.
 from __future__ import annotations
 
 import math
+import threading
+from collections import OrderedDict
 from functools import reduce
 from typing import NamedTuple
 
@@ -61,7 +72,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_k_means_spark.functions.distance import cosine_fixed
+from clickhouse_k_means_spark.functions.distance import cosine_fixed, dot_fixed
 from clickhouse_k_means_spark.functions.vector import (
     ivfpq_adc_batch,
     ivfpq_encode_batch,
@@ -129,6 +140,64 @@ def _key_as_n(key: str, fn: str):
         )
         .otherwise(F.col(key).cast("bigint"))
         .alias("n")
+    )
+
+
+def _vector_fault(v, dim: int, zero_ok: bool) -> str | None:
+    """Why the vector ``v`` cannot enter the index or a query (None
+    when it can): NULL, not ``dim`` elements, or a NaN or infinite
+    element; and, unless ``zero_ok``, a zero norm (the exact-cosine
+    score divides by it)."""
+    if v is None:
+        return "is NULL"
+    if len(v) != dim:
+        return f"has {len(v)} elements, not the index dimension {dim}"
+    x = np.asarray(v, dtype=np.float64)
+    if not np.isfinite(x).all():
+        return "has a non-finite element"
+    if not zero_ok and not (x * x).any():
+        return "has zero norm"
+    return None
+
+
+def _require_vectors(keys, vecs, dim: int, fn: str, what: str,
+                     zero_ok: bool = False) -> None:
+    """Driver-side ``_vector_fault`` check of collected vectors: raise
+    ``ValueError`` naming ``fn``, the ``what`` key and the reason."""
+    for k, v in zip(keys, vecs):
+        fault = _vector_fault(v, dim, zero_ok)
+        if fault is not None:
+            raise ValueError(f"{fn}: {what} {k!r} vector {fault}")
+
+
+def _checked_vec(vec: str, key: str, dim: int, fn: str):
+    """``vec`` as ``array<double>``, raising AT EXECUTION on the
+    ``_vector_fault`` cases a write refuses: a NULL, wrong-size, NaN
+    or infinite vector would mis-encode and corrupt or fail every later
+    query that reaches it. (Zero vectors are kept; ``_query`` skips them.)
+    Folded into the value expression like ``_key_as_n``: no extra pass
+    over the batch."""
+    v = F.col(vec).cast("array<double>")
+    fault = (
+        F.when(v.isNull(), F.lit("is NULL"))
+        .when(
+            F.size(v) != dim,
+            F.concat(
+                F.lit("has "), F.size(v).cast("string"),
+                F.lit(f" elements, not the index dimension {dim}"),
+            ),
+        )
+        .when(
+            F.exists(v, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))),
+            F.lit("has a non-finite element"),
+        )
+    )
+    msg = F.concat(
+        F.lit(f"{fn}: key "), F.col(key).cast("string"), F.lit(" vector "), fault
+    )
+    return (
+        F.when(fault.isNotNull(), F.raise_error(msg).cast("array<double>"))
+        .otherwise(v)
     )
 
 
@@ -229,8 +298,6 @@ def _adaptive_probes(q_mat, centroids, counts: dict[int, int], nprobe: int, need
     ONLY, which is the cheap and correct direction. Driver-side over
     nlist-sized arrays; returns (per-query cell lists, sorted union
     for the row-group-pruning ``isin``)."""
-    import numpy as np
-
     ct = np.ascontiguousarray(centroids.T)
     c_sq = (centroids * centroids).sum(axis=1)
     scores = -2.0 * (q_mat @ ct) + c_sq
@@ -260,6 +327,65 @@ class _Geometry(NamedTuple):
     books: list[np.ndarray] | None
 
 
+# committed geometry by (resolved store root, table, base file list),
+# least recently used first. Data files are immutable and uuid-named and
+# geometry rows only ever land in the base (``_build`` commits a
+# replace), so an entry never goes stale; the bound only caps memory.
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_SIZE = 32
+_MEMO_LOCK = threading.Lock()
+
+
+def _memo_key(store, table: str, files: list[str]) -> tuple:
+    return (str(store.root.resolve()), table, tuple(files))
+
+
+def _memo_get(key: tuple):
+    """The remembered ``(centroids, codebooks)`` under ``key``, or None."""
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+        if hit is not None:
+            _MEMO.move_to_end(key)
+        return hit
+
+
+def _memo_put(key: tuple, cents, books) -> None:
+    """Remember a geometry; its arrays become read-only, so a caller
+    that writes into them fails instead of corrupting later queries."""
+    for a in [cents, *(books or [])]:
+        if a is not None:
+            a.flags.writeable = False
+    with _MEMO_LOCK:
+        _MEMO[key] = (cents, books)
+        _MEMO.move_to_end(key)
+        while len(_MEMO) > _MEMO_SIZE:
+            _MEMO.popitem(last=False)
+
+
+def _collect_geometry(base: DataFrame):
+    """``(centroids | None, codebooks | None)`` from the ``n IS NULL``
+    rows of ``base``: centroids ordered by cell id, codebooks by
+    subspace, then code. One collect."""
+    cols = set(base.columns)
+    cents: dict[int, list[float]] = {}
+    books: dict[int, dict[int, list[float]]] = {}
+    geo = [c for c in ("cell", "sub", "code", "v") if c in cols]
+    for r in base.filter(F.col("n").isNull()).select(*geo).collect():
+        d = r.asDict()
+        if d.get("sub") is None:
+            cents[int(d["cell"])] = d["v"]
+        else:
+            books.setdefault(int(d["sub"]), {})[int(d["code"])] = d["v"]
+
+    def mat(by):
+        return np.asarray([by[i] for i in sorted(by)], dtype=np.float64)
+
+    return (
+        mat(cents) if cents else None,
+        [mat(books[s]) for s in sorted(books)] or None,
+    )
+
+
 def _geometry(
     spark: SparkSession, store, table: str, version: int | None = None,
     family: str | None = None, fn: str = "ann_index", collect: bool = True,
@@ -267,12 +393,16 @@ def _geometry(
 ) -> _Geometry:
     """The one geometry reader: snapshot ``version`` of ``table``, its
     family (from the layout's column set), and — unless ``collect`` is
-    off — the committed centroids (ordered by cell id) and codebooks
-    (ordered by subspace, then code). Raises ``ValueError`` when the
-    layout is not an index, when ``family`` is given and the table
-    holds another one, and (``require``) when a geometry part the
-    layout carries has no committed rows — e.g. after a truncate."""
-    snap = store.read(spark, table, version=version)
+    off — the committed centroids and codebooks (``_collect_geometry``)
+    of that same version, from the memo or from its base files. Raises
+    ``ValueError`` when the layout is not an index, when ``family`` is
+    given and the table holds another one, and (``require``) when a
+    geometry part the layout carries has no committed rows — e.g.
+    after a truncate."""
+    # one resolved version for the snapshot AND the geometry: a commit
+    # landing between the two reads cannot mix two snapshots
+    v = store.latest_version(table) if version is None else version
+    snap = store.read(spark, table, version=v)
     cols = set(snap.columns)
     found = next((f for f, c in _COLUMNS.items() if cols == set(c)), None)
     if found is None:
@@ -286,31 +416,22 @@ def _geometry(
         )
     if not collect:
         return _Geometry(found, snap, None, None)
-    cents: dict[int, list[float]] = {}
-    books: dict[int, dict[int, list[float]]] = {}
-    geo = [c for c in ("cell", "sub", "code", "v") if c in cols]
-    for r in snap.filter(F.col("n").isNull()).select(*geo).collect():
-        d = r.asDict()
-        if d.get("sub") is None:
-            cents[int(d["cell"])] = d["v"]
-        else:
-            books.setdefault(int(d["sub"]), {})[int(d["code"])] = d["v"]
+    files, base = store.read_base(spark, table, v)
+    key = _memo_key(store, table, files)
+    hit = _memo_get(key)
+    if hit is None:
+        hit = _collect_geometry(base)
+        _memo_put(key, *hit)
+    cents, books = hit
     if require:
         for part, col, have in (
             ("quantizer", "cell", cents), ("codebooks", "sub", books)
         ):
-            if col in cols and not have:
+            if col in cols and have is None:
                 raise ValueError(
                     f"{found} index {table!r} has no committed {part}"
                 )
-
-    def mat(by):
-        return np.asarray([by[i] for i in sorted(by)], dtype=np.float64)
-
-    return _Geometry(
-        found, snap, mat(cents) if cents else None,
-        [mat(books[s]) for s in sorted(books)] or None,
-    )
+    return _Geometry(found, snap, cents, books)
 
 
 def _sample(df: DataFrame, key: str, seed: int, n: int) -> list:
@@ -392,9 +513,12 @@ def _build(
 ) -> int:
     """Fit a geometry on the hash-ordered sample of ``rows`` (sized by
     ``quantizer_sample_n`` of the larger of nlist/n_codes), encode
-    every row through it, and commit geometry + vector rows in ONE
-    version: an append for an index build, a replace for a refit.
-    The corpus is read twice (sample, encode) and never shuffled.
+    every row through it, and commit geometry + vector rows as ONE
+    replace version, so the geometry sits in the base even when the
+    table carries pending delta layers (an append there would land as
+    a fresh-only layer, outside what ``_geometry`` reads), then seed the
+    geometry memo under the committed base. The corpus is read twice
+    (sample, encode) and never shuffled.
     Vectors are normalized for the PQ families; IVF fits raw vectors.
     IVF-PQ clamps its code count to the sample, PQ keeps the requested
     one. A refit refuses a sample smaller than the geometry it would
@@ -411,6 +535,11 @@ def _build(
             f"{fn}: index {table!r} holds no vectors" if refit
             else f"{fn}: empty corpus"
         )
+    # the index dimension is the sample's most common vector length
+    lens = [len(r["sv"]) for r in sample if r["sv"] is not None]
+    dim = max(set(lens), key=lens.count) if lens else 0
+    _require_vectors([r["sk"] for r in sample], [r["sv"] for r in sample],
+                     dim, fn, "key", zero_ok=True)
     x = np.asarray([r["sv"] for r in sample], dtype=np.float64)
     if m_sub is not None:
         x = normalize_rows(x)
@@ -430,10 +559,14 @@ def _build(
         n_codes = min(n_codes, len(x))
     cents, books = _fit(x, nlist, m_sub, n_codes, seed)
     n = F.col("n") if refit else _key_as_n(key, fn)
-    assign = _encode(rows, n, F.col(vec).cast("array<double>"), cents, books)
+    assign = _encode(rows, n, _checked_vec(vec, key, dim, fn), cents, books)
     geo = _geometry_rows(spark, family, cents, books)
-    commit = store.replace if refit else store.append
-    return commit(geo.unionByName(assign), table)
+    v = store.replace(geo.unionByName(assign), table)
+    # parquet round-trips float64 bit-exactly, so the fitted (C-order
+    # float64) arrays are the ones a collect of the committed rows builds
+    files, _ = store.read_base(spark, table, v)
+    _memo_put(_memo_key(store, table, files), cents, books)
+    return v
 
 
 def _index(
@@ -443,7 +576,9 @@ def _index(
     """Build and commit a new index; refuses a table that already holds
     committed geometry (rebuild = ``store.truncate(table)`` first, or a
     new table: replacing the geometry under committed vector rows
-    would orphan or mis-score all of them)."""
+    would orphan or mis-score all of them). An existing table without
+    geometry is started over: the build's replace commit drops its
+    rows and any pending delta layers."""
     fn = f"{family}_index"
     _require_integral_key(corpus, key, fn)
     if store.exists(table):
@@ -497,9 +632,16 @@ def _encode_committed(batch: DataFrame, store, table: str, key: str,
     key."""
     g = _geometry(batch.sparkSession, store, table, family=family, fn=fn)
     return _encode(
-        batch, _key_as_n(key, fn), F.col(vec).cast("array<double>"),
+        batch, _key_as_n(key, fn), _checked_vec(vec, key, _dim(g), fn),
         g.centroids, g.books,
     ).dropDuplicates(["n"])
+
+
+def _dim(g: _Geometry) -> int:
+    """The vector dimension the committed geometry encodes."""
+    if g.centroids is not None:
+        return g.centroids.shape[1]
+    return sum(b.shape[1] for b in g.books)
 
 
 def _probe_order(q_mat: np.ndarray, cents: np.ndarray, l2: bool) -> np.ndarray:
@@ -531,7 +673,10 @@ def _query(
     the ADC lookup tables are built driver-side from the (normalized)
     queries and the scan keeps a ``rerank`` shortlist (default 4k) per
     query — IVF-PQ's probe mask scores unprobed cells as +inf. The
-    survivors get one exact-cosine rerank and the rank tail."""
+    survivors get one exact-cosine rerank and the rank tail; a stored
+    zero vector is skipped there. A query vector that is
+    NULL, of another dimension, non-finite or of zero norm raises a
+    ``ValueError`` naming its key."""
     fn = f"{family}_query"
     spark = queries.sparkSession
     g = _geometry(spark, store, table, version, family, fn)
@@ -545,6 +690,9 @@ def _query(
                            F.col(vec).cast("array<double>").alias("qv")).collect()
     if not qrows:
         return local_df(spark, [], out_schema)
+    dim = _dim(g)
+    _require_vectors([r["q"] for r in qrows], [r["qv"] for r in qrows], dim,
+                     fn, "query")
     q_mat = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
     if books is not None:
         q_mat = normalize_rows(q_mat)
@@ -565,7 +713,6 @@ def _query(
         # driver-known probe list -> parquet row-group pruning
         scan = scan.filter(F.col("cell").isin(probed))
     qv = [[float(x) for x in r["qv"]] for r in qrows]
-    dim = cents.shape[1] if cents is not None else sum(b.shape[1] for b in books)
     if books is None:
         qx = local_df(
             spark,
@@ -599,7 +746,11 @@ def _query(
             f"qi int, q {qtype}, qv array<double>",
         )
         scored = short.join(F.broadcast(qdf), "qi")
-    scored = scored.select("q", "n", cosine_fixed("qv", "cv", dim).alias("score"))
+    # a stored zero vector has no direction: skip it rather than divide
+    # by its norm (the same sum cosine_fixed takes) and fail the query
+    scored = scored.filter(dot_fixed("cv", "cv", dim) > 0).select(
+        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
+    )
     order = [F.col("score").desc(), F.col("n").asc()]
     return ranked_top_k_by_group(scored, k, "q", order)
 
@@ -1173,10 +1324,11 @@ def ann_compact_due(
       delta layers now, so the disease they accrete is READ
       amplification, not dead bytes. Planning a read costs 0 Spark
       jobs at any layer count, and every action over it pays one
-      tombstone build whatever the count — at 8 layers the geometry
-      collect runs 2 jobs and an ``ivfpq_query`` 8, against 1 and 6
-      on a folded index. What each layer still adds is one union
-      branch, i.e. one more parquet scan per action. ``optimize``
+      tombstone build whatever the count — at 8 layers an
+      ``ivfpq_query`` runs 6 jobs, against 5 on a folded index; the
+      geometry comes from the base files and the memo, so layers do
+      not touch it. What each layer still adds is one union branch,
+      i.e. one more parquet scan per action. ``optimize``
       folds the layers back into a packed base).
 
     The scheduled-job form (the ``ivf_refit_due`` pattern applied to

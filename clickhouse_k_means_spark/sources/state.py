@@ -333,10 +333,11 @@ class SnapshotStateStore:
         stages the whole next snapshot. ``read()`` applies the layers
         as one union and one outer join and plans it from the manifest
         in 0 Spark jobs; an action over the read builds the tombstone
-        side once at any layer count (a collect of the index's
-        geometry rows runs 1 job on a folded index, 2 under pending
-        layers). ``optimize`` folds the layers back into a packed base
-        (and ``ann_compact_due`` tells the scheduler when). Time travel is
+        side once at any layer count (the ANN index reads its geometry
+        from the base files alone, ``read_base``: 1 job at any layer
+        count, and none once memoized). ``optimize`` folds the layers
+        back into a packed base (and ``ann_compact_due`` tells the
+        scheduler when). Time travel is
         preserved exactly like every other commit: earlier manifests
         resolve without the new layer.
 
@@ -379,6 +380,58 @@ class SnapshotStateStore:
             tombstones=None if tombstones is None else tombstones.schema,
         )
 
+    def _resolve(self, table: str, version: int | None) -> dict:
+        """The manifest of ``version`` (default: the latest)."""
+        v = self.latest_version(table) if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"SnapshotStateStore: no snapshots for {table!r}")
+        return self._read_manifest(table, v)
+
+    def _scan(
+        self, spark: SparkSession, table: str, schema: StructType,
+        names: list[str], key: str | None = None,
+    ) -> DataFrame:
+        """``names`` read under ``schema`` (under its ``key`` field alone
+        when given, for tombstone files): no footer-reading job."""
+        cols = schema if key is None else StructType([schema[key]])
+        data = self._data(table)
+        return spark.read.schema(cols).parquet(*[str(data / f) for f in names])
+
+    def _base(
+        self, spark: SparkSession, table: str, m: dict
+    ) -> tuple[StructType | None, DataFrame]:
+        """``(schema, scan of the base files)`` of manifest ``m``; the
+        schema is None before any commit with rows."""
+        files = m["files"]
+        if not m.get("schema"):
+            if files:
+                raise ValueError(
+                    f"SnapshotStateStore: {table!r} v{m['version']} lists "
+                    f"data files but records no schema"
+                )
+            # no commit with rows yet (a truncate or tombstones only)
+            return None, local_df(spark, [], schema="__empty string").limit(0)
+        schema = _parse_schema(m["schema"])
+        # an empty base (fresh truncate, or a delta-only table) still
+        # reads back with the table's typed columns
+        if not files:
+            return schema, local_df(spark, [], schema)
+        return schema, self._scan(spark, table, schema, files)
+
+    def read_base(
+        self, spark: SparkSession, table: str, version: int | None = None
+    ) -> tuple[list[str], DataFrame]:
+        """The base file names of snapshot ``version`` (default: the
+        latest) and a scan of exactly those files under the manifest
+        schema, WITHOUT the merge-on-read layers. Data files are
+        immutable and uuid-named, so anything computed from the scan
+        is a pure function of the ``(root, table, files)`` key: a
+        caller may memoize it (the ANN index does so for its
+        geometry). Planning the scan starts no Spark job; a collect
+        over it runs 1 at any layer count."""
+        m = self._resolve(table, version)
+        return list(m["files"]), self._base(spark, table, m)[1]
+
     def read(
         self, spark: SparkSession, table: str, version: int | None = None
     ) -> DataFrame:
@@ -410,39 +463,19 @@ class SnapshotStateStore:
 
         Measured on a 20k-vector IVF-PQ index on 4 cores: planning a
         read runs 0 Spark jobs, and an action over it pays one
-        tombstone build at any layer count. An ``ivfpq_query`` runs 6
-        jobs on a folded index and 8 at 2 to 9 pending layers;
+        tombstone build at any layer count. An ``ivfpq_query`` runs 5
+        jobs on a folded index and 6 at 2 to 8 pending layers (its
+        geometry comes from the base files, ``read_base``);
         ``optimize`` runs 2.
 
         Every scan — base, fresh rows, tombstones — reads under the
         schema the manifest records (tombstones under its key field),
         so planning a read starts no footer-reading Spark job at any
         layer count; commits keep that schema exact (``_commit``)."""
-        v = self.latest_version(table) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"SnapshotStateStore: no snapshots for {table!r}")
-        m = self._read_manifest(table, v)
-        files = m["files"]
+        m = self._resolve(table, version)
+        schema, df = self._base(spark, table, m)
         deltas = m.get("deltas") or []
-        if not m.get("schema"):
-            if files:
-                raise ValueError(
-                    f"SnapshotStateStore: {table!r} v{v} lists data files "
-                    f"but records no schema"
-                )
-            # no commit with rows yet (a truncate or tombstones only)
-            return local_df(spark, [], schema="__empty string").limit(0)
-        schema = _parse_schema(m["schema"])
-        data = self._data(table)
-
-        def scan(names: list[str], key: str | None = None) -> DataFrame:
-            cols = schema if key is None else StructType([schema[key]])
-            return spark.read.schema(cols).parquet(*[str(data / f) for f in names])
-
-        # an empty base (fresh truncate, or a delta-only table) still
-        # reads back with the table's typed columns
-        df = scan(files) if files else local_df(spark, [], schema)
-        if not deltas:
+        if schema is None or not deltas:
             return df
         # one fold: origin-tagged union, one outer join per tombstone
         # key column (docstring above); the tag names avoid every table
@@ -460,13 +493,14 @@ class SnapshotStateStore:
         for i, layer in enumerate(deltas, start=1):
             if layer["tombstones"]:
                 k = layer["key"]
-                t = scan(layer["tombstones"], k).select(
+                t = self._scan(spark, table, schema, layer["tombstones"], k).select(
                     F.col(k).alias(tk), F.lit(i).alias(tl)
                 )
                 tombs[k] = tombs[k].union(t) if k in tombs else t
             if layer["fresh"]:
                 out = out.unionByName(
-                    scan(layer["fresh"]).withColumn(origin, F.lit(i))
+                    self._scan(spark, table, schema, layer["fresh"])
+                    .withColumn(origin, F.lit(i))
                 )
         for k, t in tombs.items():
             out = (

@@ -25,9 +25,12 @@ refactor that regresses it fails here and not only in a bench number:
 - checkpoint blocks: an init round's state and a bisecting split's
   assignment frame and parent are released once nothing reads them,
   so stored blocks stay flat per round and per split.
-- ANN query job counts: an unfiltered ``ivf_query``/``pq_query``/
+- ANN job counts: an unfiltered ``ivf_query``/``pq_query``/
   ``ivfpq_query`` on a fresh index, and an ``ivfpq_query`` on an index
-  with 4 pending delta layers, run no more jobs than pinned.
+  with 4 pending delta layers, run no more jobs than pinned; so do an
+  ``ivfpq_append`` and an ``ann_upsert`` at 0 and at 4 pending layers
+  (the committed geometry comes from the memo), and a geometry memo
+  miss on a 4-layer table collects in 1 job.
 - snapshot reads: ``SnapshotStateStore.read`` starts no Spark job on a
   base-only table, under 8 delta layers, on a delta-only table after
   ``truncate`` and on mixed per-layer keys; a collect over 8 delta
@@ -345,11 +348,11 @@ def test_streaming_batch_single_materialization_contract(spark, tmp_path):
 
 
 # Spark jobs of one unfiltered top-k query on a freshly built
-# 64-vector index (geometry read, query collect, scan and rerank), and
-# on an IVF-PQ index carrying 4 delta layers (upsert, delete, append,
-# upsert); measured once the delta fold built its tombstone side once
-# per action
-_ANN_QUERY_JOBS = {"ivf": 5, "pq": 6, "ivfpq": 6, "ivfpq-churn": 8}
+# 64-vector index (query collect, scan and rerank), and on an IVF-PQ
+# index carrying 4 delta layers (upsert, delete, append, upsert, plus
+# the fold's tombstone build); measured once the committed geometry
+# came from the memo the build seeded, with no geometry collect
+_ANN_QUERY_JOBS = {"ivf": 4, "pq": 5, "ivfpq": 5, "ivfpq-churn": 6}
 
 
 @pytest.mark.parametrize("case", ["ivf", "pq", "ivfpq", "ivfpq-churn"])
@@ -394,6 +397,75 @@ def test_ann_query_job_count(spark, tmp_path, case):
         ).collect()
     assert len(rows) == 10 and {r["q"] for r in rows} == {3, 40}
     assert len(jobs) <= _ANN_QUERY_JOBS[case], jobs
+
+
+# Spark jobs of one 2-vector ``ivfpq_append`` / ``ann_upsert`` on the
+# same 64-vector IVF-PQ index at 0 and at 4 pending delta layers
+# (``ann_delete`` layers); measured on 4 local cores with the geometry
+# served from the memo the build seeded (before the memo: 8, 10, 8, 9)
+_ANN_WRITE_JOBS = {
+    ("append", 0): 7, ("append", 4): 8, ("upsert", 0): 7, ("upsert", 4): 7,
+}
+
+
+def _ivfpq_fixture(spark, store, layers: int):
+    """A 64-vector IVF-PQ index in ``store`` with ``layers`` pending
+    single-key delete layers."""
+    import math
+
+    from clickhouse_k_means_spark.operators import ann_index
+
+    vecs = spark.createDataFrame(
+        [(i, [math.cos(i * 0.1), math.sin(i * 0.1), 0.1 * (i % 3), 0.2])
+         for i in range(64)],
+        "vec_id bigint, embedding array<double>",
+    )
+    ann_index.ivfpq_index(vecs, store, nlist=4, m_sub=2, n_codes=4, seed=42)
+    for i in range(layers):
+        ann_index.ann_delete(spark, [10 + i], store, "ivfpq_index")
+    assert store.delta_layers("ivfpq_index") == layers
+
+
+@pytest.mark.parametrize("verb", ["append", "upsert"])
+@pytest.mark.parametrize("layers", [0, 4])
+def test_ann_write_job_count(spark, tmp_path, verb, layers):
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    _ivfpq_fixture(spark, store, layers)
+    batch = spark.createDataFrame(
+        [(3 if verb == "upsert" else 100, [0.5, 0.5, 0.1, 0.2]),
+         (5 if verb == "upsert" else 101, [0.3, -0.5, 0.2, 0.2])],
+        "vec_id bigint, embedding array<double>",
+    )
+    write = ann_index.ivfpq_append if verb == "append" else ann_index.ann_upsert
+    with _job_ids(spark.sparkContext, f"ann-{verb}-{layers}") as jobs:
+        write(batch, store, "ivfpq_index")
+    live = store.read(spark, "ivfpq_index").filter("n IS NOT NULL")
+    assert live.count() == 64 - layers + (2 if verb == "append" else 0)
+    assert len(jobs) <= _ANN_WRITE_JOBS[(verb, layers)], jobs
+
+
+def test_geometry_memo_miss_collects_in_one_job(spark, tmp_path):
+    """A geometry memo miss reads the base files alone: one collect at
+    any layer count, and the arrays equal what the build seeded."""
+    import numpy as np
+
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    _ivfpq_fixture(spark, store, 4)
+    seeded = ann_index._geometry(spark, store, "ivfpq_index")
+    ann_index._MEMO.clear()
+    with _job_ids(spark.sparkContext, "ann-geometry-miss") as jobs:
+        cold = ann_index._geometry(spark, store, "ivfpq_index")
+    assert len(jobs) == 1, jobs
+    for a, b in zip([seeded.centroids, *seeded.books],
+                    [cold.centroids, *cold.books]):
+        assert a.dtype == b.dtype == np.float64
+        assert a.shape == b.shape and a.tobytes() == b.tobytes()
 
 
 def _job_free_read_table(spark, store, shape: str) -> list[int]:

@@ -296,3 +296,268 @@ def test_ivf_refit_inherits_committed_nlist(spark, tmp_path):
     assert len(_geometry(spark, store, "ivf_index").centroids) == 6
     ivf_refit(spark, store, nlist=3)  # explicit resize still works
     assert len(_geometry(spark, store, "ivf_index").centroids) == 3
+
+
+# ---- ANN geometry memo and vector checks ------------------------------
+
+
+def _ann_vectors(spark, ids, phase=0.0, dim=8):
+    return spark.createDataFrame(
+        [(i, [math.cos(i * 0.37 + d + phase) for d in range(dim)]) for i in ids],
+        "vec_id bigint, embedding array<double>",
+    )
+
+
+def _ann_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+_STALE_CASES = [
+    "refit_pinned", "rollback", "truncate_rebuild", "optimize_vacuum",
+    "second_store", "two_tables", "wrong_family",
+]
+
+
+@pytest.mark.parametrize("case", _STALE_CASES)
+def test_ann_memo_never_serves_stale_geometry(spark, tmp_path, case):
+    """The geometry memo is keyed on (resolved root, table, base file
+    list): after each change below, a verb's rows with the memo warm
+    equal the same call's rows after the memo is cleared, and a wrapper
+    of another family still raises its named error."""
+    from clickhouse_k_means_spark.operators import ann_index as A
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    vecs = _ann_vectors(spark, range(120))
+    queries = _ann_vectors(spark, [3, 50, 99], phase=0.2).withColumnRenamed(
+        "vec_id", "q"
+    )
+
+    def query(s=store, table="ivf_index", **kw):
+        return _ann_rows(A.ivf_query(queries, s, table, k=4, nprobe=2, **kw))
+
+    v1 = A.ivf_index(vecs, store, nlist=4, seed=1)
+    if case in ("refit_pinned", "rollback"):
+        before = query()
+    if case == "refit_pinned":
+        A.ivf_refit(spark, store, nlist=3, seed=2)
+        query()
+
+        def call():
+            return query(version=v1), query()
+    elif case == "rollback":
+        A.ivf_refit(spark, store, nlist=3, seed=2)
+        query()
+        store.rollback("ivf_index", v1)
+
+        def call():
+            return query()
+    elif case == "truncate_rebuild":
+        store.truncate("ivf_index")
+        A.ivf_index(_ann_vectors(spark, range(80), phase=1.0), store,
+                    nlist=3, seed=5)
+
+        def call():
+            return query()
+    elif case == "optimize_vacuum":
+        A.ann_upsert(_ann_vectors(spark, [3, 7], phase=0.5), store, "ivf_index")
+        A.ann_delete(spark, [50], store, "ivf_index")
+        query()
+        store.optimize(spark, "ivf_index")
+        store.vacuum("ivf_index")
+
+        def call():
+            return query()
+    elif case == "second_store":
+        (tmp_path / "x").mkdir()
+        other = SnapshotStateStore(str(tmp_path / "x" / ".." / "s"))
+        A.ivf_refit(spark, other, nlist=3, seed=2)
+
+        def call():
+            return query(), query(other)
+    elif case == "two_tables":
+        A.ivf_index(_ann_vectors(spark, range(90), phase=2.0), store, "b",
+                    nlist=3, seed=9)
+
+        def call():
+            return query(), query(table="b")
+    else:
+        A.pq_index(vecs, store, "p", m_sub=2, n_codes=4, seed=1)
+        A.pq_query(queries, store, "p", k=4).collect()
+
+        def call():
+            with pytest.raises(
+                ValueError, match="holds a pq index, not a ivf index"
+            ):
+                query(table="p")
+            return query()
+    warm = call()
+    A._MEMO.clear()
+    assert call() == warm
+    if case == "refit_pinned":
+        assert warm[0] == before
+    if case == "rollback":
+        assert warm == before
+
+
+def test_ann_memo_arrays_are_read_only(spark, tmp_path):
+    from clickhouse_k_means_spark.operators import ann_index as A
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    A.ivfpq_index(_ann_vectors(spark, range(64)), store, nlist=2, m_sub=2,
+                  n_codes=4, seed=3)
+    for cold in (False, True):
+        if cold:
+            A._MEMO.clear()
+        g = A._geometry(spark, store, "ivfpq_index")
+        for a in [g.centroids, *g.books]:
+            with pytest.raises(ValueError, match="read-only"):
+                a[0, 0] = 1.0
+
+
+def test_ann_memo_is_bounded_and_consistent_under_threads():
+    """Threads that put and get memo entries concurrently never read
+    another key's value, and the memo never exceeds its bound."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    from clickhouse_k_means_spark.operators import ann_index as A
+
+    errors: list[str] = []
+
+    def worker(w: int) -> None:
+        for i in range(300):
+            key = ("/stress", f"t{w}", (str(i),))
+            A._memo_put(key, np.full((1, 2), float(w * 1000 + i)), None)
+            got = A._memo_get(key)
+            if got is not None and got[0][0, 0] != w * 1000 + i:
+                errors.append(f"{key} read {got[0][0, 0]}")
+            if len(A._MEMO) > A._MEMO_SIZE:
+                errors.append(f"{len(A._MEMO)} entries")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+        A._MEMO.clear()
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+
+
+def test_ann_build_puts_geometry_in_base_under_pending_layer(spark, tmp_path):
+    """A build on a geometry-less table with a pending delta layer (a
+    truncate, then a delete-only CDC batch) commits its geometry to
+    the base: no layer survives the build, and a cold memo reads the
+    geometry back from the base files."""
+    from clickhouse_k_means_spark.operators import ann_index as A
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    vecs = _ann_vectors(spark, range(100))
+    A.ivfpq_index(vecs, store, nlist=4, m_sub=2, n_codes=4, seed=1)
+    store.truncate("ivfpq_index")
+    A.ann_cdc_apply(
+        spark.createDataFrame(
+            [(5, None, "d")], "vec_id bigint, embedding array<double>, op string"
+        ),
+        store, "ivfpq_index",
+    )
+    assert store.delta_layers("ivfpq_index") == 1
+    A.ivfpq_index(vecs, store, nlist=4, m_sub=2, n_codes=4, seed=2)
+    assert store.delta_layers("ivfpq_index") == 0
+    queries = _ann_vectors(spark, [3, 60], phase=0.1)
+    warm = _ann_rows(A.ivfpq_query(queries, store, k=3, query_key="vec_id"))
+    A._MEMO.clear()
+    _, base = store.read_base(spark, "ivfpq_index")
+    assert base.filter("n IS NULL").count() == 4 + 2 * 4
+    assert _ann_rows(A.ivfpq_query(queries, store, k=3, query_key="vec_id")) == warm
+    assert len(warm) == 6
+
+
+@pytest.fixture(scope="module")
+def ann_indexes(spark, tmp_path_factory):
+    """One small index per family; vector 0 is the zero vector."""
+    from clickhouse_k_means_spark.operators import ann_index as A
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path_factory.mktemp("ann_checks")))
+    vecs = _ann_vectors(spark, range(1, 120)).unionByName(
+        spark.createDataFrame([(0, [0.0] * 8)], "vec_id bigint, embedding array<double>")
+    )
+    A.ivf_index(vecs, store, nlist=4, seed=1)
+    A.pq_index(vecs, store, m_sub=2, n_codes=4, seed=1)
+    A.ivfpq_index(vecs, store, nlist=4, m_sub=2, n_codes=4, seed=1)
+    return store
+
+
+def _one_vector(spark, key, v, col="vec_id"):
+    return spark.createDataFrame([(key, v)], f"{col} bigint, embedding array<double>")
+
+
+_BAD_VECTORS = {
+    "nan": ([0.5] * 7 + [float("nan")], "non-finite"),
+    "inf": ([float("-inf")] + [0.5] * 7, "non-finite"),
+    "short": ([0.5] * 5, "has 5 elements, not the index dimension 8"),
+    "zero": ([0.0] * 8, "zero norm"),
+}
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
+@pytest.mark.parametrize("bad", list(_BAD_VECTORS))
+def test_ann_query_rejects_bad_vector(spark, ann_indexes, family, bad):
+    from clickhouse_k_means_spark.operators import ann_index as A
+
+    vec, reason = _BAD_VECTORS[bad]
+    with pytest.raises(ValueError, match=f"{family}_query: query 7 vector .*{reason}"):
+        getattr(A, f"{family}_query")(_one_vector(spark, 7, vec, "q"), ann_indexes)
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
+@pytest.mark.parametrize("bad", ["nan", "inf", "short"])
+def test_ann_append_rejects_bad_vector(spark, ann_indexes, family, bad):
+    from clickhouse_k_means_spark.operators import ann_index as A
+
+    vec, reason = _BAD_VECTORS[bad]
+    table = f"{family}_index"
+    before = ann_indexes.latest_version(table)
+    with pytest.raises(Exception, match=f"{family}_append: key 500 vector .*{reason}"):
+        getattr(A, f"{family}_append")(_one_vector(spark, 500, vec), ann_indexes)
+    with pytest.raises(Exception, match=f"ann_upsert: key 5 vector .*{reason}"):
+        A.ann_upsert(_one_vector(spark, 5, vec), ann_indexes, table)
+    assert ann_indexes.latest_version(table) == before
+
+
+def test_ann_index_rejects_bad_vector(spark, tmp_path):
+    from clickhouse_k_means_spark.operators import ann_index as A
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    vecs = _ann_vectors(spark, range(40)).unionByName(
+        _one_vector(spark, 40, [1.0] * 7 + [float("nan")])
+    )
+    with pytest.raises(ValueError, match="ivf_index: key 40 vector .*non-finite"):
+        A.ivf_index(vecs, store, nlist=2)
+    assert not store.exists("ivf_index")
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq", "ivfpq"])
+def test_ann_query_skips_stored_zero_vector(spark, ann_indexes, family):
+    """A stored zero vector has no direction: a query whose rerank
+    reaches it (every cell probed, every row shortlisted) ranks the
+    other rows instead of dividing by its zero norm."""
+    from clickhouse_k_means_spark.operators import ann_index as A
+
+    kw = {"ivf": {"nprobe": 4}, "pq": {"rerank": 500},
+          "ivfpq": {"nprobe": 4, "rerank": 500}}[family]
+    q = _ann_vectors(spark, [3], phase=0.1).withColumnRenamed("vec_id", "q")
+    rows = getattr(A, f"{family}_query")(q, ann_indexes, k=200, **kw).collect()
+    assert len(rows) == 119 and 0 not in {r["n"] for r in rows}
