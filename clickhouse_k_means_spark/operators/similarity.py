@@ -1,7 +1,8 @@
 """Similarity search over an embedding column (``array<double>``).
 
-Two paths, same distance core (functions/distance.py) as the k-means
-engine — the reference's L2Distance workhorse generalized to cosine:
+Query-batch top-k and all-points kNN, on the same distance core
+(functions/distance.py) as the k-means engine — the reference's
+L2Distance workhorse generalized to cosine:
 
 - ``brute_force_topk``: every query × every corpus row, then per-query
   top-k. The queries side is broadcast (a handful to thousands of
@@ -16,6 +17,15 @@ engine — the reference's L2Distance workhorse generalized to cosine:
   Queries probe their own bucket (plus optional multi-probe neighbor
   buckets at Hamming distance 1); candidates shrink ~2^n_bits-fold
   before exact re-ranking.
+- ``ivf_topk`` / ``pq_topk``: the persistent index's fit, encode and
+  search verbs (``ann_index._fit_rows``, ``_encode``, ``_search``) run
+  per call without the commit, so they return what ``ivf_index`` +
+  ``ivf_query`` (``pq_index`` + ``pq_query``) return and raise the
+  same named vector errors.
+- ``knn_join`` / ``knn_join_partitioned``: every point's top-k from
+  SRP band collisions (within IVF cells for the partitioned form,
+  whose coarse quantizer is the IVF index fit), one shared candidate,
+  exact-cosine and rank tail (``_knn_from_bands``).
 
 Physical split (round 3): multi-plane projections (SRP bucketing, IVF
 cell assignment) are matrix multiplies and run as Arrow-batched numpy
@@ -26,12 +36,14 @@ vector.py's module docstring for the measured rationale.
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.functions.distance import (
+    _HOF_DIM_CUTOFF,
     cosine_fixed,
     cosine_similarity,
     dot,
@@ -41,14 +53,15 @@ from clickhouse_k_means_spark.functions.distance import (
 )
 from clickhouse_k_means_spark.functions.vector import (
     nearest_cells_batch,
-    numpy_kmeans,
-    quantizer_sample_n,
     srp_buckets_batch,
 )
-from clickhouse_k_means_spark.operators.topk import (
-    ranked_top_k_by_group,
-    top_k_by_group,
+from clickhouse_k_means_spark.operators.ann_index import (
+    _checked_vec,
+    _encode,
+    _fit_rows,
+    _search,
 )
+from clickhouse_k_means_spark.operators.topk import ranked_top_k_by_group
 from clickhouse_k_means_spark.sources.dataset import local_df
 
 
@@ -186,11 +199,6 @@ def _cosine_scored(
     r14 on the fixture: 0 differing unrounded rows over knn_join's
     2.5M-pair verify; 9.6 s → 2.7 s at dim 64). Below the cutoff the
     single unrolled expression codegens and is kept unchanged."""
-    from clickhouse_k_means_spark.functions.distance import (
-        _HOF_DIM_CUTOFF,
-        dot_fixed,
-    )
-
     if dim >= _HOF_DIM_CUTOFF:
         van = va.withColumn("na", F.sqrt(dot_fixed("ea", "ea", dim)))
         vbn = vb.withColumn("nb", F.sqrt(dot_fixed("eb", "eb", dim)))
@@ -241,6 +249,24 @@ def _verified_ordered_pairs(
     return scored.filter(F.col("sim") >= threshold)
 
 
+def _fitted_topk(
+    queries: DataFrame, corpus: DataFrame, k: int, nprobe, rerank, seed: int,
+    query_key: str, corpus_key: str, vec: str, fn: str, nlist=None,
+    m_sub=None, n_codes=None,
+) -> DataFrame:
+    """The persistent index's verbs without the commit: fit a geometry
+    on the corpus sample (``ann_index._fit_rows``), encode every corpus
+    row through it (``_encode``, with the ``_checked_vec`` vector check
+    keyed by ``corpus_key``) and ``_search`` the encoded rows. ``q`` and
+    ``n`` keep the caller's key types."""
+    cents, books, dim = _fit_rows(corpus, corpus_key, vec, nlist, m_sub,
+                                  n_codes, seed, fn)
+    scan = _encode(corpus, F.col(corpus_key).alias("n"),
+                   _checked_vec(vec, corpus_key, dim, fn), cents, books)
+    return _search(queries, scan, cents, books, k, nprobe, rerank, query_key,
+                   vec, fn)
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -252,53 +278,22 @@ def ivf_topk(
     corpus_key: str = "n",
     vec: str = "embedding",
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse k-means quantizer + cell probe.
+    """IVF (inverted-file) ANN: coarse quantizer + cell probe,
+    ``(q, n, score, rank)``; the same rows ``ivf_index`` + ``ivf_query``
+    return, fitted per call and never committed.
 
-    The coarse quantizer trains FAISS-style on a bounded deterministic
-    sample (driver-side seeded numpy k-means — the full corpus never
-    leaves the executors); corpus rows are bucketed by their nearest
-    of ``nlist`` centroids via one Arrow-batched matmul (one narrow
-    pass — the cell table is what a real deployment materializes /
-    partitions by); each query probes its ``nprobe`` nearest cells and
-    exact-cosine-reranks only those rows. Candidate work drops
-    ~nlist/nprobe-fold vs brute force.
+    The quantizer is a seeded NumPy k-means on the bounded hash-ordered
+    corpus sample (driver-side; the full corpus never leaves the
+    executors); corpus rows are bucketed by their nearest of ``nlist``
+    centroids in one Arrow-batched pass, each query probes its
+    ``nprobe`` nearest cells and only those rows get the exact-cosine
+    rerank. Candidate work drops ~nlist/nprobe-fold vs brute force. A
+    NULL, wrong-size or non-finite vector fails naming its key (a
+    ``ValueError`` when the sample or the query batch holds it, the
+    encode pass's error otherwise); so does a zero-norm query.
     """
-    import numpy as np
-
-    # Train the coarse quantizer FAISS-style: seeded numpy k-means on a
-    # bounded deterministic sample (hash-ordered TakeOrdered — one
-    # corpus pass, no shuffle of the data, works unchanged at 100 TB).
-    # The earlier MLlib quantizer spent ~15 s of tiny-job latency per
-    # call; a 2048-row driver-side fit is milliseconds and the centers
-    # become plan literals.
-    sample = (
-        corpus.select(F.col(corpus_key).alias("sk"), F.col(vec).alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(quantizer_sample_n(nlist))
-        .collect()
-    )
-    x = np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    centers = numpy_kmeans(x, k=nlist, seed=seed, n_iter=10)
-    dim = centers.shape[1]
-    centers_l = [list(map(float, c)) for c in centers]
-
-    cell1 = nearest_cells_batch(centers_l, nprobe=1)
-    cells = corpus.select(
-        F.col(corpus_key).alias("n"),
-        F.col(vec).cast("array<double>").alias("cv"),
-        cell1(F.col(vec).cast("array<double>"))[0].alias("cell"),
-    )
-    cellp = nearest_cells_batch(centers_l, nprobe=nprobe)
-    q = queries.select(
-        F.col(query_key).alias("q"),
-        F.col(vec).cast("array<double>").alias("qv"),
-        F.explode(cellp(F.col(vec).cast("array<double>"))).alias("cell"),
-    )
-    scored = cells.join(F.broadcast(q), "cell").select(
-        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
-    )
-    order = [F.col("score").desc(), F.col("n").asc()]
-    return ranked_top_k_by_group(scored, k, "q", order)
+    return _fitted_topk(queries, corpus, k, nprobe, None, seed, query_key,
+                        corpus_key, vec, "ivf_topk", nlist=nlist)
 
 
 def srp_bucketed_topk(
@@ -382,83 +377,26 @@ def pq_topk(
     vec: str = "embedding",
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al., TPAMI 2011): codebooks →
-    m-byte codes → ADC shortlist → exact re-rank. (q, n, score, rank).
+    m-byte codes → ADC shortlist → exact re-rank, ``(q, n, score,
+    rank)``; the same rows ``pq_index`` + ``pq_query`` return, fitted
+    per call and never committed.
 
     The 100 TB story is MEMORY, complementing IVF's compute story: the
-    corpus is encoded once into ``m_sub`` small ints per row (one
-    narrow Arrow pass — this code column is what a real deployment
-    materializes; 8 bytes/row vs 512 for raw 64-dim doubles), and the
-    ADC scan reads ONLY that column — per-query lookup tables baked
-    into the UDF closure score a row with m adds, no vector access, no
-    shuffle. Only the ``rerank`` shortlist (default 4k per query)
-    touches original vectors for exact-cosine re-ranking, so precision
-    of the final ordering is exact over the shortlist and only recall
-    is approximate.
-
-    Codebooks train per-subspace on the same bounded deterministic
-    2048-row sample protocol as ``ivf_topk`` (seeded numpy k-means,
-    driver-side, centers become closure constants). Vectors are
-    L2-normalized before training/encoding so squared-L2 ADC rank
-    agrees with the cosine metric of the exact paths (|a-b|² = 2-2cosθ
-    on unit vectors). Queries are collected driver-side — same bounded
-    query-batch contract as ``brute_force_topk``'s broadcast side.
+    corpus is encoded into ``m_sub`` small ints per row in one narrow
+    Arrow pass, and the ADC scan scores a row from those codes with m
+    adds against per-query lookup tables. Only the ``rerank`` shortlist
+    (default 4k per query) touches original vectors for the
+    exact-cosine rerank, so precision of the final ordering is exact
+    over the shortlist and only recall is approximate. Codebooks train
+    per subspace on the same sample protocol as ``ivf_topk``, on
+    L2-normalized vectors, so squared-L2 ADC rank agrees with cosine
+    (|a-b|² = 2-2cosθ on unit vectors). Queries are collected
+    driver-side (the bounded query-batch contract) and checked like
+    ``ivf_topk``'s.
     """
-    import numpy as np
-
-    from clickhouse_k_means_spark.functions.vector import (
-        normalize_rows,
-        pq_adc_batch,
-        pq_encode_batch,
-    )
-
-    rerank = rerank or 4 * k
-    sample = (
-        corpus.select(F.col(corpus_key).alias("sk"), F.col(vec).alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        .limit(2048)
-        .collect()
-    )
-    x = normalize_rows(np.asarray([r["sv"] for r in sample], dtype=np.float64))
-    dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    codebooks = [
-        numpy_kmeans(x[:, s * dsub : (s + 1) * dsub], k=n_codes, seed=seed + s, n_iter=10)
-        for s in range(m_sub)
-    ]
-
-    qrows = queries.select(F.col(query_key).alias("q"), F.col(vec).alias("qv")).collect()
-    q_mat = normalize_rows(np.asarray([r["qv"] for r in qrows], dtype=np.float64))
-
-    encode = pq_encode_batch(codebooks)
-    adc = pq_adc_batch(codebooks, q_mat)
-    # one narrow corpus pass: encode + ADC against every query; the
-    # original vector rides along only to feed the shortlist re-rank
-    # (a real deployment splits this into a stored code column + a
-    # gather join — same plan shape, different storage)
-    coded = corpus.select(
-        F.col(corpus_key).alias("n"),
-        F.col(vec).cast("array<double>").alias("cv"),
-        encode(F.col(vec).cast("array<double>")).alias("codes"),
-    )
-    scored = coded.select(
-        "n", "cv", F.posexplode(adc("codes")).alias("qi", "ad2")
-    )
-    short = top_k_by_group(
-        scored, rerank, "qi", [F.col("ad2").asc(), F.col("n").asc()]
-    )
-    spark = corpus.sparkSession
-    qdf = local_df(
-        spark,
-        [(i, r["q"], [float(v) for v in r["qv"]]) for i, r in enumerate(qrows)],
-        "qi int, q bigint, qv array<double>",
-    )
-    rer = short.join(F.broadcast(qdf), "qi").select(
-        "q", "n", cosine_fixed("qv", "cv", dim).alias("score")
-    )
-    order = [F.col("score").desc(), F.col("n").asc()]
-    return ranked_top_k_by_group(rer, k, "q", order)
+    return _fitted_topk(queries, corpus, k, None, rerank, seed, query_key,
+                        corpus_key, vec, "pq_topk", m_sub=m_sub,
+                        n_codes=n_codes)
 
 
 def _auto_n_bits(n: int, per_bucket: int = 32) -> int:
@@ -479,8 +417,6 @@ def _auto_n_bits(n: int, per_bucket: int = 32) -> int:
     bucket space by n_cells — deeper SRP codes than 16 bits mostly
     shred recall rather than buy speed, so widening the space, not
     the code, is the scale move."""
-    import math
-
     return min(16, max(4, math.ceil(math.log2(max(n, 2) / per_bucket))))
 
 
@@ -520,51 +456,50 @@ def knn_join(
     """
     head = df.select(vec).first()
     if head is None:
-        key_type = df.schema[key].dataType.simpleString()
-        return local_df(df.sparkSession,
-            [], f"a {key_type}, b {key_type}, sim double, rank int"
-        )
+        return _empty_knn(df, key)
     if n_bits is None:
         n_bits = _auto_n_bits(n_rows if n_rows is not None else df.count())
     dim = len(head[0])
-    tables = [
-        srp_hyperplanes(dim, n_bits=n_bits, seed=seed + 1000 * t)
-        for t in range(n_tables)
-    ]
-    buckets = srp_buckets_batch(tables)
-    banded = df.select(
-        F.col(key).alias("kk"), buckets(F.col(vec)).alias("bks")
-    ).select("kk", F.posexplode("bks").alias("t", "bucket"))
-    # spread the pair explosion (r14, guide §2.5 input-skew): the band
-    # table inherits the corpus scan's partitioning — ONE partition for
-    # a small single-file input — so the bucket self-join's quadratic
-    # pair generation and its map-side distinct otherwise run inside a
-    # single task (measured: the 2.5M-pair candidate pass dropped
-    # 2.0-2.2 s → 0.7-1.0 s once keyed-spread to cluster width).
-    # Conditional on the scan actually being narrower than the
-    # cluster, so a real many-partition corpus pays no extra exchange.
-    # width probed on the RAW input (same partitioning — the banding
-    # chain is narrow; probing the UDF-bearing plan would pay a
-    # pricier plan translation)
+    banded = _srp_banded(df, key, vec, dim, n_bits, n_tables, seed)
+    return _knn_from_bands(df, banded, ["t", "bucket"], key, vec, dim, k)
+
+
+def _empty_knn(df: DataFrame, key: str) -> DataFrame:
+    """The empty ``(a, b, sim, rank)`` result, keys of ``key``'s type."""
+    key_type = df.schema[key].dataType.simpleString()
+    return local_df(df.sparkSession, [],
+                    f"a {key_type}, b {key_type}, sim double, rank int")
+
+
+def _knn_from_bands(
+    df: DataFrame, banded: DataFrame, band: list[str], key: str, vec: str,
+    dim: int, k: int,
+) -> DataFrame:
+    """The kNN self-join tail of ``knn_join`` and
+    ``knn_join_partitioned``: directed pairs ``a != b`` sharing a band
+    key (the ``band`` columns of the ``k``-keyed ``banded`` rows), exact
+    cosine on those candidates, then top-``k`` per ``a``.
+
+    The band table inherits the corpus scan's partitioning (ONE
+    partition for a small single-file input), so when the raw input is
+    narrower than the cluster the pair explosion is first spread on the
+    band key (r14: the 2.5M-pair candidate pass went from 2.0-2.2 s to
+    0.7-1.0 s). The eager checkpoint after scoring is the 64 KB-codegen
+    barrier (``_verified_ordered_pairs``)."""
     sc = df.sparkSession.sparkContext
     spread = banded
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        spread = banded.repartition(sc.defaultParallelism, "t", "bucket")
+        spread = banded.repartition(sc.defaultParallelism, *band)
     cand = (
-        spread.select(F.col("kk").alias("a"), "t", "bucket")
-        .join(
-            banded.select(F.col("kk").alias("b"), "t", "bucket"),
-            ["t", "bucket"],
-        )
+        spread.select(F.col("k").alias("a"), *band)
+        .join(banded.select(F.col("k").alias("b"), *band), band)
         .filter(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
     )
     va = df.select(F.col(key).alias("a"), F.col(vec).alias("ea"))
     vb = df.select(F.col(key).alias("b"), F.col(vec).alias("eb"))
-    scored = _cosine_scored(cand, va, vb, dim).localCheckpoint(
-        eager=True  # same 64 KB-codegen barrier
-    )
+    scored = _cosine_scored(cand, va, vb, dim).localCheckpoint(eager=True)
     return ranked_top_k_by_group(
         scored, k, "a", [F.col("sim").desc(), F.col("b")]
     )
@@ -592,8 +527,6 @@ def _auto_n_cells(n: int, probe_cells: int = 2, per_bucket: int = 32) -> int:
     ``probe_cells=2``; past that, raise the sample and re-fit — the
     log-scale re-fit move the ``knn_join_partitioned`` docstring
     names (``ivf_refit`` is the persisted-index form of it)."""
-    import math
-
     target = per_bucket << 12
     return min(1024, max(probe_cells, math.ceil(n * probe_cells / target)))
 
@@ -617,12 +550,12 @@ def knn_join_partitioned(
     Why: flat SRP clamps at 16 bits (65,536 buckets/table), so beyond
     ~2M points (``per_bucket * 2^16``) bucket occupancy grows linearly
     and candidate pairs quadratically. Partitioning first multiplies
-    the bucket space: a coarse k-means quantizer (the ``ivf_topk``
-    sample protocol — 2048-row seeded driver fit, centers become plan
-    literals) assigns every point to its ``probe_cells`` nearest cells
-    (multi-assignment is the boundary-recall move: a neighbor pair
-    straddling a cell border still shares a cell when either point's
-    second-nearest is the other's first). Within a cell, SRP depth is
+    the bucket space: a coarse quantizer (the IVF index fit,
+    ``ann_index._fit_rows``) assigns every point to its
+    ``probe_cells`` nearest cells (multi-assignment is the
+    boundary-recall move: a neighbor pair straddling a cell border
+    still shares a cell when either point's second-nearest is the
+    other's first). Within a cell, SRP depth is
     derived from the EXPECTED CELL occupancy
     (``n * probe_cells / n_cells``), so the effective bucket count is
     ``n_cells × 2^bits`` per table — with ``n_cells=1024`` the O(n)
@@ -672,38 +605,18 @@ def knn_join_partitioned(
         raise ValueError(
             f"probe_cells must be in [1, n_cells]: {probe_cells}/{n_cells}"
         )
-    head = df.select(vec).first()
-    if head is None:
-        key_type = df.schema[key].dataType.simpleString()
-        return local_df(df.sparkSession,
-            [], f"a {key_type}, b {key_type}, sim double, rank int"
-        )
-    import math
-
-    import numpy as np
-
+    if df.select(vec).first() is None:
+        return _empty_knn(df, key)
     if n_cells is None:
         # self-setting cell count from one cheap count (VERDICT r9
         # item 5); the lower clamp in _auto_n_cells keeps
         # probe_cells <= n_cells by construction
         n_cells = _auto_n_cells(df.count(), probe_cells)
-
-    dim = len(head[0])
-
-    # coarse quantizer: the ivf_topk sample protocol
-    sample = (
-        df.select(F.col(key).alias("sk"), F.col(vec).alias("sv"))
-        .orderBy(F.xxhash64(F.lit(seed), F.col("sk")))
-        # sample scales with the cell count (8/centroid floor) so the
-        # auto-derived large n_cells is actually resolvable by the fit
-        .limit(quantizer_sample_n(n_cells))
-        .collect()
-    )
-    x = np.asarray([r["sv"] for r in sample], dtype=np.float64)
-    centers = numpy_kmeans(x, k=min(n_cells, len(sample)), seed=seed, n_iter=10)
-    centers_l = [list(map(float, c)) for c in centers]
-
-    cellp = nearest_cells_batch(centers_l, nprobe=probe_cells)
+    # coarse quantizer: the IVF index fit (its sample scales with the
+    # cell count, so an auto-derived large n_cells stays resolvable)
+    cents, _, dim = _fit_rows(df, key, vec, n_cells, None, None, seed,
+                              "knn_join_partitioned")
+    cellp = nearest_cells_batch(cents.tolist(), nprobe=probe_cells)
     code_bits = n_bits if n_bits is not None else 16
     tables = [
         srp_hyperplanes(dim, n_bits=code_bits, seed=seed + 1000 * t)
@@ -714,11 +627,11 @@ def knn_join_partitioned(
     # (k, cell, t, code) band rows
     coded = (
         df.select(
-            F.col(key).alias("kk"),
+            F.col(key).alias("k"),
             cellp(F.col(vec).cast("array<double>")).alias("cells"),
             buckets(F.col(vec)).alias("bks"),
         )
-        .select("kk", F.explode("cells").alias("cell"), "bks")
+        .select("k", F.explode("cells").alias("cell"), "bks")
         .localCheckpoint(eager=True)  # feeds the count agg AND banding
     )
     if n_bits is None:
@@ -741,43 +654,19 @@ def knn_join_partitioned(
         banded = (
             coded.join(F.broadcast(mask_df), "cell")
             .select(
-                "kk", "cell", F.posexplode("bks").alias("t", "code"), "mask"
+                "k", "cell", F.posexplode("bks").alias("t", "code"), "mask"
             )
             .select(
-                "kk", "cell", "t",
+                "k", "cell", "t",
                 F.col("code").bitwiseAND(F.col("mask")).alias("bucket"),
             )
         )
     else:
         banded = coded.select(
-            "kk", "cell", F.posexplode("bks").alias("t", "bucket")
+            "k", "cell", F.posexplode("bks").alias("t", "bucket")
         )
-    # spread the pair explosion (r14 — the single-task pair-generation
-    # fix shared with knn_join; conditional for the same reason)
-    sc = df.sparkSession.sparkContext
-    spread = banded
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        spread = banded.repartition(
-            sc.defaultParallelism, "cell", "t", "bucket"
-        )
-    cand = (
-        spread.select(F.col("kk").alias("a"), "cell", "t", "bucket")
-        .join(
-            banded.select(F.col("kk").alias("b"), "cell", "t", "bucket"),
-            ["cell", "t", "bucket"],
-        )
-        .filter(F.col("a") != F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    va = df.select(F.col(key).alias("a"), F.col(vec).alias("ea"))
-    vb = df.select(F.col(key).alias("b"), F.col(vec).alias("eb"))
-    scored = _cosine_scored(cand, va, vb, dim).localCheckpoint(
-        eager=True  # same 64 KB-codegen barrier
-    )
-    return ranked_top_k_by_group(
-        scored, k, "a", [F.col("sim").desc(), F.col("b")]
-    )
+    return _knn_from_bands(df, banded, ["cell", "t", "bucket"], key, vec,
+                           dim, k)
 
 
 def incremental_embed_dedup(

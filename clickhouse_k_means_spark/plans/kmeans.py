@@ -429,8 +429,6 @@ class KMeansEngine:
             nearest_cells_batch,
         )
         rng = rng or random.Random(self.seed)
-        if yh.select("Y").first() is None:
-            raise ValueError("k-means: input DataFrame is empty")
         ell = oversample or 2 * self.k
         salt = rng.randrange(2**31)
 
@@ -439,7 +437,8 @@ class KMeansEngine:
         # with different payloads (lineitem fixture), and an (hash, i)
         # tie resolved by scan order made the whole init — and the
         # final model — vary run to run (caught via kscale inertia
-        # wobble in r4).
+        # wobble in r4). No row means an empty input: this collect is
+        # also the emptiness check.
         first = (
             yh.orderBy(
                 F.xxhash64(F.lit(salt), F.col("i")).asc(),
@@ -448,9 +447,11 @@ class KMeansEngine:
             )
             .select("Y")
             .limit(1)
-            .collect()[0][0]
+            .collect()
         )
-        cands: list[list[float]] = [list(first)]
+        if not first:
+            raise ValueError("k-means: input DataFrame is empty")
+        cands: list[list[float]] = [list(first[0][0])]
 
         def refresh(points: DataFrame, batch: list[list[float]]) -> DataFrame:
             """Fold a candidate batch into the running min-D² — one
@@ -1224,16 +1225,6 @@ def bisecting_fit(
         )
         out = part if out is None else out.unionByName(part)
     return out, model
-
-
-def _mean_model(df: DataFrame) -> Model:
-    """Single-cluster model: the per-dimension mean of ``Y``."""
-    head = df.select("Y").first()
-    dim = len(head[0])
-    row = df.agg(
-        *[F.avg(F.col("Y")[d]).alias(f"m{d}") for d in range(dim)]
-    ).first()
-    return [(1, [float(row[f"m{d}"]) for d in range(dim)])]
 
 
 def _dist_to(col: str, center: list[float]):

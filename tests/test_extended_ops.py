@@ -4576,3 +4576,100 @@ def test_streaming_cdc_apply_marker_exactly_once(spark, tmp_path):
             ),
             store,
         )
+
+
+# ---- storeless IVF/PQ: the persistent index's fit, encode and search --
+
+_STORELESS = {
+    "ivf": ({"nlist": 8}, {"nprobe": 7}),
+    "pq": ({"m_sub": 16, "n_codes": 64}, {"rerank": 100}),
+}
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq"])
+def test_storeless_topk_matches_index_and_query(spark, sf_dir, tmp_path, family):
+    """``ivf_topk``/``pq_topk`` return the rows and scores of
+    ``*_index`` + ``*_query`` at the same geometry and seed: one fit,
+    encode and search path, with and without the commit."""
+    from clickhouse_k_means_spark.operators import ann_index, similarity
+    from clickhouse_k_means_spark.sources.dataset import load_table
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    q = emb.filter(F.col("vec_id") < 5)
+    c = emb.filter(F.col("vec_id") >= 5)
+    geometry, search = _STORELESS[family]
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    getattr(ann_index, f"{family}_index")(c, store, **geometry)
+    indexed = getattr(ann_index, f"{family}_query")(
+        q, store, k=10, query_key="vec_id", **search
+    )
+    storeless = getattr(similarity, f"{family}_topk")(
+        q, c, k=10, query_key="vec_id", corpus_key="vec_id",
+        **geometry, **search,
+    )
+    got = sorted(map(tuple, storeless.collect()))
+    assert len(got) == 50
+    assert got == sorted(map(tuple, indexed.collect()))
+
+
+def _random_vectors(spark, key_type: str = "bigint", nan_key=None):
+    """200 seeded random 8-d vectors; ``nan_key``'s vector is all NaN."""
+    import numpy as np
+
+    x = np.random.default_rng(5).standard_normal((200, 8))
+    rows = [
+        (i if key_type == "bigint" else f"k{i}",
+         [float("nan")] * 8 if i == nan_key else [float(v) for v in x[i]])
+        for i in range(200)
+    ]
+    return spark.createDataFrame(
+        rows, f"vec_id {key_type}, embedding array<double>"
+    )
+
+
+_SMALL = {"ivf": {"nlist": 4, "nprobe": 2}, "pq": {"m_sub": 2, "n_codes": 4}}
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq"])
+def test_storeless_topk_names_bad_vectors(spark, family):
+    """A non-finite corpus vector and a zero-norm query raise a
+    ``ValueError`` naming the key, where an all-NaN corpus vector used
+    to empty ``ivf_topk``'s result and a zero query failed in the
+    cosine division."""
+    from clickhouse_k_means_spark.operators import similarity
+
+    topk = getattr(similarity, f"{family}_topk")
+    kw = {"k": 3, "query_key": "vec_id", "corpus_key": "vec_id", **_SMALL[family]}
+    corpus = _random_vectors(spark, nan_key=17)
+    queries = _random_vectors(spark).filter(F.col("vec_id") < 2)
+    with pytest.raises(ValueError, match="key 17 vector has a non-finite"):
+        topk(queries, corpus, **kw).collect()
+    zero = spark.createDataFrame(
+        [(9, [0.0] * 8)], "vec_id bigint, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="query 9 vector has zero norm"):
+        topk(zero, _random_vectors(spark), **kw).collect()
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq"])
+def test_storeless_topk_keeps_string_query_keys(spark, family):
+    """String query keys come back as strings, with the neighbours the
+    same queries find under integer keys."""
+    from clickhouse_k_means_spark.operators import similarity
+
+    topk = getattr(similarity, f"{family}_topk")
+    kw = {"k": 3, "corpus_key": "vec_id", "query_key": "vec_id", **_SMALL[family]}
+    corpus = _random_vectors(spark)
+    by_int = topk(corpus.filter(F.col("vec_id") < 3), corpus, **kw)
+    by_str = topk(
+        _random_vectors(spark, "string").filter(
+            F.col("vec_id").isin("k0", "k1", "k2")
+        ),
+        corpus, **kw,
+    )
+    assert by_str.schema["q"].dataType.simpleString() == "string"
+    assert sorted((f"k{r['q']}", r["n"], r["score"]) for r in by_int.collect()) == \
+        sorted((r["q"], r["n"], r["score"]) for r in by_str.collect())

@@ -200,6 +200,28 @@ def test_plusplus_fit_and_init_job_floor(spark):
         yh.unpersist()
 
 
+def test_parallel_init_first_pick_is_the_emptiness_check(spark):
+    """A k-means|| fit runs 11 jobs, one fewer than while the init
+    probed ``Y`` for emptiness before its first pick; an empty input
+    still raises the named error from the first pick's collect."""
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
+
+    sc = spark.sparkContext
+    yh = _blobs(spark).cache()
+    try:
+        yh.count()
+        with _job_ids(sc, "par-fit") as fit_jobs:
+            res = KMeansEngine(k=4, seed=7, init="parallel").fit(yh)
+        assert len(res.model) == 4 and res.n_iter == 2
+        assert len(fit_jobs) <= 11, fit_jobs
+        with pytest.raises(ValueError, match="input DataFrame is empty"):
+            KMeansEngine(k=4, seed=7, init="parallel").init_centroids_parallel(
+                yh.limit(0), random.Random(7)
+            )
+    finally:
+        yh.unpersist()
+
+
 @pytest.mark.parametrize("scales", [None, [100, 100, 100]], ids=["xxhash", "reproducible"])
 def test_plusplus_init_same_model_at_any_layout(spark, scales):
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
@@ -402,9 +424,10 @@ def test_ann_query_job_count(spark, tmp_path, case):
 # Spark jobs of one 2-vector ``ivfpq_append`` / ``ann_upsert`` on the
 # same 64-vector IVF-PQ index at 0 and at 4 pending delta layers
 # (``ann_delete`` layers); measured on 4 local cores with the geometry
-# served from the memo the build seeded (before the memo: 8, 10, 8, 9)
+# served from the memo the build seeded (before the memo: 8, 10, 8, 9;
+# the upserts ran 7 while their emptiness probe was a ``head(1)``)
 _ANN_WRITE_JOBS = {
-    ("append", 0): 7, ("append", 4): 8, ("upsert", 0): 7, ("upsert", 4): 7,
+    ("append", 0): 7, ("append", 4): 8, ("upsert", 0): 6, ("upsert", 4): 6,
 }
 
 
@@ -445,6 +468,27 @@ def test_ann_write_job_count(spark, tmp_path, verb, layers):
     live = store.read(spark, "ivfpq_index").filter("n IS NOT NULL")
     assert live.count() == 64 - layers + (2 if verb == "append" else 0)
     assert len(jobs) <= _ANN_WRITE_JOBS[(verb, layers)], jobs
+
+
+def test_ann_upsert_probes_a_first_empty_partition_in_one_job(spark, tmp_path):
+    """``ann_upsert`` tests its checkpointed batch for rows in one job
+    whatever the layout: a ``head(1)`` probe found the first of 4
+    partitions empty and scanned again (7 jobs at 4 local cores)."""
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    _ivfpq_fixture(spark, store, 0)
+    rows = [(3, [0.5, 0.5, 0.1, 0.2]), (5, [0.3, -0.5, 0.2, 0.2])]
+    batch = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4),
+        "vec_id bigint, embedding array<double>",
+    )
+    assert batch.rdd.glom().map(len).collect()[0] == 0
+    with _job_ids(spark.sparkContext, "ann-upsert-first-empty") as jobs:
+        ann_index.ann_upsert(batch, store, "ivfpq_index")
+    assert store.read(spark, "ivfpq_index").filter("n IS NOT NULL").count() == 64
+    assert len(jobs) <= 6, jobs
 
 
 def test_geometry_memo_miss_collects_in_one_job(spark, tmp_path):
