@@ -95,24 +95,6 @@ def simhash(token_col: Column | str, bits: int = 64) -> Column:
     )
 
 
-def simhash_from_counts(bit_sums: Column) -> Column:
-    """Collapse summed ±1 bit counts (array<bigint>) into a packed
-    bigint SimHash: bit b set iff sum at position b > 0."""
-    # aggregate over (sum, index) pairs: acc + (sum>0) << idx
-    n = 60  # matches simhash() width
-    return F.aggregate(
-        F.zip_with(
-            bit_sums,
-            F.sequence(F.lit(0), F.lit(n - 1)),
-            lambda s, i: F.when(s > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-                F.lit(0).cast("bigint")
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two packed bigint hashes (bit_count of xor)."""
     return F.bit_count(a.bitwiseXOR(b))

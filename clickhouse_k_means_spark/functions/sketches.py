@@ -170,9 +170,11 @@ class IncrementalDistinct:
         self.store = store
         self.table = table
 
-    def update(self, df: DataFrame, col: str) -> None:
+    def update(self, df: DataFrame, col: str, metadata: dict | None = None) -> None:
+        """Commit ``df``'s sketch; ``metadata`` rides the commit (a
+        streaming sink's replay marker)."""
         sketch = df.agg(F.hll_sketch_agg(F.col(col)).alias("sketch"))
-        self.store.append(sketch, self.table)
+        self.store.append(sketch, self.table, metadata=metadata)
 
     def estimate(self, spark) -> int:
         """Union all committed sketches -> ndv (0 if nothing committed)."""
@@ -223,13 +225,15 @@ class IncrementalHistogram:
             F.least(F.lit(self.n_bins - 1).cast("bigint"), raw),
         )
 
-    def update(self, df: DataFrame, col: str) -> None:
+    def update(self, df: DataFrame, col: str, metadata: dict | None = None) -> None:
+        """Commit ``df``'s bin counts; ``metadata`` rides the commit
+        (a streaming sink's replay marker)."""
         batch = (
             df.filter(F.col(col).isNotNull())
             .groupBy(self._bin(col).alias("bin"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        self.store.append(batch, self.table)
+        self.store.append(batch, self.table, metadata=metadata)
 
     def merged(self, spark) -> DataFrame:
         """(bin, cnt) — integer-summed across every committed batch."""

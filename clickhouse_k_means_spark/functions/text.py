@@ -130,13 +130,6 @@ def stopword_ratio(c: Column | str, lang: str = "en") -> Column:
     )
 
 
-def stopword_hits(c: Column | str, lang: str) -> Column:
-    """count of tokens in ``lang``'s stopword list (language-ID signal)."""
-    tok = tokens(c)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tok, lambda t: F.array_contains(sw, t)))
-
-
 def quality_score_from(
     n_tok: Column, praw: Column, sraw: Column, nt_len: Column
 ) -> Column:

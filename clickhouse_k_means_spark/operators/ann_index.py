@@ -1178,7 +1178,7 @@ def ann_delete(
     probe = F.broadcast(kdf) if small else kdf
     cur = store.read(spark, table)
     vec_rows = cur.filter(F.col("n").isNotNull())
-    if not vec_rows.join(probe, "n", "left_semi").head(1):
+    if vec_rows.join(probe, "n", "left_semi").isEmpty():
         return store.latest_version(table)
     return store.merge_delta(table, "n", tombstones=kdf)
 
@@ -1295,11 +1295,11 @@ def ann_cdc_apply(
     batch = batch.localCheckpoint(eager=True)
     if batch.isEmpty():
         return store.latest_version(table)
-    bad = batch.filter(~F.col(op).isin("u", "d")).limit(1).collect()
-    if bad:
+    bad = batch.filter(~F.col(op).isin("u", "d"))
+    if not bad.isEmpty():
         raise ValueError(
-            f"ann_cdc_apply: unknown op {bad[0][op]!r} (expected 'u' or "
-            "'d') — refusing to silently drop changes"
+            f"ann_cdc_apply: unknown op {bad.first()[op]!r} (expected 'u' "
+            "or 'd') — refusing to silently drop changes"
         )
     ups = batch.filter(F.col(op) == "u")
     keys = batch.select(_key_as_n(key, "ann_cdc_apply")).distinct()

@@ -15,9 +15,7 @@ Scale notes: elbow is one codegen'd scan (model folded into literals).
 The exact silhouette is quadratic by definition — fine at fixture
 scale; ``silhouette_sampled`` bounds the pair count by hash-sampling
 rows before the cross join (deterministic, seedable), the honest
-scale path. MLlib's ``ClusteringEvaluator`` (squared-euclidean
-per-point silhouette) is exposed as a cross-check — a DIFFERENT
-definition, reported separately, never compared to the parity number.
+scale path.
 """
 
 from __future__ import annotations
@@ -174,21 +172,6 @@ def silhouette_sampled(
         return silhouette_global(samp, model)
     finally:
         samp.unpersist()
-
-
-def mllib_silhouette(yh: DataFrame, assignments: DataFrame) -> float:
-    """MLlib ClusteringEvaluator (per-point squared-euclidean silhouette)
-    — cross-check metric, a different definition from the reference's."""
-    from pyspark.ml.evaluation import ClusteringEvaluator
-    from pyspark.ml.functions import array_to_vector
-
-    pred = yh.join(assignments.select("i", "j"), "i").select(
-        array_to_vector(F.col("Y").cast("array<double>")).alias("features"),
-        F.col("j").cast("double").alias("prediction"),
-    )
-    return ClusteringEvaluator(
-        featuresCol="features", predictionCol="prediction"
-    ).evaluate(pred)
 
 
 def optimal_k_scan(

@@ -31,7 +31,7 @@ session catalog — no Hive metastore needed for parquet source tables).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -74,10 +74,4 @@ def write_bucketed(
     if sort:
         w = w.sortBy(keys[0], *keys[1:])
     w.saveAsTable(name)
-    return spark.table(name)
-
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    """Read a bucketed table back by catalog name (scans report the
-    persisted hash distribution to the planner)."""
     return spark.table(name)

@@ -669,20 +669,6 @@ class SnapshotStateStore:
             (self._manifests(table) / f"v{v:08d}.json").unlink()
         return removed
 
-    def _replace_snapshot(
-        self, df: DataFrame, table: str, metadata: dict | None = None
-    ) -> int:
-        """Stage ``df`` as immutable data files and commit them as the
-        WHOLE next snapshot (replace semantics) — the shared tail of
-        every copy-on-write rewrite (upsert, SCD-2 batches).
-        ``metadata`` rides the manifest commit atomically (the same
-        contract as ``append`` — e.g. a streaming sink's ``batch_id``
-        idempotence marker, r13)."""
-        return self._commit(
-            table, self._stage(df, table), replace=True,
-            schema_json=df.schema.json(), metadata=metadata,
-        )
-
     def optimize(
         self, spark: SparkSession, table: str, target_bytes: int = 128 << 20
     ) -> int:
@@ -716,20 +702,23 @@ class SnapshotStateStore:
         # resolves pending merge-on-read layers too: the replace
         # commit below is what FOLDS deltas back into a packed base
         current = self.read(spark, table).coalesce(int(n_out))
-        return self._replace_snapshot(current, table)
+        return self.replace(current, table)
 
     def replace(
         self, df: DataFrame, table: str, metadata: dict | None = None
     ) -> int:
-        """Commit ``df`` as the whole next snapshot (atomic replace).
-        ``df`` may derive from reading this same table — it is staged
-        to new immutable files before the commit, so self-rewrites
-        (e.g. IncrementalRollup.compact) are safe. Earlier versions
-        stay time-travelable until ``vacuum``. ``metadata`` rides the
-        manifest atomically (e.g. a streaming upsert's ``batch_id``
-        marker — retries that replay the SAME batch must skip, because
-        upsert retries otherwise add versions by design, r13)."""
-        return self._replace_snapshot(df, table, metadata=metadata)
+        """Commit ``df`` as the whole next snapshot (atomic replace) —
+        the one commit of every copy-on-write rewrite (``optimize``,
+        ``upsert``, SCD-2 batches). ``df`` may derive from reading
+        this same table — it is staged to new immutable files before
+        the commit, so self-rewrites (e.g. IncrementalRollup.compact)
+        are safe. Earlier versions stay time-travelable until
+        ``vacuum``. ``metadata`` rides the manifest atomically (the
+        same contract as ``append``)."""
+        return self._commit(
+            table, self._stage(df, table), replace=True,
+            schema_json=df.schema.json(), metadata=metadata,
+        )
 
     def upsert(
         self, spark: SparkSession, df: DataFrame, table: str, key: str
@@ -758,7 +747,7 @@ class SnapshotStateStore:
         merged = current.join(
             df.select(key).distinct(), key, "left_anti"
         ).unionByName(df)
-        return self._replace_snapshot(merged, table)
+        return self.replace(merged, table)
 
 
 # ---- SCD-2 history tracking over a SnapshotStateStore table ----------
@@ -820,7 +809,7 @@ def upsert_scd2(
         SCD2_TO, F.lit(None).cast("bigint")
     )
     if not store.exists(table):
-        return _scd2_commit_replace(store, incoming, table)
+        return store.replace(incoming, table)
     cur = store.read(spark, table)
     last = cur.agg(F.max(SCD2_FROM)).collect()[0][0]
     if last is not None and seq <= last:
@@ -839,13 +828,7 @@ def upsert_scd2(
         .unionByName(keep_open)
         .unionByName(incoming)
     )
-    return _scd2_commit_replace(store, snapshot, table)
-
-
-def _scd2_commit_replace(
-    store: SnapshotStateStore, df: DataFrame, table: str
-) -> int:
-    return store._replace_snapshot(df, table)
+    return store.replace(snapshot, table)
 
 
 def scd2_current(history: DataFrame) -> DataFrame:

@@ -1,43 +1,53 @@
-"""Streaming ingest into the persistent ANN indexes: ``foreachBatch``
-+ ``operators/ann_index.ivf_append`` (``StreamingIvfIngest``),
-``pq_append`` (``StreamingPqIngest``, r11), ``ivfpq_append``
-(``StreamingIvfPqIngest``, r12 — the composed production
-architecture), or ``ann_upsert`` (``StreamingUpsertIngest``, r13 —
-the CDC-feed twin, batch-id-marked because upsert retries add
-versions by design) — the vector-corpus companion to ``dedup_stream``
-(documents) and ``sketch_stream`` (aggregates).
+"""Streaming ingest into the persistent ANN indexes, on the engine's one
+micro-batch protocol (``snapshot_sink.MicroBatchSink``):
+``operators/ann_index.ivf_append`` (``StreamingIvfIngest``),
+``pq_append`` (``StreamingPqIngest``), ``ivfpq_append``
+(``StreamingIvfPqIngest`` — the composed production architecture),
+``ann_upsert`` (``StreamingUpsertIngest``) or ``ann_cdc_apply``
+(``StreamingCdcApply``) — the vector-corpus companion to
+``dedup_stream`` (documents) and ``sketch_stream`` (aggregates).
 
 The reference has no streaming surface; this composes two certified
 pieces — the committed-quantizer append (every batch buckets through
-the version-1 fit, no re-fit, r9) and the snapshot store's manifest
+the version-1 fit, no re-fit) and the snapshot store's manifest
 commits — into the production shape: an embedding stream lands in the
 queryable ANN index one atomic version per micro-batch, and the index
 is queryable (and time-travelable) BETWEEN batches.
 
-Exactly-once story: ``ivf_append`` is key-idempotent (ADVICE r9 — it
-anti-joins the batch against committed assignment keys), so a crashed
-query that replays a committed micro-batch appends ZERO fresh rows;
-at-least-once execution converges to exactly-once index content with
-no separate batch-marker table. The replay still pays the (broadcast-
-semi, history-never-shuffled) probe — the price of marker-free
-idempotence, fine at micro-batch size.
+Exactly-once story, two cases of the one protocol:
 
-Bootstrap contract: the quantizer must exist before the stream starts
-(run ``ivf_index`` on a seed corpus first); a stream attached to an
-index with no committed quantizer fails loudly on its first non-empty
-batch (``ivf_append`` raises — never silent wrong cells). Maintenance
-(``ivf_stats`` / ``ivf_refit``) runs between batches under the same
-single-writer-per-table contract the incremental operators carry;
-Structured Streaming guarantees serial micro-batches within a query.
+- the appends are key-idempotent (they anti-join the batch against
+  the committed keys), so a replayed micro-batch appends ZERO fresh
+  rows and needs no marker; the replay still pays the (broadcast-semi,
+  history-never-shuffled) probe, fine at micro-batch size;
+- an upsert or CDC apply adds a version on every call, by design, so
+  those sinks are marked: the ``(batch_query, batch_id)`` marker rides
+  each commit atomically and a replayed batch of the same query name
+  is skipped before it is read.
+
+Bootstrap contract: the index (quantizer and/or codebooks) must exist
+before the stream starts (run ``*_index`` on a seed corpus first); a
+stream attached to a table without committed geometry fails loudly on
+its first non-empty batch — never silent wrong cells. Maintenance
+(``*_stats`` / ``*_refit``) runs between batches under the
+single-writer-per-table contract; a refit mid-stream is safe because
+Structured Streaming serializes micro-batches and every batch re-reads
+the LATEST committed geometry.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from clickhouse_k_means_spark.streaming.snapshot_sink import MicroBatchSink
 
-class StreamingIvfIngest:
+
+class StreamingIvfIngest(MicroBatchSink):
     """Driver-held counters + per-batch committed-quantizer appends."""
+
+    _DEFAULT_QUERY_NAME = "streaming_ivf_ingest"
+    _APPEND = "ivf_append"
+    count_rows = True
 
     def __init__(
         self,
@@ -50,20 +60,26 @@ class StreamingIvfIngest:
         self.table = table
         self.key = key
         self.vec = vec
+        self.query_name = self._DEFAULT_QUERY_NAME
         self.n_batches = 0
         self.n_seen = 0
+        self.n_skipped = 0
         self.versions: list[int] = []
 
-    def process_batch(self, batch: DataFrame) -> int:
-        """Append one micro-batch through the committed quantizer;
-        returns the committed snapshot version."""
-        from clickhouse_k_means_spark.operators.ann_index import ivf_append
+    def process_batch(self, batch: DataFrame, batch_id: int | None = None) -> int:
+        """Append one micro-batch through the committed geometry;
+        returns the committed snapshot version (``batch_id`` is unused:
+        the append is key-idempotent)."""
+        from clickhouse_k_means_spark.operators import ann_index
 
-        return ivf_append(
+        return getattr(ann_index, self._APPEND)(
             batch, self.store, table=self.table, key=self.key, vec=self.vec
         )
 
-    _DEFAULT_QUERY_NAME = "streaming_ivf_ingest"
+    def _commit(self, batch: DataFrame, batch_id: int, n: int) -> None:
+        self.n_batches += 1
+        self.n_seen += n
+        self.versions.append(self.process_batch(batch, batch_id))
 
     def attach(
         self,
@@ -71,49 +87,20 @@ class StreamingIvfIngest:
         checkpoint: str,
         query_name: str | None = None,
     ):
-        """Ingest the stream into the index (caller awaits).
-
-        One snapshot version per non-empty micro-batch; replayed
-        batches commit empty appends (key-idempotent)."""
-
-        def _on_batch(batch: DataFrame, _batch_id: int) -> None:
-            # materialize the micro-batch ONCE (r14, guide §1.2/§5):
-            # head(1), count() and the append's idempotence probe each
-            # re-ran the stream-source scan otherwise — three
-            # executions of the same batch plan per micro-batch
-            batch = batch.localCheckpoint(eager=True)
-            n = batch.count()
-            if n == 0:
-                return
-            self.n_batches += 1
-            self.n_seen += n
-            self.versions.append(self.process_batch(batch))
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name or self._DEFAULT_QUERY_NAME)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        """Ingest the stream into the index (caller awaits): one
+        snapshot version per non-empty micro-batch."""
+        return self._run(
+            stream, checkpoint, query_name or self._DEFAULT_QUERY_NAME
         )
 
 
 class StreamingIvfPqIngest(StreamingIvfIngest):
-    """The composed-index twin (r12 — VERDICT r11 item 5): per-batch
-    COMMITTED-GEOMETRY encodes via ``ivfpq_append`` — coarse cell plus
-    residual PQ codes in one pass through the version-pinned quantizer
-    AND codebooks. Same exactly-once story (``ivfpq_append`` shares
-    the family's ``_fresh_rows`` key-idempotence probe, so a replayed
-    micro-batch appends zero code rows) and the same bootstrap
-    contract (run ``ivfpq_index`` on a seed corpus first; a stream
-    attached to a table with no committed quantizer/codebooks fails
-    loudly on its first non-empty batch). Maintenance
-    (``ivfpq_stats`` / ``ivfpq_refit``) runs between batches under the
-    single-writer contract; a refit mid-stream is safe because
-    Structured Streaming serializes micro-batches and every batch
-    re-reads the LATEST committed geometry."""
+    """The composed-index twin: per-batch committed-geometry encodes
+    via ``ivfpq_append`` — coarse cell plus residual PQ codes in one
+    pass through the version-pinned quantizer AND codebooks."""
 
     _DEFAULT_QUERY_NAME = "streaming_ivfpq_ingest"
+    _APPEND = "ivfpq_append"
 
     def __init__(
         self,
@@ -124,139 +111,48 @@ class StreamingIvfPqIngest(StreamingIvfIngest):
     ):
         super().__init__(store, table=table, key=key, vec=vec)
 
-    def process_batch(self, batch: DataFrame) -> int:
-        from clickhouse_k_means_spark.operators.ann_index import ivfpq_append
-
-        return ivfpq_append(
-            batch, self.store, table=self.table, key=self.key, vec=self.vec
-        )
-
 
 class StreamingUpsertIngest(StreamingIvfIngest):
-    """CDC-feed ingest (r13 — VERDICT r12 item 4): ``foreachBatch`` →
-    ``ann_upsert``, so a stream of CHANGED embeddings (the common
-    upstream: re-embedded documents, refreshed profiles) lands as
-    atomic update-or-insert versions, uniform across the
-    ivf/pq/ivfpq families.
+    """CDC-feed ingest: each micro-batch of CHANGED embeddings (the
+    common upstream: re-embedded documents, refreshed profiles) lands
+    through ``ann_upsert`` as one atomic update-or-insert version,
+    uniform across the ivf/pq/ivfpq families.
 
-    Exactly-once story — DIFFERENT from the append twins: appends are
-    key-idempotent so replays converge marker-free, but ``ann_upsert``
-    retries add a version BY DESIGN (its docstring: the operator
-    cannot know the committed payload already matches). So this sink
-    carries the ``SnapshotStreamSink`` batch-id marker: each
-    micro-batch's ``batch_id`` rides the upsert's replace-commit
-    manifest ATOMICALLY (``ann_upsert(metadata=...)``), and a replayed
-    batch (id ≤ the last committed marker, backward manifest scan so
-    interleaved maintenance commits can't erase it — ADVICE r5) is
-    SKIPPED instead of committing a duplicate version.
-
-    The marker is NAMESPACED by stream identity (ADVICE r13; Delta's
-    ``(txnAppId, txnVersion)`` analog): the manifest carries
-    ``{"batch_query": <query name>, "batch_id": <id>}`` and the skip
-    test compares BOTH, so a legitimately NEW streaming query into the
-    same table (different ``query_name``, fresh checkpoint, ids
-    restarting at 0) is never silently skipped against an old
-    stream's marker. The ``query_name`` is therefore the LOGICAL
-    stream id: reuse the same name (with a fresh checkpoint) to
-    dedupe replays of the same feed; pick a new name for a new feed.
-    Markers committed before the namespace existed carry no
-    ``batch_query`` and never match, which fails open to "commit" —
-    the at-least-once direction, never silent loss.
+    Marked: ``ann_upsert`` retries add a version by design, so each
+    commit carries the ``(batch_query, batch_id)`` marker and a
+    replayed batch of the same query name is skipped. The
+    ``query_name`` is the LOGICAL stream id: reuse it (with a fresh
+    checkpoint) to dedupe replays of the same feed; pick a new one for
+    a new feed. ``process_batch(batch)`` without an id commits
+    unmarked.
 
     Within-batch duplicate keys follow ``ann_upsert``'s keep-any
     contract — de-duplicate the CDC feed to latest-per-key upstream
-    when a micro-batch can carry conflicting payloads (ADVICE r12).
-
-    Bootstrap contract: the index (quantizer/codebooks) must exist
-    before the stream starts; maintenance between batches under the
-    single-writer contract, exactly like the append twins."""
+    when a micro-batch can carry conflicting payloads."""
 
     _DEFAULT_QUERY_NAME = "streaming_upsert_ingest"
+    marked = True
 
-    def __init__(
-        self,
-        store,
-        table: str = "ivf_index",
-        key: str = "vec_id",
-        vec: str = "embedding",
-    ):
-        super().__init__(store, table=table, key=key, vec=vec)
-        self.n_skipped = 0
-        self.query_name = self._DEFAULT_QUERY_NAME
-
-    def last_batch_id(self, query_name: str | None = None) -> int | None:
-        """Last committed marker FOR THIS LOGICAL STREAM (``None``
-        for other streams' markers or pre-namespace anonymous ones)."""
-        qname = query_name or self.query_name
-        b = self.store.latest_metadata_value(
-            self.table, "batch_id", match={"batch_query": qname}
-        )
-        return int(b) if b is not None else None
+    def _meta(self, batch_id: int | None) -> dict | None:
+        return self.marker(batch_id) if batch_id is not None else None
 
     def process_batch(self, batch: DataFrame, batch_id: int | None = None) -> int:
         from clickhouse_k_means_spark.operators.ann_index import ann_upsert
 
-        meta = (
-            {"batch_id": int(batch_id), "batch_query": self.query_name}
-            if batch_id is not None
-            else None
-        )
         return ann_upsert(
             batch, self.store, table=self.table, key=self.key,
-            vec=self.vec, metadata=meta,
-        )
-
-    def attach(
-        self,
-        stream: DataFrame,
-        checkpoint: str,
-        query_name: str | None = None,
-    ):
-        """Upsert the stream into the index (caller awaits). One
-        replace-snapshot version per non-empty NEW micro-batch;
-        replayed batches of the SAME logical stream (marker keyed by
-        ``(query_name, batch_id)`` — ADVICE r13) are skipped."""
-        self.query_name = query_name or self._DEFAULT_QUERY_NAME
-
-        def _on_batch(batch: DataFrame, batch_id: int) -> None:
-            last = self.last_batch_id()
-            if last is not None and batch_id <= last:
-                self.n_skipped += 1
-                return
-            # one materialization per micro-batch (r14): head(1),
-            # count() and the upsert's own checkpoint each re-ran the
-            # stream-source scan otherwise
-            batch = batch.localCheckpoint(eager=True)
-            n = batch.count()
-            if n == 0:
-                return
-            self.n_batches += 1
-            self.n_seen += n
-            self.versions.append(self.process_batch(batch, batch_id))
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(self.query_name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+            vec=self.vec, metadata=self._meta(batch_id),
         )
 
 
 class StreamingCdcApply(StreamingUpsertIngest):
-    """Full CDC-feed ingest (r14 — VERDICT r13 item 6): ``foreachBatch``
-    → ``ann_cdc_apply``, so a change stream carrying an op column
-    (``'u'`` upserts and ``'d'`` deletes INTERLEAVED — what a real
-    CDC feed looks like) lands as ONE atomic merge-on-read delta
-    layer per micro-batch: tombstones for every batch key, fresh
-    encodes for the upserts. No intermediate version ever shows a
-    delete applied without its sibling upsert.
-
-    Exactly-once story: inherited from ``StreamingUpsertIngest`` —
-    applying a batch always commits a version by design, so the
-    ``(query_name, batch_id)`` namespaced marker rides each commit
-    atomically and a replayed batch of the same logical stream is
-    skipped. Same bootstrap and single-writer contracts."""
+    """Full CDC-feed ingest: a change stream carrying an op column
+    (``'u'`` upserts and ``'d'`` deletes interleaved — what a real CDC
+    feed looks like) lands through ``ann_cdc_apply`` as ONE atomic
+    merge-on-read delta layer per micro-batch: tombstones for every
+    batch key, fresh encodes for the upserts. No version ever shows a
+    delete applied without its sibling upsert. Marked, like
+    ``StreamingUpsertIngest``."""
 
     _DEFAULT_QUERY_NAME = "streaming_cdc_apply"
 
@@ -276,30 +172,18 @@ class StreamingCdcApply(StreamingUpsertIngest):
             ann_cdc_apply,
         )
 
-        meta = (
-            {"batch_id": int(batch_id), "batch_query": self.query_name}
-            if batch_id is not None
-            else None
-        )
         return ann_cdc_apply(
             batch, self.store, table=self.table, key=self.key,
-            vec=self.vec, op=self.op, metadata=meta,
+            vec=self.vec, op=self.op, metadata=self._meta(batch_id),
         )
 
 
 class StreamingPqIngest(StreamingIvfIngest):
-    """The PQ twin (r11): per-batch COMMITTED-CODEBOOK encodes via
-    ``pq_append`` — same exactly-once story (``pq_append`` shares
-    ``ivf_append``'s key-idempotence probe, so a replayed micro-batch
-    appends zero code rows) and the same bootstrap contract (run
-    ``pq_index`` on a seed corpus first; a stream attached to a table
-    with no committed codebooks fails loudly on its first non-empty
-    batch). Maintenance (``pq_stats`` / ``pq_refit``) runs between
-    batches under the single-writer contract; a refit mid-stream is
-    safe because Structured Streaming serializes micro-batches and
-    every batch re-reads the LATEST committed codebooks."""
+    """The PQ twin: per-batch committed-codebook encodes via
+    ``pq_append``."""
 
     _DEFAULT_QUERY_NAME = "streaming_pq_ingest"
+    _APPEND = "pq_append"
 
     def __init__(
         self,
@@ -309,10 +193,3 @@ class StreamingPqIngest(StreamingIvfIngest):
         vec: str = "embedding",
     ):
         super().__init__(store, table=table, key=key, vec=vec)
-
-    def process_batch(self, batch: DataFrame) -> int:
-        from clickhouse_k_means_spark.operators.ann_index import pq_append
-
-        return pq_append(
-            batch, self.store, table=self.table, key=self.key, vec=self.vec
-        )

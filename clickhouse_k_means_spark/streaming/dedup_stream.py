@@ -1,4 +1,5 @@
-"""Streaming ingest dedup: ``foreachBatch`` + the snapshot hash store.
+"""Streaming ingest dedup: the snapshot hash store on the engine's one
+micro-batch protocol (``snapshot_sink.MicroBatchSink``).
 
 The reference has no streaming surface; this composes two pieces the
 engine already certifies — ``operators/dedup.incremental_exact_dedup``
@@ -12,13 +13,14 @@ Scale shape (100 TB corpus, streaming arrivals):
 - per micro-batch cost is the incremental-dedup shape: one skew-free
   join keyed on the md5 digest against the history table plus one tiny
   hash append — the corpus-sized history is never rewritten.
-- ``foreachBatch`` keeps the dataflow stateless on the Spark side; the
-  durable state is the store's manifest log, so a crashed query
+- the durable state is the store's manifest log; the sink carries no
+  replay marker (the hash history is key-idempotent). A crashed query
   resumes from its checkpoint and re-runs the failed batch against the
-  last COMMITTED snapshot (the hash append is the batch's commit
-  point). Replays of a committed batch are harmless: every hash is
-  already in history, so zero survivors re-emit — at-least-once
-  execution converges to exactly-once OUTPUT for duplicates.
+  last COMMITTED hash snapshot.
+- NOT replay-safe for the survivor output: the hash commit happens
+  before the survivors are written, so a crash between the two loses
+  that batch's survivors — on replay every hash is already in history
+  and zero survivors re-emit.
 - single writer per hash table (the incremental-dedup contract);
   Structured Streaming guarantees serial micro-batches within a query.
 """
@@ -27,9 +29,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from clickhouse_k_means_spark.streaming.snapshot_sink import MicroBatchSink
 
-class StreamingDedup:
+
+class StreamingDedup(MicroBatchSink):
     """Driver-held counters + per-batch incremental dedup."""
+
+    count_rows = True
 
     def __init__(
         self,
@@ -57,6 +63,15 @@ class StreamingDedup:
         )
         return survivors
 
+    def _commit(self, batch: DataFrame, _batch_id: int, n: int) -> None:
+        self.n_batches += 1
+        self.n_seen += n
+        survivors = self.process_batch(batch)
+        n = survivors.count()
+        self.n_survived += n
+        if n:
+            survivors.write.mode("append").parquet(self.sink_path)
+
     def attach(
         self,
         stream: DataFrame,
@@ -69,30 +84,8 @@ class StreamingDedup:
         Survivors of each micro-batch append to ``sink_path``; the
         hash history advances one snapshot per non-empty batch.
         """
-
-        def _on_batch(batch: DataFrame, _batch_id: int) -> None:
-            # one materialization per micro-batch (r14, guide §1.2):
-            # head(1) + count() re-ran the stream-source scan twice
-            # before the dedup pipeline's own pass
-            batch = batch.localCheckpoint(eager=True)
-            n_in = batch.count()
-            if n_in == 0:
-                return
-            self.n_batches += 1
-            self.n_seen += n_in
-            survivors = self.process_batch(batch)
-            n = survivors.count()
-            self.n_survived += n
-            if n:
-                survivors.write.mode("append").parquet(sink_path)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        self.sink_path = sink_path
+        return self._run(stream, checkpoint, query_name)
 
 
 def watermarked_dedup_stream(

@@ -1,4 +1,5 @@
-"""Streaming k-means: mini-batch centroid updates via ``foreachBatch``.
+"""Streaming k-means: mini-batch centroid updates on the engine's one
+micro-batch protocol (``snapshot_sink.MicroBatchSink``).
 
 The reference is batch-iterative; this is the engine's streaming
 extension in exactly the shape SURVEY §2.9 names: the model lives in
@@ -12,8 +13,9 @@ semantics):
     c'_j = (λ·n_j·c_j + Σ batch points in j) / n'_j
 
 λ=1 gives the running global mean; λ=0 forgets history each batch.
-State is k centroids + k counts in the driver — no state store needed;
-``foreachBatch`` keeps the dataflow itself stateless and codegen'd.
+State is k centroids + k counts in the driver — no state store and no
+replay marker; ``foreachBatch`` keeps the dataflow itself stateless
+and codegen'd.
 """
 
 from __future__ import annotations
@@ -22,11 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.functions.centroids import nearest_centroid_struct
+from clickhouse_k_means_spark.streaming.snapshot_sink import MicroBatchSink
 
 Model = list[tuple[int, list[float]]]
 
 
-class StreamingKMeans:
+class StreamingKMeans(MicroBatchSink):
     def __init__(self, model: Model, decay: float = 0.9):
         if not model:
             raise ValueError("StreamingKMeans needs a non-empty initial model")
@@ -73,6 +76,9 @@ class StreamingKMeans:
         self.model = new_model
         self.n_batches += 1
 
+    def _commit(self, batch: DataFrame, _batch_id: int, _n: int | None) -> None:
+        self.update(batch)
+
     def attach(
         self,
         stream: DataFrame,
@@ -84,21 +90,7 @@ class StreamingKMeans:
         ``stream`` must expose a ``Y array<double>`` column (use the
         ``from_table`` projection on the stream first).
         """
-
-        def _on_batch(batch: DataFrame, _batch_id: int) -> None:
-            # one materialization per micro-batch (r14): the emptiness
-            # probe and the update pass otherwise scan the source twice
-            batch = batch.localCheckpoint(eager=True)
-            if batch.head(1):
-                self.update(batch)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._run(stream, checkpoint, query_name)
 
     def assign(self, df: DataFrame) -> DataFrame:
         """Assignment under the current model (same as the batch path)."""

@@ -1,5 +1,6 @@
-"""Streaming incremental sketches: ``foreachBatch`` + the persisted
-mergeable-state classes.
+"""Streaming incremental sketches: the persisted mergeable-state classes
+on the engine's one micro-batch protocol
+(``snapshot_sink.MicroBatchSink``).
 
 Composes the certified pieces the same way ``dedup_stream`` does:
 ``functions/sketches.IncrementalDistinct`` (one few-KB HLL row per
@@ -12,23 +13,28 @@ materialized-view pattern.
 Replay semantics: unlike dedup (where a replayed batch is absorbed by
 the hash anti-join), sketch commits are NOT idempotent by content —
 re-running a committed batch double-counts the histogram and re-unions
-the HLL (harmless for HLL, biased for the histogram). So the batch id
-is recorded with each commit and replayed batch ids are SKIPPED — the
-standard foreachBatch exactly-once recipe (Structured Streaming
-guarantees batch ids are stable across recoveries).
+the HLL (harmless for HLL, biased for the histogram). So the sink is
+marked: each state commit carries the ``(batch_query, batch_id)``
+marker in its own manifest, and a replayed batch is skipped before it
+is read. State and marker land in one atomic commit, so no crash
+window can count a batch twice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from clickhouse_k_means_spark.streaming.snapshot_sink import MicroBatchSink
 
 
-class StreamingSketch:
+class StreamingSketch(MicroBatchSink):
     """Attach incremental sketch state to a stream.
 
     ``kind``: 'distinct' (HLL, `IncrementalDistinct`) or 'histogram'
     (`IncrementalHistogram` — pass lo/width/n_bins).
     """
+
+    marked = True
 
     def __init__(
         self,
@@ -54,49 +60,25 @@ class StreamingSketch:
             )
         else:
             raise ValueError(f"StreamingSketch: unknown kind {kind!r}")
+        self.store = store
+        self.table = self.state.table
         self.col = col
         self.kind = kind
-        self._batches_table = (table or f"{kind}_stream") + "_batch_ids"
+        self.query_name = "streaming_sketch"
         self.n_batches = 0
-
-    def _seen_batch(self, spark, batch_id: int) -> bool:
-        if not self.state.store.exists(self._batches_table):
-            return False
-        seen = self.state.store.read(spark, self._batches_table)
-        return bool(seen.filter(F.col("batch_id") == batch_id).head(1))
-
-    def _mark_batch(self, spark, batch_id: int) -> None:
-        from clickhouse_k_means_spark.sources.dataset import local_df
-
-        row = local_df(spark, [(int(batch_id),)], "batch_id bigint")
-        self.state.store.append(row, self._batches_table)
+        self.n_skipped = 0
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """Commit one micro-batch's sketch unless this id already
-        committed (replay after recovery) — exactly-once state."""
-        spark = batch.sparkSession
-        if self._seen_batch(spark, batch_id):
-            return
-        self.state.update(batch, self.col)
-        self._mark_batch(spark, batch_id)
+        """Commit one micro-batch's sketch unless this query already
+        committed ``batch_id`` (replay after recovery)."""
+        if not self.replayed(batch_id):
+            self._commit(batch, batch_id)
+
+    def _commit(self, batch: DataFrame, batch_id: int, _n=None) -> None:
+        self.state.update(batch, self.col, metadata=self.marker(batch_id))
         self.n_batches += 1
 
     def attach(self, stream: DataFrame, checkpoint: str,
                query_name: str = "streaming_sketch"):
         """Fold the stream into the sketch state (caller awaits)."""
-
-        def _on_batch(batch: DataFrame, batch_id: int) -> None:
-            # one materialization per micro-batch (r14): head(1) plus
-            # the sketch update each re-ran the stream-source scan
-            batch = batch.localCheckpoint(eager=True)
-            if not batch.head(1):
-                return
-            self.process_batch(batch, batch_id)
-
-        return (
-            stream.writeStream.foreachBatch(_on_batch)
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return self._run(stream, checkpoint, query_name)

@@ -1049,6 +1049,37 @@ def test_every_script_is_imported_or_run_by_a_test():
     assert not orphans, f"scripts no test imports or runs: {orphans}"
 
 
+def test_streams_start_only_in_the_micro_batch_runner():
+    """One streaming driver: no package module calls ``writeStream``
+    except the micro-batch runner every sink shares
+    (``streaming/snapshot_sink.MicroBatchSink._run``) and the
+    memory-sink replay (``streaming/windows.run_available_now``)."""
+    import ast
+
+    allowed = {
+        ("streaming/snapshot_sink.py", "MicroBatchSink._run"),
+        ("streaming/windows.py", "run_available_now"),
+    }
+    pkg = Path(REPO_ROOT, "clickhouse_k_means_spark")
+    found = set()
+
+    def visit(node, scope: str, rel: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if isinstance(child, ast.Attribute) and child.attr == "writeStream":
+                found.add((rel, scope))
+            visit(child, inner, rel)
+
+    for f in pkg.rglob("*.py"):
+        visit(ast.parse(f.read_text()), "", f.relative_to(pkg).as_posix())
+    assert found <= allowed, sorted(found - allowed)
+    assert found == allowed, "the runner moved: update this guard"
+
+
 def test_gate_emulator_matches_oracle_hash(spark, capsys):
     """The gate emulator runs a registry key against its DuckDB oracle
     and reports a value-hash match."""

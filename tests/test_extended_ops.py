@@ -1015,6 +1015,37 @@ def test_streaming_sketch_distinct_and_histogram(spark, tmp_path):
     assert dist.state.estimate(spark) == est  # deterministic re-read
 
 
+def test_streaming_sketch_replay_after_crash_past_state_commit(spark, tmp_path):
+    """A crash right after a histogram batch's state commit must not
+    count the batch twice on replay: the replay marker lands in the
+    same commit as the bin counts, so the replayed batch is skipped."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+    from clickhouse_k_means_spark.streaming.sketch_stream import StreamingSketch
+
+    class CrashAfterFirstCommit(SnapshotStateStore):
+        crashed = False
+
+        def append(self, df, table, metadata=None):
+            v = super().append(df, table, metadata=metadata)
+            if not self.crashed:
+                self.crashed = True
+                raise RuntimeError("driver crashed after the commit")
+            return v
+
+    store = CrashAfterFirstCommit(str(tmp_path / "state"))
+    hist = StreamingSketch(
+        store, col="v", kind="histogram", lo=0.0, width=5.0, n_bins=4
+    )
+    batch = spark.range(20).select(F.col("id").cast("double").alias("v"))
+    with pytest.raises(RuntimeError, match="crashed"):
+        hist.process_batch(batch, batch_id=0)
+    hist.process_batch(batch, batch_id=0)  # the replay after recovery
+    got = {(r["bin"], r["cnt"]) for r in hist.state.merged(spark).collect()}
+    assert got == {(0, 5), (1, 5), (2, 5), (3, 5)}
+
+
 def test_length_curriculum_quartiles(spark):
     """16 docs with token counts 1..16 -> exactly 4 per stage, stage
     monotone in length; n_stages validated."""

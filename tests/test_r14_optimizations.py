@@ -30,7 +30,13 @@ refactor that regresses it fails here and not only in a bench number:
   with 4 pending delta layers, run no more jobs than pinned; so do an
   ``ivfpq_append`` and an ``ann_upsert`` at 0 and at 4 pending layers
   (the committed geometry comes from the memo), and a geometry memo
-  miss on a 4-layer table collects in 1 job.
+  miss on a 4-layer table collects in 1 job; ``ann_cdc_apply``'s op
+  check and ``ann_delete(keys=)``'s no-op probe are ``isEmpty()``
+  tests, one job each.
+- streaming sinks: one micro-batch through the shared driver runs no
+  more jobs per sink than pinned, a replay of a marked sink runs none,
+  and ``StreamingSketch.process_batch`` stays at 2 jobs per batch at
+  any batch count.
 - snapshot reads: ``SnapshotStateStore.read`` starts no Spark job on a
   base-only table, under 8 delta layers, on a delta-only table after
   ``truncate`` and on mixed per-layer keys; a collect over 8 delta
@@ -491,6 +497,52 @@ def test_ann_upsert_probes_a_first_empty_partition_in_one_job(spark, tmp_path):
     assert len(jobs) <= 6, jobs
 
 
+def test_ann_cdc_apply_tests_ops_without_a_collect(spark, tmp_path):
+    """``ann_cdc_apply`` tests the batch for unknown ops with
+    ``isEmpty()`` and collects a bad row only to raise: a 2-row batch
+    whose first of 4 partitions is empty applies in 8 jobs (a
+    ``limit(1).collect()`` probe scanned again: 9 at 4 local cores)."""
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    _ivfpq_fixture(spark, store, 0)
+    schema = "vec_id bigint, embedding array<double>, op string"
+    rows = [(3, [0.5, 0.5, 0.1, 0.2], "u"), (5, None, "d")]
+    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    assert batch.rdd.glom().map(len).collect()[0] == 0
+    with _job_ids(spark.sparkContext, "ann-cdc-first-empty") as jobs:
+        ann_index.ann_cdc_apply(batch, store, "ivfpq_index")
+    live = store.read(spark, "ivfpq_index").filter("n IS NOT NULL")
+    assert sorted(r["n"] for r in live.collect()) == [
+        i for i in range(64) if i != 5
+    ]
+    assert len(jobs) <= 8, jobs
+    bad = spark.createDataFrame([(7, None, "x")], schema)
+    with pytest.raises(ValueError, match="unknown op 'x'"):
+        ann_index.ann_cdc_apply(bad, store, "ivfpq_index")
+
+
+def test_ann_delete_probes_an_absent_key_in_one_job(spark, tmp_path):
+    """``ann_delete(keys=)`` tests its semi join with ``isEmpty()``:
+    on an index with one pending delete layer, an absent key commits
+    nothing in 3 jobs and a present one deletes in 4 (a ``head(1)``
+    probe ran 4 and 5 at 4 local cores)."""
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    _ivfpq_fixture(spark, store, 1)
+    v0 = store.latest_version("ivfpq_index")
+    sc = spark.sparkContext
+    with _job_ids(sc, "ann-delete-absent") as absent:
+        assert ann_index.ann_delete(spark, [999], store, "ivfpq_index") == v0
+    with _job_ids(sc, "ann-delete-present") as present:
+        assert ann_index.ann_delete(spark, [7], store, "ivfpq_index") == v0 + 1
+    assert len(absent) <= 3, absent
+    assert len(present) <= 4, present
+
+
 def test_geometry_memo_miss_collects_in_one_job(spark, tmp_path):
     """A geometry memo miss reads the base files alone: one collect at
     any layer count, and the arrays equal what the build seeded."""
@@ -595,3 +647,99 @@ def test_layered_read_builds_tombstones_once(spark, tmp_path):
     # base + 4 fresh layers + 8 tombstone layers
     assert len(scans) == 13, plan
     assert all("GreaterThanOrEqual(a,4)" in line for line in scans), plan
+
+
+def _sink_case(spark, tmp_path, kind: str):
+    """One streaming sink and its i-th 2-row micro-batch, as a static
+    frame. The ANN sinks write into a 64-vector IVF-PQ index."""
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+    from clickhouse_k_means_spark.streaming import (
+        ann_stream,
+        dedup_stream,
+        kmeans_stream,
+        sketch_stream,
+        snapshot_sink,
+    )
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    vs = "vec_id bigint, embedding array<double>"
+
+    def frame(rows, schema):
+        return lambda i: spark.createDataFrame(rows(i), schema)
+
+    if kind == "snapshot":
+        sink = snapshot_sink.SnapshotStreamSink(store, "t")
+        return sink, frame(lambda i: [(2 * i,), (2 * i + 1,)], "id bigint")
+    if kind in ("histogram", "distinct"):
+        sink = sketch_stream.StreamingSketch(
+            store, col="v", kind=kind, lo=0.0, width=1.0, n_bins=8
+        )
+        return sink, frame(lambda i: [(i,), (i + 1,)], "v bigint")
+    if kind == "kmeans":
+        sink = kmeans_stream.StreamingKMeans([(1, [0.0]), (2, [10.0])])
+        return sink, frame(
+            lambda i: [([float(i)],), ([10.0 + i],)], "Y array<double>"
+        )
+    if kind == "dedup":
+        sink = dedup_stream.StreamingDedup(store, table="seen")
+        sink.sink_path = str(tmp_path / "survivors")
+        return sink, frame(
+            lambda i: [(2 * i, f"doc {i}"), (2 * i + 1, "doc 0")],
+            "doc_id bigint, text string",
+        )
+    _ivfpq_fixture(spark, store, 0)
+    vec = [0.5, 0.5, 0.1, 0.2]
+    if kind == "append":
+        sink = ann_stream.StreamingIvfPqIngest(store)
+        return sink, frame(lambda i: [(100 + 2 * i, vec), (101 + 2 * i, vec)], vs)
+    if kind == "upsert":
+        sink = ann_stream.StreamingUpsertIngest(store, table="ivfpq_index")
+        return sink, frame(lambda i: [(2 * i, vec), (2 * i + 1, vec)], vs)
+    sink = ann_stream.StreamingCdcApply(store, table="ivfpq_index")
+    return sink, frame(
+        lambda i: [(2 * i, vec, "u"), (2 * i + 1, None, "d")], vs + ", op string"
+    )
+
+
+# Spark jobs of one 2-row micro-batch through the shared driver
+# (``MicroBatchSink._apply``: replay check, materialization, emptiness
+# test, commit), measured on 4 local cores; a replay of a marked sink
+# runs none
+_SINK_BATCH_JOBS = {
+    "snapshot": 2, "histogram": 4, "distinct": 4, "kmeans": 4,
+    "dedup": 20, "append": 11, "upsert": 9, "cdc": 11,
+}
+
+
+@pytest.mark.parametrize("kind", list(_SINK_BATCH_JOBS))
+def test_sink_micro_batch_job_count(spark, tmp_path, kind):
+    sink, batch = _sink_case(spark, tmp_path, kind)
+    sc = spark.sparkContext
+    for i in range(3):
+        with _job_ids(sc, f"sink-{kind}-{i}") as jobs:
+            assert sink._apply(batch(i), i) is True
+        assert len(jobs) <= _SINK_BATCH_JOBS[kind], (i, jobs)
+    if sink.marked:
+        with _job_ids(sc, f"sink-{kind}-replay") as jobs:
+            assert sink._apply(batch(1), 1) is False
+        assert jobs == [] and sink.n_skipped == 1
+
+
+def test_sketch_batch_jobs_flat_in_batch_count(spark, tmp_path):
+    """``StreamingSketch.process_batch`` commits the state and its
+    replay marker in one version: 2 jobs per batch at any batch count
+    and none for a replayed batch (a separate batch-id table cost 3, 4
+    and 5 jobs on batches 1 to 3 and 1 to 2 per replay)."""
+    sink, batch = _sink_case(spark, tmp_path, "histogram")
+    sc = spark.sparkContext
+    for i in range(3):
+        with _job_ids(sc, f"sketch-{i}") as jobs:
+            sink.process_batch(batch(i), i)
+        assert len(jobs) <= 2, (i, jobs)
+    for i in range(3):
+        with _job_ids(sc, f"sketch-replay-{i}") as jobs:
+            sink.process_batch(batch(i), i)
+        assert jobs == [], (i, jobs)
+    assert sink.n_batches == 3 and sink.n_skipped == 3
+    merged = sink.state.merged(spark).collect()
+    assert sum(r["cnt"] for r in merged) == 6

@@ -508,8 +508,11 @@ def test_snapshot_sink_commits_and_skips_replay(spark, tmp_path):
     assert sink.n_committed == 2 and sink.n_skipped == 2
     assert store.read(spark, "t").count() == 3
     assert sink.last_batch_id() == 1
-    # marker rides in the manifest, readable without data IO
-    assert store.latest_metadata("t") == {"batch_id": 1}
+    # marker rides in the manifest, readable without data IO, and is
+    # namespaced by the query name
+    assert store.latest_metadata("t") == {
+        "batch_query": "snapshot_ingest", "batch_id": 1,
+    }
 
 
 def test_snapshot_sink_empty_batch_not_committed(spark, tmp_path):
@@ -546,6 +549,41 @@ def test_snapshot_sink_end_to_end_stream(spark, tmp_path):
     q2 = sink.attach(stream, checkpoint=str(tmp_path / "ckpt"))
     q2.awaitTermination()
     assert store.read(spark, "ingest").count() == 50
+
+
+def test_snapshot_sink_second_query_into_one_table_lands_all_rows(
+    spark, tmp_path
+):
+    """A second streaming query into the same table (new query name,
+    fresh checkpoint, batch ids restarting at 0) commits its batches:
+    the marker is matched per query name, so the first query's marker
+    cannot skip them. A replay of either query under its own name
+    still adds nothing."""
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+    from clickhouse_k_means_spark.streaming.snapshot_sink import (
+        SnapshotStreamSink,
+    )
+
+    store = SnapshotStateStore(str(tmp_path / "store"))
+    for name, lo, hi in (("a", 0, 10), ("b", 10, 40)):
+        spark.range(lo, hi).coalesce(1).write.parquet(str(tmp_path / name))
+
+    def run(src: str, name: str, ckpt: str) -> SnapshotStreamSink:
+        sink = SnapshotStreamSink(store, "t")
+        stream = spark.readStream.schema("id long").parquet(str(tmp_path / src))
+        sink.attach(
+            stream, checkpoint=str(tmp_path / ckpt), query_name=name
+        ).awaitTermination()
+        return sink
+
+    assert run("a", "feed_a", "ckpt_a").n_committed == 1
+    assert run("b", "feed_b", "ckpt_b").n_committed == 1
+    assert sorted(r["id"] for r in store.read(spark, "t").collect()) == list(
+        range(40)
+    )
+    replay = run("b", "feed_b", "ckpt_b2")
+    assert replay.n_committed == 0 and replay.n_skipped == 1
+    assert store.read(spark, "t").count() == 40
 
 
 def test_latest_metadata_empty_for_plain_appends(spark, tmp_path):
