@@ -319,37 +319,32 @@ def ivfpq_encode_batch(centroids: np.ndarray, codebooks: list[np.ndarray]):
     return _encode
 
 
-def ivfpq_adc_batch(
+def ivfpq_adc_lut(
     centroids: np.ndarray,
     codebooks: list[np.ndarray],
     q_mat: np.ndarray,
     probe_mask: np.ndarray | None = None,
-):
-    """Factory: pandas_udf mapping an IVFPQ row's ``(cell, codes)``
-    columns to the ``array<double>`` of asymmetric squared distances
-    to each of the ``Q`` queries in ``q_mat`` (normalized rows).
+) -> tuple[np.ndarray, np.ndarray]:
+    """IVFPQ asymmetric-distance lookup table for the ``Q`` queries in
+    ``q_mat`` (normalized rows): ``(lut, cell_to_idx)`` for
+    ``ivfpq_adc_scores``.
 
-    The lookup table folds the coarse centroid INTO the residual
-    entry — ``lut[q, p, s, c] = |q_s - centroid[probed[p]]_s -
-    codebook_s[c]|²`` — built ONLY over the union of probed cells
-    (``probe_mask.any(axis=0)``), with cell ids remapped to a compact
-    probed-cell index baked into the closure (ADVICE r11: the full
-    Q x nlist x m x n_codes table is multi-GB at realistic geometry
-    nlist=1024, m=16, n_codes=256, Q=100; the probed union is bounded
-    by Q*nprobe regardless of nlist). Each per-subspace slab is
+    The table folds the coarse centroid INTO the residual entry —
+    ``lut[q, p, s, c] = |q_s - centroid[probed[p]]_s - codebook_s[c]|²``
+    — and is built ONLY over the union of probed cells
+    (``probe_mask.any(axis=0)``); ``cell_to_idx`` maps a cell id to its
+    compact probed-cell index, -1 outside the union (ADVICE r11: the
+    full Q x nlist x m x n_codes table is multi-GB at realistic
+    geometry nlist=1024, m=16, n_codes=256, Q=100; the probed union is
+    bounded by Q*nprobe regardless of nlist). Each per-subspace slab is
     computed via the expanded form ``|t|² - 2·t·c + |c|²`` with a
     (Q, P, n_codes) matmul — no (Q, P, n_codes, dsub) 4-D transient.
-    Scoring a corpus row is m lookups + adds per query, reading only
-    the ``cell``/``codes`` columns. ``probe_mask[q, cell] = False``
-    poisons that (query, cell) pair to +inf — as does any cell outside
-    the probed union — so rows in unprobed cells score infinite and a
-    single ``!= inf`` filter realizes per-query nprobe selectivity
-    without a join (callers filter; see ``ivfpq_query``)."""
+    ``probe_mask[q, cell] = False`` poisons that (query, cell) pair to
+    +inf."""
     m_sub = len(codebooks)
     dsub = codebooks[0].shape[1]
     cent = np.asarray(centroids, dtype=np.float64)
     nlist = cent.shape[0]
-    n_q = q_mat.shape[0]
     if probe_mask is not None:
         probed = np.flatnonzero(probe_mask.any(axis=0))
     else:
@@ -371,52 +366,52 @@ def ivfpq_adc_batch(
     lut = np.stack(luts, axis=2)  # (Q, P, m, n_codes)
     if probe_mask is not None:
         lut[~probe_mask[:, probed], :, :] = np.inf
-
-    @pandas_udf("array<double>")
-    def _adc(cell: pd.Series, codes: pd.Series) -> pd.Series:
-        cl = cell_to_idx[cell.to_numpy(dtype=np.int64)]  # (n,)
-        cm = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
-        acc = np.zeros((n_q, len(cm)), dtype=np.float64)
-        ok = cl >= 0
-        for s in range(m_sub):
-            acc[:, ok] += lut[:, cl[ok], s, cm[ok, s]]
-        acc[:, ~ok] = np.inf
-        return pd.Series(list(acc.T))
-
-    return _adc
+    return lut, cell_to_idx
 
 
-def pq_adc_batch(codebooks: list[np.ndarray], q_mat: np.ndarray):
-    """Factory: pandas_udf mapping a PQ code column (``array<int>``)
-    to the ``array<double>`` of asymmetric (ADC) squared distances to
-    each of the ``Q`` query vectors in ``q_mat`` (normalized, row per
-    query).
+def ivfpq_adc_scores(
+    lut: np.ndarray, cell_to_idx: np.ndarray, cells: np.ndarray, codes: np.ndarray
+) -> np.ndarray:
+    """``(Q, n)`` asymmetric squared distances of ``n`` IVFPQ rows
+    (``cells`` ``(n,)``, ``codes`` ``(n, m)`` ints) through an
+    ``ivfpq_adc_lut`` table: m lookups + adds per (query, row), summed
+    in subspace order. A row in a cell outside the probed union, or in
+    a cell its query does not probe, scores +inf, and the index
+    search's Arrow pass drops those pairs (``ann_index._adc_shortlist``),
+    so per-query nprobe selectivity needs no join."""
+    cl = cell_to_idx[cells]  # (n,)
+    acc = np.zeros((lut.shape[0], len(cl)), dtype=np.float64)
+    ok = cl >= 0
+    for s in range(lut.shape[2]):
+        acc[:, ok] += lut[:, cl[ok], s, codes[ok, s]]
+    acc[:, ~ok] = np.inf
+    return acc
 
-    The per-query lookup table ``lut[q, s, c] = |q_s - codebook_s[c]|²``
-    is precomputed ONCE driver-side (Q × m × n_codes doubles — tiny)
-    and baked into the UDF closure; scoring a corpus row is then m
-    table lookups + adds per query, never touching the original
-    vector. This is the PQ bargain: the scan reads only the m-byte
-    code column. Jégou, Douze, Schmid, "Product Quantization for
-    Nearest Neighbor Search", TPAMI 2011 — ADC variant (§III-B).
-    """
-    m_sub = len(codebooks)
-    # lut: (Q, m, n_codes)
-    lut = np.stack(
+
+def pq_adc_lut(codebooks: list[np.ndarray], q_mat: np.ndarray) -> np.ndarray:
+    """PQ asymmetric-distance lookup table ``lut[q, s, c] = |q_s -
+    codebook_s[c]|²`` for the ``Q`` queries in ``q_mat`` (normalized,
+    row per query): ``(Q, m, n_codes)`` doubles, built once driver-side.
+    Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
+    Search", TPAMI 2011 — ADC variant (§III-B)."""
+    dsub = codebooks[0].shape[1]
+    return np.stack(
         [
-            ((q_mat[:, s * codebooks[0].shape[1] : (s + 1) * codebooks[0].shape[1]][:, None, :]
+            ((q_mat[:, s * dsub : (s + 1) * dsub][:, None, :]
               - codebooks[s][None, :, :]) ** 2).sum(axis=2)
-            for s in range(m_sub)
+            for s in range(len(codebooks))
         ],
         axis=1,
     )
 
-    @pandas_udf("array<double>")
-    def _adc(codes: pd.Series) -> pd.Series:
-        cm = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
-        acc = np.zeros((lut.shape[0], len(cm)), dtype=np.float64)  # (Q, n)
-        for s in range(m_sub):
-            acc += lut[:, s, cm[:, s]]
-        return pd.Series(list(acc.T))
 
-    return _adc
+def pq_adc_scores(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """``(Q, n)`` asymmetric squared distances of ``n`` PQ code rows
+    (``codes`` ``(n, m)`` ints) through a ``pq_adc_lut`` table: m table
+    lookups + adds per (query, row), summed in subspace order, never
+    touching the original vector (the index search's Arrow pass,
+    ``ann_index._adc_shortlist``)."""
+    acc = np.zeros((lut.shape[0], len(codes)), dtype=np.float64)  # (Q, n)
+    for s in range(lut.shape[1]):
+        acc += lut[:, s, codes[:, s]]
+    return acc

@@ -50,8 +50,10 @@ a ``(centroids, codebooks)`` pair: the bounded query batch is
 collected once and checked on the driver (dimension, finite, non-zero
 norm); with centroids, probe cells are picked driver-side (widened per
 query under ``where=``) and pushed to the scan as ``cell isin``; with
-codebooks an ADC scan keeps a shortlist; then one exact-cosine rerank
-and rank tail that keeps the caller's key types.
+codebooks one Arrow ADC pass keeps each batch's shortlist with its
+query attached, so one exchange by query serves the global shortlist,
+the exact-cosine rerank and the rank tail, which keeps the caller's
+key types.
 
 **Diagnostics**: occupancy (``_stats``/``_skew``, the IVF disease),
 quantization error of the stored codes on a bounded sample
@@ -77,12 +79,14 @@ from pyspark.sql import functions as F
 
 from clickhouse_k_means_spark.functions.distance import cosine_fixed, dot_fixed
 from clickhouse_k_means_spark.functions.vector import (
-    ivfpq_adc_batch,
+    ivfpq_adc_lut,
+    ivfpq_adc_scores,
     ivfpq_encode_batch,
     nearest_cells_batch,
     normalize_rows,
     numpy_kmeans,
-    pq_adc_batch,
+    pq_adc_lut,
+    pq_adc_scores,
     pq_encode_batch,
     quantizer_sample_n,
 )
@@ -687,6 +691,92 @@ def _query(
     )
 
 
+def _codes(batch, m_sub: int) -> np.ndarray:
+    """The ``codes`` column of an Arrow batch as an ``(rows, m_sub)``
+    int64 matrix, flattened without a per-row Python list."""
+    flat = batch.column("codes").flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.int64).reshape(batch.num_rows, m_sub)
+
+
+def _adc_shortlist(scan: DataFrame, cents, books, q_mat: np.ndarray,
+                   probes, qcols: DataFrame, qrows, rerank: int) -> DataFrame:
+    """One Arrow pass over ``scan``'s vector rows that keeps each
+    batch's ADC shortlist and carries its query:
+    ``(qi, q, qv, n, cv, ad2)``.
+
+    Each batch is scored against every query with the driver-built
+    lookup table (``pq_adc_lut``, or ``ivfpq_adc_lut`` masked to each
+    query's ``probes``); +inf (unprobed) pairs are dropped and at most
+    ``rerank`` rows per query survive, the batch's first by
+    ``(ad2, n)``. Every row of the global top-``rerank`` of a query is
+    in its batch's top-``rerank``, so the shortlist window over the
+    union selects the same rows at any partition or batch layout. The
+    query key and vector ride as the Arrow arrays ``local_df`` would
+    build from the collected rows, so the rerank scores the vector
+    exactly as collected."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(qcols.schema)
+    q_arr = pa.array([r["q"] for r in qrows], type=arrow.field("q").type)
+    qv_arr = pa.array([r["qv"] for r in qrows], type=arrow.field("qv").type)
+    m_sub = len(books)
+    if cents is None:
+        lut = pq_adc_lut(books, q_mat)
+
+        def score(b):
+            return pq_adc_scores(lut, _codes(b, m_sub))
+    else:
+        mask = np.zeros((len(q_mat), len(cents)), dtype=bool)
+        for qi, cs in enumerate(probes):
+            mask[qi, cs] = True
+        lut, cell_to_idx = ivfpq_adc_lut(cents, books, q_mat, probe_mask=mask)
+
+        def score(b):
+            cells = b.column("cell").to_numpy(zero_copy_only=False)
+            return ivfpq_adc_scores(
+                lut, cell_to_idx, cells.astype(np.int64), _codes(b, m_sub)
+            )
+
+    def shortlist(batches):
+        for b in batches:
+            d = score(b)  # (queries, rows)
+            keep = np.isfinite(d)
+            if rerank < b.num_rows:
+                # the rerank-th distance per query; ties at it stay
+                # until the n order below breaks them
+                kth = np.partition(d, rerank - 1, axis=1)[:, rerank - 1 :rerank]
+                keep &= d <= kth
+            qi, row = np.nonzero(keep)
+            if not len(qi):
+                continue
+            ad2 = d[qi, row]
+            n = b.column("n").take(row)
+            n_rank = pc.rank(n, null_placement="at_start", tiebreaker="dense")
+            order = np.lexsort((n_rank.to_numpy(), ad2, qi))
+            qi, row, ad2 = qi[order], row[order], ad2[order]
+            top = np.arange(len(qi)) - np.searchsorted(qi, qi) < rerank
+            qi, row, ad2 = qi[top], row[top], ad2[top]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qi, pa.int32()), q_arr.take(qi), qv_arr.take(qi),
+                    b.column("n").take(row), b.column("v").take(row),
+                    pa.array(ad2, pa.float64()),
+                ],
+                names=["qi", "q", "qv", "n", "cv", "ad2"],
+            )
+
+    qtype = qcols.schema["q"].dataType.simpleString()
+    ntype = scan.schema["n"].dataType.simpleString()
+    cols = ["n", "codes", "v"] + (["cell"] if cents is not None else [])
+    return scan.select(*cols).mapInArrow(
+        shortlist,
+        f"qi int, q {qtype}, qv array<double>, n {ntype}, "
+        "cv array<double>, ad2 double",
+    )
+
+
 def _search(
     queries: DataFrame, scan: DataFrame, cents, books, k: int, nprobe,
     rerank, query_key: str, vec: str, fn: str, where=None, meta=None,
@@ -694,29 +784,42 @@ def _search(
 ) -> DataFrame:
     """Top-``k`` by exact cosine over ``scan`` (layout rows encoded
     through ``(cents, books)``): ``(q, n, score, rank)``, ``q`` of the
-    caller's query-key type and ``n`` of the scan's. The query batch
-    is the bounded broadcast side and is collected once.
+    caller's query-key type and ``n`` of the scan's. The bounded query
+    batch is collected once and checked on the driver.
 
     With centroids, each query probes ``min(nprobe, nlist)`` cells;
     under ``where=`` the probe set widens per query (``_adaptive_probes``)
     until it covers ``max(k, rerank)`` predicate-surviving rows, so the
     top-k among survivors comes from scanned candidates. The probed
-    union reaches the parquet scan as ``cell isin``. With codebooks,
-    the ADC lookup tables are built driver-side from the (normalized)
-    queries and the scan keeps a ``rerank`` shortlist (default 4k) per
-    query — IVF-PQ's probe mask scores unprobed cells as +inf. The
-    survivors get one exact-cosine rerank and the rank tail; a stored
-    zero vector is skipped there. A query vector that is
-    NULL, of another dimension, non-finite or of zero norm raises a
-    ``ValueError`` naming its key."""
+    union reaches the parquet scan as ``cell isin``. Plain IVF joins
+    the probed rows to the broadcast ``(query, cell)`` list. With
+    codebooks, one Arrow pass (``_adc_shortlist``) scores the scan
+    against driver-built ADC tables of the (normalized) queries and
+    emits each batch's ``rerank`` shortlist (default 4k) per query with
+    the query key and vector attached; then ONE exchange by ``q``
+    serves the global shortlist (``(ad2, n)`` order per query row),
+    the exact-cosine rerank and the rank tail. A stored zero vector is
+    skipped in the rerank.
+
+    ``k < 1``, ``nprobe < 1`` (with centroids) and ``rerank < k``
+    raise a ``ValueError`` before any Spark job; so does a query vector
+    that is NULL, of another dimension, non-finite or of zero norm,
+    naming its key."""
+    if k < 1:
+        raise ValueError(f"{fn}: k must be >= 1, got {k}")
+    if cents is not None and nprobe < 1:
+        raise ValueError(f"{fn}: nprobe must be >= 1, got {nprobe}")
+    if rerank is not None and rerank < k:
+        raise ValueError(f"{fn}: rerank must be >= k ({k}), got {rerank}")
     spark = queries.sparkSession
     qtype = queries.schema[query_key].dataType.simpleString()
     ntype = scan.schema["n"].dataType.simpleString()
     out_schema = f"q {qtype}, n {ntype}, score double, rank int"
     if where is not None:
         scan = _predicate_filter(where, meta, meta_key, fn)(scan)
-    qrows = queries.select(F.col(query_key).alias("q"),
-                           F.col(vec).cast("array<double>").alias("qv")).collect()
+    qcols = queries.select(F.col(query_key).alias("q"),
+                           F.col(vec).cast("array<double>").alias("qv"))
+    qrows = qcols.collect()
     if not qrows:
         return local_df(spark, [], out_schema)
     dim = _dim(cents, books)
@@ -725,7 +828,8 @@ def _search(
     q_mat = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
     if books is not None:
         q_mat = normalize_rows(q_mat)
-    rerank = rerank or 4 * k
+    rerank = 4 * k if rerank is None else rerank
+    probes = None
     if cents is not None:
         n_probe = min(nprobe, len(cents))
         if where is not None:
@@ -741,40 +845,24 @@ def _search(
             probed = sorted({c for row in probes for c in row})
         # driver-known probe list -> parquet row-group pruning
         scan = scan.filter(F.col("cell").isin(probed))
-    qv = [[float(x) for x in r["qv"]] for r in qrows]
     if books is None:
         qx = local_df(
             spark,
-            [(r["q"], qv[i], probes[i]) for i, r in enumerate(qrows)],
+            [(r["q"], [float(x) for x in r["qv"]], probes[i])
+             for i, r in enumerate(qrows)],
             f"q {qtype}, qv array<double>, cells array<int>",
         ).select("q", "qv", F.explode("cells").alias("cell"))
         scored = scan.select("n", "cell", F.col("v").alias("cv")).join(
             F.broadcast(qx), "cell"
         )
     else:
-        if cents is None:
-            adc = pq_adc_batch(books, q_mat)("codes")
-        else:
-            mask = np.zeros((len(q_mat), len(cents)), dtype=bool)
-            for qi, cs in enumerate(probes):
-                mask[qi, cs] = True
-            adc = ivfpq_adc_batch(cents, books, q_mat, probe_mask=mask)(
-                "cell", "codes"
-            )
-        short = scan.select(
-            "n", F.col("v").alias("cv"), F.posexplode(adc).alias("qi", "ad2")
+        # the one exchange: the shortlist window by (q, qi) and the
+        # rank window by q both run on the hash partitioning by q
+        scored = top_k_by_group(
+            _adc_shortlist(scan, cents, books, q_mat, probes, qcols, qrows,
+                           rerank).repartition("q"),
+            rerank, ["q", "qi"], [F.col("ad2").asc(), F.col("n").asc()],
         )
-        if cents is not None:
-            short = short.filter(F.col("ad2") != float("inf"))
-        short = top_k_by_group(
-            short, rerank, "qi", [F.col("ad2").asc(), F.col("n").asc()]
-        )
-        qdf = local_df(
-            spark,
-            [(i, r["q"], qv[i]) for i, r in enumerate(qrows)],
-            f"qi int, q {qtype}, qv array<double>",
-        )
-        scored = short.join(F.broadcast(qdf), "qi")
     # a stored zero vector has no direction: skip it rather than divide
     # by its norm (the same sum cosine_fixed takes) and fail the query
     scored = scored.filter(dot_fixed("cv", "cv", dim) > 0).select(

@@ -463,8 +463,8 @@ class SnapshotStateStore:
 
         Measured on a 20k-vector IVF-PQ index on 4 cores: planning a
         read runs 0 Spark jobs, and an action over it pays one
-        tombstone build at any layer count. An ``ivfpq_query`` runs 5
-        jobs on a folded index and 6 at 2 to 8 pending layers (its
+        tombstone build at any layer count. An ``ivfpq_query`` runs 3
+        jobs on a folded index and 4 at 2 to 8 pending layers (its
         geometry comes from the base files, ``read_base``);
         ``optimize`` runs 2.
 

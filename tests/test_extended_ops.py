@@ -3419,7 +3419,10 @@ def test_ivfpq_adc_lut_is_compact_over_probed_union(spark):
     import numpy as np
     import pandas as pd
 
-    from clickhouse_k_means_spark.functions.vector import ivfpq_adc_batch
+    from clickhouse_k_means_spark.functions.vector import (
+        ivfpq_adc_lut,
+        ivfpq_adc_scores,
+    )
 
     rng = np.random.RandomState(7)
     nlist, m_sub, n_codes, dsub = 16, 2, 4, 2
@@ -3429,23 +3432,16 @@ def test_ivfpq_adc_lut_is_compact_over_probed_union(spark):
     # queries probe cells {1, 5}, {5, 9}, {1, 9} -> union {1, 5, 9}
     mask = np.zeros((3, nlist), dtype=bool)
     mask[0, [1, 5]] = mask[1, [5, 9]] = mask[2, [1, 9]] = True
-    adc = ivfpq_adc_batch(centroids, books, q_mat, probe_mask=mask)
-    # the baked LUT's cell axis must span exactly the 3-cell union
-    lut = adc.func.__closure__
-    luts = [
-        c.cell_contents
-        for c in lut
-        if isinstance(c.cell_contents, np.ndarray)
-        and c.cell_contents.ndim == 4
-    ]
-    assert luts and luts[0].shape == (3, 3, m_sub, n_codes), [
-        getattr(c.cell_contents, "shape", None) for c in lut
-    ]
-    # drive the pandas UDF body directly (the .func escape hatch):
+    lut, cell_to_idx = ivfpq_adc_lut(centroids, books, q_mat, probe_mask=mask)
+    # the LUT's cell axis must span exactly the 3-cell union
+    assert lut.shape == (3, 3, m_sub, n_codes), lut.shape
+    # score through the kernel the search's Arrow pass runs:
     # rows in cells 1 (probed by q0/q2), 5, 9, and 2 (outside union)
     cells = pd.Series([1, 5, 9, 2])
     codes = pd.Series([[0, 1], [2, 3], [1, 0], [3, 2]])
-    out = np.array(adc.func(cells, codes).tolist())  # (4 rows, 3 queries)
+    out = ivfpq_adc_scores(
+        lut, cell_to_idx, cells.to_numpy(), np.array(codes.tolist())
+    ).T  # (4 rows, 3 queries)
     assert out.shape == (4, 3)
     # outside-union row: +inf for every query
     assert np.isinf(out[3]).all()
@@ -4704,3 +4700,147 @@ def test_storeless_topk_keeps_string_query_keys(spark, family):
     assert by_str.schema["q"].dataType.simpleString() == "string"
     assert sorted((f"k{r['q']}", r["n"], r["score"]) for r in by_int.collect()) == \
         sorted((r["q"], r["n"], r["score"]) for r in by_str.collect())
+
+
+@pytest.fixture(scope="module")
+def small_indexes(spark, tmp_path_factory):
+    """One store holding a 64-vector IVF, PQ and IVF-PQ index."""
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path_factory.mktemp("ann_sizes")))
+    corpus = _random_vectors(spark).filter(F.col("vec_id") < 64)
+    ann_index.ivf_index(corpus, store, nlist=4)
+    ann_index.pq_index(corpus, store, m_sub=2, n_codes=4)
+    ann_index.ivfpq_index(corpus, store, nlist=4, m_sub=2, n_codes=4)
+    return store
+
+
+@pytest.mark.parametrize(
+    "family, sizes, error",
+    [
+        ("ivfpq", {"nprobe": -2}, "nprobe must be >= 1, got -2"),
+        ("ivf", {"nprobe": 0}, "nprobe must be >= 1, got 0"),
+        ("pq", {"k": 0}, "k must be >= 1, got 0"),
+        ("ivfpq", {"rerank": 0}, r"rerank must be >= k \(10\), got 0"),
+        ("pq", {"rerank": -1}, r"rerank must be >= k \(10\), got -1"),
+        ("pq", {"k": 5, "rerank": 2}, r"rerank must be >= k \(5\), got 2"),
+    ],
+    ids=["nprobe-2", "nprobe0", "k0", "rerank0", "rerank-1", "rerank-below-k"],
+)
+def test_ann_query_rejects_bad_search_sizes(spark, small_indexes, family,
+                                            sizes, error):
+    """A search size no query can be served with raises a
+    ``ValueError`` naming the function and the value, before the query
+    batch is collected (its collect here would fail). These used to
+    answer quietly: ``nprobe=-2`` probed all but 2 cells, ``nprobe=0``,
+    ``k=0`` and ``rerank=-1`` returned no rows, ``rerank=0`` meant 4k,
+    and ``rerank`` below ``k`` returned fewer than ``k`` rows."""
+    from clickhouse_k_means_spark.operators import ann_index
+
+    queries = spark.range(2).select(
+        F.col("id").alias("q"),
+        F.raise_error(F.lit("query batch collected"))
+        .cast("array<double>").alias("embedding"),
+    )
+    with pytest.raises(ValueError, match=f"{family}_query: {error}"):
+        getattr(ann_index, f"{family}_query")(queries, small_indexes, **sizes)
+
+
+def _codebook_replay(rows, g, queries, k: int, rerank: int, nprobe):
+    """The codebook search contract in NumPy over the stored vector
+    ``rows`` of geometry ``g``: per query ROW the top-``rerank`` rows by
+    ``(ADC distance, n)`` among its probed cells, exact cosine over
+    them, the rows of one key merged and ranked ``(score desc, n
+    asc)``. Returns ``{(key, rank): (n, score)}``."""
+    import numpy as np
+
+    from clickhouse_k_means_spark.functions.vector import (
+        ivfpq_adc_lut,
+        ivfpq_adc_scores,
+        normalize_rows,
+        pq_adc_lut,
+        pq_adc_scores,
+    )
+    from clickhouse_k_means_spark.operators.ann_index import _probe_order
+
+    n = np.array([r["n"] for r in rows])
+    v = np.array([r["v"] for r in rows])
+    codes = np.array([r["codes"] for r in rows])
+    q_mat = normalize_rows(np.array([qv for _, qv in queries]))
+    if g.centroids is None:
+        d = pq_adc_scores(pq_adc_lut(g.books, q_mat), codes)
+    else:
+        mask = np.zeros((len(q_mat), len(g.centroids)), dtype=bool)
+        probes = _probe_order(q_mat, g.centroids, True)[:, :nprobe]
+        for qi, cells in enumerate(probes):
+            mask[qi, cells] = True
+        lut, cell_to_idx = ivfpq_adc_lut(g.centroids, g.books, q_mat, mask)
+        cells = np.array([r["cell"] for r in rows])
+        d = ivfpq_adc_scores(lut, cell_to_idx, cells, codes)
+    merged: dict = {}
+    for qi, (key, qv) in enumerate(queries):
+        live = np.flatnonzero(np.isfinite(d[qi]))
+        for j in live[np.lexsort((n[live], d[qi, live]))][:rerank]:
+            score = np.dot(qv, v[j]) / (np.linalg.norm(qv) * np.linalg.norm(v[j]))
+            merged.setdefault(key, []).append((-float(score), int(n[j])))
+    return {
+        (key, rank): (nn, -neg)
+        for key, cands in merged.items()
+        for rank, (neg, nn) in enumerate(sorted(cands)[:k], 1)
+    }
+
+
+@pytest.mark.parametrize("family", ["pq", "ivfpq"])
+def test_codebook_shortlist_is_layout_independent(spark, tmp_path, family):
+    """The PQ / IVF-PQ Arrow pass keeps a shortlist per batch, so the
+    answer must not depend on how the scan is cut: 7-row Arrow batches
+    over 11 partitions return exactly what one partition at the default
+    batch size returns, and what the query API returns on the stored
+    layout. All equal the NumPy replay of the search contract
+    (``_codebook_replay``), with a query key repeated on two vectors
+    and with ``rerank`` past the 200-vector corpus."""
+    import numpy as np
+
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / "s"))
+    geometry = {"m_sub": 4, "n_codes": 8}
+    search = {}
+    if family == "ivfpq":
+        geometry["nlist"] = 6
+        search["nprobe"] = 2
+    table = f"{family}_index"
+    getattr(ann_index, f"{family}_index")(_random_vectors(spark), store, **geometry)
+    rng = np.random.default_rng(11)
+    queries = [(key, [float(x) for x in rng.standard_normal(8)])
+               for key in (0, 1, 1, 2)]
+    qdf = spark.createDataFrame(queries, "q bigint, embedding array<double>")
+    g = ann_index._geometry(spark, store, table, None, family, "test")
+    rows = g.snap.filter(F.col("n").isNotNull())
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    for rerank in (None, 256):
+        def top5(scan):
+            return sorted(map(tuple, ann_index._search(
+                qdf, scan, g.centroids, g.books, 5, search.get("nprobe"),
+                rerank, "q", "embedding", "test",
+            ).collect()))
+
+        single = top5(rows.coalesce(1))
+        old = spark.conf.get(batch)
+        spark.conf.set(batch, "7")
+        try:
+            spread = top5(rows.repartition(11))
+        finally:
+            spark.conf.set(batch, old)
+        assert spread == single
+        api = getattr(ann_index, f"{family}_query")(qdf, store, k=5,
+                                                    rerank=rerank, **search)
+        assert sorted(map(tuple, api.collect())) == single
+        want = _codebook_replay(rows.collect(), g, queries, 5, rerank or 20,
+                                search.get("nprobe"))
+        got = {(q, rank): (n, score) for q, n, score, rank in single}
+        assert got.keys() == want.keys() and len(got) == 15
+        for key, (n, score) in want.items():
+            assert got[key][0] == n and abs(got[key][1] - score) < 1e-12, key

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 import __spark_entry__ as entry
 from pyspark.sql import functions as F
 
@@ -261,10 +263,9 @@ def test_ivfpq_query_plan_prunes_cells_and_stays_arrow(spark, tmp_path):
     """The composed index's probe keeps both scale bargains visible in
     the PLAN (r11): the driver-known probe-cell list reaches the
     parquet scan as an In(cell, ...) PushedFilter (row-group pruning —
-    the IVF selectivity bargain), the ADC runs as ArrowEvalPython
-    (vectorized, never row-at-a-time), the bounded query set rides a
-    broadcast, and nothing plans a cartesian or SinglePartition
-    funnel."""
+    the IVF selectivity bargain), the ADC runs in one Arrow map pass
+    (vectorized, never row-at-a-time) that carries the bounded query
+    set, and nothing plans a cartesian or SinglePartition funnel."""
     import math
 
     from clickhouse_k_means_spark.operators.ann_index import (
@@ -293,8 +294,37 @@ def test_ivfpq_query_plan_prunes_cells_and_stays_arrow(spark, tmp_path):
     assert "IsNotNull(n)" in pushed, pushed
     assert not r["has_cartesian"] and not r["single_partition"], r
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan  # never row-at-a-time
+
+
+@pytest.mark.parametrize("family", ["pq", "ivfpq"])
+def test_codebook_query_plans_one_exchange_no_broadcast(spark, tmp_path, family):
+    """A PQ / IVF-PQ query on a folded index shuffles once: the Arrow
+    ADC pass carries each shortlist row's query key and vector, so one
+    hash exchange by query serves the shortlist window, the exact
+    rerank and the rank tail, and no broadcast attaches the queries."""
+    import math
+
+    from clickhouse_k_means_spark.operators import ann_index
+    from clickhouse_k_means_spark.plans.audit import plan_string
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    store = SnapshotStateStore(str(tmp_path / family))
+    base = spark.createDataFrame(
+        [(i, [math.cos(i * 0.02), math.sin(i * 0.02), 0.1, 0.2]) for i in range(64)],
+        "vec_id bigint, embedding array<double>",
+    )
+    geometry = {"m_sub": 2, "n_codes": 4}
+    if family == "ivfpq":
+        geometry["nlist"] = 4
+    getattr(ann_index, f"{family}_index")(base, store, seed=42, **geometry)
+    q = base.filter("vec_id IN (3, 40)")
+    out = getattr(ann_index, f"{family}_query")(q, store, k=5, query_key="vec_id")
+    assert len(out.collect()) == 10
+    plan = plan_string(out).split("== Initial Plan ==")[0]
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_ann_delete_plan_broadcasts_keys_and_pushes_scan_filters(
