@@ -292,31 +292,67 @@ def near_dedup_corpus(
     return df.join(drop, key, "left_anti")
 
 
-def _history_anti_join(
-    batch_keep: DataFrame, seen: DataFrame, broadcast_batch: bool
-) -> DataFrame:
-    """Rows of ``batch_keep`` whose ``text_hash`` is absent from
-    ``seen`` — the history-membership check, in one of two physical
-    shapes:
+def _history_matches(
+    batch: DataFrame, store, table: str, cols: dict, broadcast_batch: bool
+) -> DataFrame | None:
+    """Rows of ``batch`` whose ``cols`` (a batch → history column name
+    map) appear in the committed ``table``; None if it does not exist.
+    The incremental verbs' one history probe.
 
-    - ``broadcast_batch=True`` (the ingest default): the batch's hash
-      set is BROADCAST into a LEFT SEMI scan of history, so the
-      corpus-sized history is read once with the filter applied at the
-      scan and NEVER shuffled; the resulting hit set is at most
-      batch-sized, so the final anti-join broadcasts it too. Total
-      cost: one history scan + two broadcast hash joins — the shape
-      that survives a 100 TB history (a plain anti-join shuffles the
-      ENTIRE history on text_hash every batch).
-    - ``broadcast_batch=False``: classic shuffle anti-join, for the
-      backfill case where one "batch" is itself corpus-sized and would
-      not fit in a broadcast.
+    ``broadcast_batch=True`` (the ingest default) joins one scan of
+    history to the BROADCAST batch: the corpus-sized history is read
+    once and NEVER shuffled. A row comes back per history row it hits,
+    i.e. once (verbs commit only values absent from history); callers
+    use the result as a filter. ``False`` is a shuffled semi-join, for
+    corpus-sized backfill batches that would not fit a broadcast.
     """
+    if not store.exists(table):
+        return None
+    hist = store.read(batch.sparkSession, table).select(
+        *[F.col(h).alias(b) for b, h in cols.items()]
+    )
     if broadcast_batch:
-        hits = seen.join(
-            F.broadcast(batch_keep.select("text_hash")), "text_hash", "left_semi"
-        )
-        return batch_keep.join(F.broadcast(hits), "text_hash", "left_anti")
-    return batch_keep.join(seen, "text_hash", "left_anti")
+        return hist.join(F.broadcast(batch), list(cols)).select(batch.columns)
+    return batch.join(hist, list(cols), "left_semi")
+
+
+def _drop_matches(
+    df: DataFrame, hits: DataFrame | None, on, broadcast_batch: bool
+) -> DataFrame:
+    """``df`` without the rows whose ``on`` values appear in ``hits`` (a
+    ``_history_matches`` result, at most batch-sized, so the ingest
+    default broadcasts it too); ``hits=None`` drops nothing."""
+    if hits is None:
+        return df
+    hits = hits.select(on)
+    return df.join(F.broadcast(hits) if broadcast_batch else hits, on, "left_anti")
+
+
+def _commit_history(store, table: str, rows: DataFrame, n: int) -> int:
+    """Append a plan's new history ``rows`` to ``table`` as one commit,
+    none when its count ``n`` is 0; returns ``n``. A caller that writes
+    the survivors runs it only after that write, so a failed or killed
+    write leaves the history at its prior version."""
+    if n:
+        store.append(rows, table)
+    return n
+
+
+def _exact_plan(new_docs, store, table, text, key, broadcast_batch):
+    """``incremental_exact_dedup`` up to its commit: ``(survivors,
+    new hash rows, their count)``, every frame over checkpoints."""
+    batch_keep = (
+        exact_dedup(new_docs, text=text, key=key)
+        .filter(F.col("keep") == 1)
+        .select(key, "text_hash")
+        .localCheckpoint(eager=True)
+    )
+    hits = _history_matches(batch_keep, store, table,
+                            {"text_hash": "text_hash"}, broadcast_batch)
+    fresh = _drop_matches(batch_keep, hits, "text_hash", broadcast_batch)
+    fresh = fresh.localCheckpoint(eager=True)
+    rows = fresh.select("text_hash")
+    return new_docs.join(fresh.select(key), key), rows, rows.count()
 
 
 def incremental_exact_dedup(
@@ -331,52 +367,65 @@ def incremental_exact_dedup(
     — the production ingest shape (the batch ``exact_dedup`` only sees
     its own rows).
 
-    Protocol: (1) read the persisted hash table (a
-    ``SnapshotStateStore`` read is snapshot-isolated, so a concurrent
-    ingest can't tear it), (2)
-    dedup the batch internally (keep-first by key), (3) check the
-    batch's survivors against history (``_history_anti_join``), (4)
-    append the NEW survivors' hashes as the next commit. Returns
+    Protocol: (1) dedup the batch internally (keep-first by key), (2)
+    drop batch survivors found in the (snapshot-isolated) history
+    (``_history_matches``), (3) append the NEW survivors' hashes as the
+    next commit (``_commit_history``). Steps 1-2 are ``_exact_plan``,
+    whose survivors read only checkpoints, so the commit cannot change
+    them. This verb commits at once; callers that write the survivors
+    (the ingest CLI, ``StreamingDedup``) run the plan, write, and only
+    then commit, so a failed write leaves history untouched. Returns
     (survivors_df, n_committed).
 
     Scale shape: with ``broadcast_batch=True`` (default — batches are
     small relative to history in any ingest loop) the history is
-    scanned once with a broadcast semi filter and never shuffled; set
+    scanned once behind the broadcast batch and never shuffled; set
     it False only for corpus-sized backfill batches, which fall back
-    to the shuffle anti-join keyed on the digest (skew-free — md5 is
+    to a shuffle semi-join keyed on the digest (skew-free — md5 is
     uniform). Either way history is never rewritten — only the batch's
     new hashes are appended. The batch plan (hash + keep-first) and
-    the join result are each ``localCheckpoint``-ed so the batch runs
+    the fresh rows are each ``localCheckpoint``-ed so the batch runs
     ONCE — the broadcast build, the count, the history append, and the
     survivors join all read materialized results instead of
     re-scanning the batch.
 
     Concurrency contract: SINGLE WRITER PER TABLE. The snapshot store's
     optimistic commits prevent torn manifests, but two ingests that
-    anti-join against the same snapshot can both keep the same content
-    and both commit its hash (a lost update above the storage layer).
+    probe the same snapshot can both keep the same content and both
+    commit its hash (a lost update above the storage layer).
     Serialize ingests per hash table — the standard exactly-once
     ingest discipline; cross-table writers need no coordination.
     """
-    spark = new_docs.sparkSession
-    tagged = exact_dedup(new_docs, text=text, key=key)
-    batch_keep = (
-        tagged.filter(F.col("keep") == 1)
-        .select(key, "text_hash")
+    survivors, rows, n = _exact_plan(new_docs, store, table, text, key,
+                                     broadcast_batch)
+    return survivors, _commit_history(store, table, rows, n)
+
+
+def _near_plan(
+    new_docs, store, table, text, key, n_hashes=8, n_bands=4, shingle_n=3,
+    jaccard_threshold=0.8, broadcast_batch=True,
+):
+    """``incremental_near_dedup`` up to its commit: ``(survivors, new
+    band rows, their count)``, every frame over checkpoints."""
+    within = near_dedup_corpus(
+        new_docs, text, key, n_hashes, n_bands, shingle_n, jaccard_threshold
+    ).localCheckpoint(eager=True)
+    sigs = minhash_signatures(
+        within, text=text, key=key, n_hashes=n_hashes, shingle_n=shingle_n
+    )
+    bt = (
+        band_table(sigs, key=key, n_hashes=n_hashes, n_bands=n_bands)
         .localCheckpoint(eager=True)
     )
-    if store.exists(table):
-        seen = store.read(spark, table).select("text_hash")
-        fresh = _history_anti_join(batch_keep, seen, broadcast_batch)
-    else:
-        fresh = batch_keep
-    fresh_rows = fresh.select(key, "text_hash").localCheckpoint(eager=True)
-    survivors = new_docs.join(fresh_rows.select(key), key)
-    new_hashes = fresh_rows.select("text_hash")
-    n = new_hashes.count()
-    if n:
-        store.append(new_hashes, table)
-    return survivors, n
+    bands = {"band_idx": "band_idx", "band_key": "band_key"}
+    hits = _history_matches(bt, store, table, bands, broadcast_batch)
+    survivors = within
+    if hits is not None:
+        survivors = _drop_matches(within, hits, key, broadcast_batch)
+        survivors = survivors.localCheckpoint(eager=True)
+    rows = bt.join(survivors.select(key), key).select("band_idx", "band_key")
+    rows = rows.distinct()
+    return survivors, rows, rows.count()
 
 
 def incremental_near_dedup(
@@ -395,19 +444,20 @@ def incremental_near_dedup(
     content using only the persisted LSH BAND table — the ingest-loop
     form of ``near_dedup_corpus``. Returns (survivors_df, n_band_rows_committed).
 
-    Protocol:
+    Protocol (steps 1-2 are ``_near_plan``, 3 is ``_commit_history``;
+    commit order as in ``incremental_exact_dedup``):
     1. WITHIN-batch near-dedup via the full pipeline (banding → exact
        Jaccard verify → connected components) — texts are present, so
        LSH false positives are filtered before they cost a document.
-    2. Batch survivors' bands vs HISTORY: any survivor sharing one
-       (band_idx, band_key) with a committed band is dropped.
-       History stores band keys only — no text, no signatures — so
-       this layer is banding-only: its false-positive rate is the
-       standard (bands, rows-per-band) S-curve knob, and the trade is
-       storage (n_bands md5s/doc forever) vs re-verification (which
-       would need the full text history). Same decision DuckDB/BigQuery
-       streaming-dedup designs make; documented, replayed exactly by
-       the gate oracle.
+    2. Batch survivors' bands vs HISTORY (``_history_matches``): any
+       survivor sharing one (band_idx, band_key) with a committed band
+       is dropped. History stores band keys only — no text, no
+       signatures — so this layer is banding-only: its false-positive
+       rate is the standard (bands, rows-per-band) S-curve knob, and
+       the trade is storage (n_bands md5s/doc forever) vs
+       re-verification (which would need the full text history). Same
+       decision DuckDB/BigQuery streaming-dedup designs make;
+       documented, replayed exactly by the gate oracle.
     3. Surviving docs' DISTINCT band rows become the next commit.
 
     Transitivity across the two layers: a batch doc B dropped in step
@@ -417,57 +467,17 @@ def incremental_near_dedup(
     Scale shape mirrors ``incremental_exact_dedup``: the batch
     pipeline is localCheckpoint-ed so it runs once; with
     ``broadcast_batch=True`` the history band table is scanned once
-    behind a broadcast semi filter and NEVER shuffled (set False for
+    behind the broadcast batch bands and NEVER shuffled (set False for
     corpus-sized backfills → shuffle semi-join keyed on the uniform
     md5 band key). History is append-only. Concurrency contract:
     SINGLE WRITER PER TABLE (same lost-update argument as the exact
     path).
     """
-    spark = new_docs.sparkSession
-    within = near_dedup_corpus(
-        new_docs,
-        text=text,
-        key=key,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        shingle_n=shingle_n,
-        jaccard_threshold=jaccard_threshold,
-    ).localCheckpoint(eager=True)
-    sigs = minhash_signatures(
-        within, text=text, key=key, n_hashes=n_hashes, shingle_n=shingle_n
+    survivors, rows, n = _near_plan(
+        new_docs, store, table, text, key, n_hashes, n_bands, shingle_n,
+        jaccard_threshold, broadcast_batch,
     )
-    bt = (
-        band_table(sigs, key=key, n_hashes=n_hashes, n_bands=n_bands)
-        .localCheckpoint(eager=True)
-    )
-    if store.exists(table):
-        hist = store.read(spark, table).select("band_idx", "band_key")
-        if broadcast_batch:
-            collide = (
-                hist.join(F.broadcast(bt), ["band_idx", "band_key"])
-                .select(key)
-                .distinct()
-            )
-        else:
-            collide = (
-                bt.join(hist, ["band_idx", "band_key"], "left_semi")
-                .select(key)
-                .distinct()
-            )
-        survivors = within.join(collide, key, "left_anti").localCheckpoint(
-            eager=True
-        )
-    else:
-        survivors = within
-    new_bands = (
-        bt.join(survivors.select(key), key)
-        .select("band_idx", "band_key")
-        .distinct()
-    )
-    n = new_bands.count()
-    if n:
-        store.append(new_bands, table)
-    return survivors, n
+    return survivors, _commit_history(store, table, rows, n)
 
 
 def span_dedup(
@@ -723,6 +733,32 @@ def _span_reassemble(
     )
 
 
+def _chunk_plan(
+    new_docs, store, table, text, key, keep_first, size, n_col,
+    broadcast_batch,
+):
+    """The span and CDC verbs up to their commit: ``(per_doc_df, new
+    hash rows, their count)``. ``keep_first`` is ``_span_keep_first``
+    or ``_cdc_keep_first`` (with its ``size`` knob) and ``n_col`` the
+    output's span-count column."""
+    # the flagged table feeds the history probe AND the reassembly —
+    # materialize once (the unigram_lm/tf lesson)
+    flagged = keep_first(new_docs, text, key, size).localCheckpoint(eager=True)
+    keepers = flagged.filter(F.col("first") == 1)
+    hits = _history_matches(keepers, store, table,
+                            {"span_hash": "text_hash"}, broadcast_batch)
+    fresh = _drop_matches(keepers, hits, "span_hash", broadcast_batch)
+    fresh = fresh.localCheckpoint(eager=True)
+    # survivors after BOTH layers: the within-batch keep-first flag is
+    # re-derived so history drops demote a batch keeper to first=0
+    kept = fresh.select(key, "span_id").withColumn("first", F.lit(1))
+    final = flagged.drop("first").join(kept, [key, "span_id"], "left")
+    final = final.fillna(0, subset=["first"])
+    rows = fresh.select(F.col("span_hash").alias("text_hash")).distinct()
+    out = _span_reassemble(new_docs, final, key)
+    return out.withColumnRenamed("n_spans", n_col), rows, rows.count()
+
+
 def incremental_span_dedup(
     new_docs: DataFrame,
     store,
@@ -738,44 +774,24 @@ def incremental_span_dedup(
 
     Protocol: (1) within-batch keep-first over the batch's span table,
     (2) drop batch keepers whose span hash exists in the persisted
-    history (``_history_anti_join`` — with the default
-    ``broadcast_batch=True`` the batch's hash set broadcasts into a
-    LEFT SEMI scan of history, so a 100 TB span history is read once
-    and NEVER shuffled), (3) reassemble each document from its
-    surviving spans, (4) append the survivors' distinct hashes as the
-    next commit. Returns ``(per_doc_df, n_committed)`` with the same
+    history (``_history_matches`` — with the default
+    ``broadcast_batch=True`` the batch's keepers broadcast into one
+    scan of history, so a 100 TB span history is read once and NEVER
+    shuffled), (3) reassemble each document from its surviving spans,
+    (4) append the survivors' distinct hashes as the next commit.
+    Steps 1-3 are ``_chunk_plan``, step 4 ``_commit_history`` (see
+    ``incremental_exact_dedup`` for the commit order). Returns
+    ``(per_doc_df, n_committed)`` with the same
     ``(key, n_spans, n_kept, dedup_text)`` contract as ``span_dedup``.
 
     Same single-writer-per-table concurrency contract as
     ``incremental_exact_dedup``.
     """
-    spark = new_docs.sparkSession
-    flagged = _span_keep_first(df=new_docs, text=text, key=key,
-                               span_tokens=span_tokens)
-    # the span table feeds the history probe AND the reassembly —
-    # materialize once (the unigram_lm/tf lesson)
-    flagged = flagged.localCheckpoint(eager=True)
-    keepers = flagged.filter(F.col("first") == 1).withColumnRenamed(
-        "span_hash", "text_hash"
+    out, rows, n = _chunk_plan(
+        new_docs, store, table, text, key, _span_keep_first, span_tokens,
+        "n_spans", broadcast_batch,
     )
-    if store.exists(table):
-        seen = store.read(spark, table).select("text_hash")
-        fresh = _history_anti_join(keepers, seen, broadcast_batch)
-    else:
-        fresh = keepers
-    fresh = fresh.localCheckpoint(eager=True)
-    # survivors after BOTH layers: the within-batch keep-first flag is
-    # re-derived so history drops demote a batch keeper to first=0
-    final = flagged.drop("first").join(
-        fresh.select(key, "span_id").withColumn("first", F.lit(1)),
-        [key, "span_id"],
-        "left",
-    ).fillna(0, subset=["first"])
-    new_hashes = fresh.select("text_hash").distinct()
-    n = new_hashes.count()
-    if n:
-        store.append(new_hashes, table)
-    return _span_reassemble(new_docs, final, key), n
+    return out, _commit_history(store, table, rows, n)
 
 
 def incremental_cdc_dedup(
@@ -795,49 +811,18 @@ def incremental_cdc_dedup(
     already-ingested passage at ANY offset produces the passage's
     identical interior chunks, which hit the committed hash set.
 
-    Protocol mirrors ``incremental_span_dedup``: (1) within-batch
-    keep-first over the batch's CDC chunk table (the skew-proof
-    agg+join form), (2) drop batch keepers whose chunk hash exists in
-    history (``_history_anti_join`` — broadcast-semi by default, so a
-    100 TB chunk history is read once and NEVER shuffled), (3)
-    reassemble each document from surviving chunks, (4) append the
-    survivors' distinct hashes atomically. Returns
-    ``(per_doc_df, n_committed)`` with the
+    Protocol is ``incremental_span_dedup``'s, on the same
+    ``_chunk_plan`` body, over the batch's CDC chunk table and its
+    skew-proof agg+join keep-first: the history is read once and NEVER
+    shuffled by default, and the survivors' distinct hashes commit
+    atomically. Returns ``(per_doc_df, n_committed)`` with the
     ``(key, n_chunks, n_kept, dedup_text)`` contract of ``cdc_dedup``.
 
     Same single-writer-per-table concurrency contract as the rest of
     the family.
     """
-    spark = new_docs.sparkSession
-    flagged = _cdc_keep_first(
-        new_docs, text, key, divisor
-    ).localCheckpoint(eager=True)  # feeds probe AND reassembly once
-    keepers = flagged.filter(F.col("first") == 1).withColumnRenamed(
-        "span_hash", "text_hash"
+    out, rows, n = _chunk_plan(
+        new_docs, store, table, text, key, _cdc_keep_first, divisor,
+        "n_chunks", broadcast_batch,
     )
-    if store.exists(table):
-        seen = store.read(spark, table).select("text_hash")
-        fresh = _history_anti_join(keepers, seen, broadcast_batch)
-    else:
-        fresh = keepers
-    fresh = fresh.localCheckpoint(eager=True)
-    # re-derive the keep flag so history drops demote batch keepers
-    final = flagged.drop("first").join(
-        fresh.select(key, "span_id").withColumn("first", F.lit(1)),
-        [key, "span_id"],
-        "left",
-    ).fillna(0, subset=["first"])
-    new_hashes = fresh.select("text_hash").distinct()
-    n = new_hashes.count()
-    if n:
-        store.append(new_hashes, table)
-    out = _span_reassemble(new_docs, final, key)
-    return (
-        out.select(
-            key,
-            F.col("n_spans").alias("n_chunks"),
-            "n_kept",
-            "dedup_text",
-        ),
-        n,
-    )
+    return out, _commit_history(store, table, rows, n)

@@ -61,6 +61,7 @@ from clickhouse_k_means_spark.operators.ann_index import (
     _fit_rows,
     _search,
 )
+from clickhouse_k_means_spark.operators.dedup import _commit_history
 from clickhouse_k_means_spark.operators.topk import ranked_top_k_by_group
 from clickhouse_k_means_spark.sources.dataset import local_df
 
@@ -714,9 +715,13 @@ def incremental_embed_dedup(
     a single append, so the history commit is atomic (one manifest
     link on ``SnapshotStateStore``) and a crash can never leave a band
     row whose vector payload is missing. Readers split the table back by
-    ``t IS [NOT] NULL``. Returns ``(survivors_df, n_committed)``.
-    Same single-writer-per-table contract as the other incremental
-    forms.
+    ``t IS [NOT] NULL``. Protocol: ``_embed_plan`` computes the
+    survivors and those rows over checkpoints, then ``_commit_history``
+    appends them; the ingest CLI writes the survivors between the two,
+    so a failed write commits nothing (see ``incremental_exact_dedup``).
+    Returns ``(survivors_df, n_committed)``, ``n_committed`` counting
+    kept vectors. Same single-writer-per-table contract as the other
+    incremental forms.
 
     Batch-size contract: the BATCH side is broadcast three times
     (its bucket set into the history band probe, its vectors into the
@@ -728,6 +733,19 @@ def incremental_embed_dedup(
     ``incremental_exact_dedup``): a corpus-sized "batch" should go
     through ``embed_neardup_bucketed`` as a batch job instead.
     """
+    survivors, rows, n = _embed_plan(
+        new_vecs, store, table, key, vec, threshold, n_bits, n_tables, seed
+    )
+    return survivors, _commit_history(store, table, rows, n)
+
+
+def _embed_plan(
+    new_vecs, store, table, key, vec, threshold, n_bits=8, n_tables=8,
+    seed=42,
+):
+    """``incremental_embed_dedup`` up to its commit: ``(survivors, new
+    band and vector rows, the number of kept vectors)``, every frame
+    over checkpoints."""
     spark = new_vecs.sparkSession
     # migration guard (review, r9): a state dir written by the
     # pre-atomic two-table layout must FAIL LOUDLY, not be silently
@@ -742,7 +760,7 @@ def incremental_embed_dedup(
         )
     head = new_vecs.select(vec).first()
     if head is None:
-        return new_vecs, 0
+        return new_vecs, None, 0
     dim = len(head[0])
     batch = new_vecs.select(
         F.col(key).alias("k"), F.col(vec).alias("v")
@@ -797,20 +815,17 @@ def incremental_embed_dedup(
         .join(dominated.distinct(), "k", "left_anti")
         .localCheckpoint(eager=True)
     )
-    n = keep.count()
-    if n:
-        vec_type = batch.schema["v"].dataType
-        band_rows = banded.join(F.broadcast(keep), "k").select(
-            "k", "t", "bucket", F.lit(None).cast(vec_type).alias("v")
-        )
-        vec_rows = batch.join(F.broadcast(keep), "k").select(
-            "k",
-            F.lit(None).cast("int").alias("t"),
-            F.lit(None).cast("bigint").alias("bucket"),
-            "v",
-        )
-        store.append(band_rows.unionByName(vec_rows), table)
+    vec_type = batch.schema["v"].dataType
+    band_rows = banded.join(F.broadcast(keep), "k").select(
+        "k", "t", "bucket", F.lit(None).cast(vec_type).alias("v")
+    )
+    vec_rows = batch.join(F.broadcast(keep), "k").select(
+        "k",
+        F.lit(None).cast("int").alias("t"),
+        F.lit(None).cast("bigint").alias("bucket"),
+        "v",
+    )
     survivors = new_vecs.join(
         F.broadcast(keep.withColumnRenamed("k", key)), key, "left_semi"
     )
-    return survivors, n
+    return survivors, band_rows.unionByName(vec_rows), keep.count()

@@ -731,60 +731,40 @@ def main(argv: list[str] | None = None) -> int:
                 assigned = eng.assign(yh, eng.fit(yh).model)
             out = assigned.withColumnRenamed("i", args.key)
     elif args.cmd == "ingest":
+        from clickhouse_k_means_spark.operators import dedup, similarity
         from clickhouse_k_means_spark.sources.state import SnapshotStateStore
 
         store = SnapshotStateStore(args.state)
-        # exactly-once guard (ADVICE r8): the incremental operators
-        # commit state BEFORE the survivors parquet is written below.
-        # If that write fails, a naive retry would dedup the batch
-        # against its own just-committed history and silently lose
-        # its unique content — so snapshot every table's version now
-        # and roll back any that advanced if the write fails.
-        pre_versions = {t: store.latest_version(t) for t in store.tables()}
+        # plan only: the history commits below, after the survivors are
+        # written, so a failed or killed write leaves it untouched and a
+        # retry overwrites --out with the same rows
         if args.mode == "exact":
-            from clickhouse_k_means_spark.operators.dedup import (
-                incremental_exact_dedup,
-            )
-
-            out, committed = incremental_exact_dedup(
-                df, store, text=args.text, key=args.key
+            table = "seen_hashes"
+            out, rows, committed = dedup._exact_plan(
+                df, store, table, args.text, args.key, True
             )
         elif args.mode == "near":
-            from clickhouse_k_means_spark.operators.dedup import (
-                incremental_near_dedup,
-            )
-
+            table = "seen_bands"
             thr = None if args.threshold < 0 else args.threshold
-            out, committed = incremental_near_dedup(
-                df, store, text=args.text, key=args.key,
-                jaccard_threshold=thr,
+            out, rows, committed = dedup._near_plan(
+                df, store, table, args.text, args.key, jaccard_threshold=thr
             )
         elif args.mode == "span":
-            from clickhouse_k_means_spark.operators.dedup import (
-                incremental_span_dedup,
-            )
-
-            out, committed = incremental_span_dedup(
-                df, store, text=args.text, key=args.key,
-                span_tokens=args.span_tokens,
+            table = "seen_spans"
+            out, rows, committed = dedup._chunk_plan(
+                df, store, table, args.text, args.key, dedup._span_keep_first,
+                args.span_tokens, "n_spans", True,
             )
         elif args.mode == "cdc":
-            from clickhouse_k_means_spark.operators.dedup import (
-                incremental_cdc_dedup,
-            )
-
-            out, committed = incremental_cdc_dedup(
-                df, store, text=args.text, key=args.key,
-                divisor=args.divisor,
+            table = "seen_chunks"
+            out, rows, committed = dedup._chunk_plan(
+                df, store, table, args.text, args.key, dedup._cdc_keep_first,
+                args.divisor, "n_chunks", True,
             )
         else:
-            from clickhouse_k_means_spark.operators.similarity import (
-                incremental_embed_dedup,
-            )
-
-            out, committed = incremental_embed_dedup(
-                df, store, key=args.key, vec=args.vec,
-                threshold=args.threshold,
+            table = "seen_embed"
+            out, rows, committed = similarity._embed_plan(
+                df, store, table, args.key, args.vec, args.threshold
             )
         extra["committed"] = int(committed)
         extra["state"] = args.state
@@ -798,26 +778,9 @@ def main(argv: list[str] | None = None) -> int:
     else:  # pragma: no cover - argparse enforces choices
         return 2
 
+    out.write.mode("overwrite").parquet(args.out)
     if args.cmd == "ingest":
-        try:
-            out.write.mode("overwrite").parquet(args.out)
-        except BaseException:
-            # undo the operator's state commit so the batch can be
-            # retried cleanly (survivors must land before state
-            # sticks — ADVICE r8)
-            for t in store.tables():
-                pre = pre_versions.get(t)
-                if pre is None:
-                    # table CREATED by the failed run: drop it outright
-                    # — a truncate would leave a permanently 'existing'
-                    # empty table that exists()-guards misread
-                    # (ADVICE r9)
-                    store.drop(t)
-                elif store.latest_version(t) != pre:
-                    store.rollback(t, pre)
-            raise
-    else:
-        out.write.mode("overwrite").parquet(args.out)
+        dedup._commit_history(store, table, rows, committed)
     n_out = spark.read.parquet(args.out).count()
     print(json.dumps({"cmd": args.cmd, "rows_in": n_in, "rows_out": n_out,
                       "out": args.out, **extra}))

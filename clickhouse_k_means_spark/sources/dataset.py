@@ -53,24 +53,17 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     data-sized, so the driver-held copy is fine at every scale.
     Row order is preserved (LocalRelation keeps insertion order) and
     float64 values round-trip bit-exactly (binary Arrow columns, no
-    text rendering). Any conversion surprise falls back to the
-    ``parallelize(rows, 1)`` shape, which keeps the old semantics.
-    NOTE: ``coalesce(1)`` is NOT equivalent — it keeps the 32 pickled
-    parent slices and evaluates them SEQUENTIALLY through the Python
-    runner inside one task (~7 s per action, measured r14).
+    text rendering). NOTE: ``coalesce(1)`` is NOT equivalent — it
+    keeps the 32 pickled parent slices and evaluates them SEQUENTIALLY
+    through the Python runner inside one task (~7 s per action,
+    measured r14).
 
     Cost: the Arrow frame ends in ``coalesce(1)`` (one file per
     commit, see ``_arrow_local_df``), and that costs one Spark job per
     collect: collecting the plain ``LocalRelation`` runs 0 jobs, the
     coalesced one 1 (Spark 4.1.2, job groups), so an ANN query over a
     ``local_df`` query batch spends one job on collecting it."""
-    rows = list(rows)
-    try:
-        return _arrow_local_df(spark, rows, schema)
-    except Exception:
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema
-        )
+    return _arrow_local_df(spark, list(rows), schema)
 
 
 def _arrow_local_df(spark: SparkSession, rows: list, schema) -> DataFrame:

@@ -576,9 +576,8 @@ class SnapshotStateStore:
         Delta's ``RESTORE TO VERSION``. History is preserved (the
         rolled-back versions stay time-travelable until vacuum) and
         the data files are immutable, so this is one manifest write,
-        no data IO. The ingest CLI uses it to undo a state commit
-        whose output write failed (ADVICE r8). A delta-bearing
-        manifest restores with its layers verbatim."""
+        no data IO. A delta-bearing manifest restores with its layers
+        verbatim."""
         m = self._read_manifest(table, version)
         return self._commit(
             table, m["files"], replace=True, schema_json=m.get("schema"),
@@ -588,13 +587,10 @@ class SnapshotStateStore:
     def drop(self, table: str) -> None:
         """PHYSICAL drop: remove the table's manifests and data so
         ``exists()`` goes back to False. Unlike ``truncate`` (logical,
-        time-travelable), this is for undoing the CREATION of a table —
-        the ingest CLI's failed-write rollback uses it for tables that
-        did not exist before the failed run (ADVICE r9: truncating a
-        just-created table leaves a permanently 'existing' empty table
-        that downstream exists()-guards misread — the ANN index builds
-        needed a geometry probe to tell it apart). No-op if
-        the table does not exist."""
+        time-travelable), this is for undoing the CREATION of a table:
+        truncating it would leave a permanently 'existing' empty table
+        that exists()-guards misread. No-op if the table does not
+        exist."""
         t = self._table(table)
         if t.exists():
             shutil.rmtree(t)

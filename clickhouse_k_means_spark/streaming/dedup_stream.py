@@ -17,18 +17,26 @@ Scale shape (100 TB corpus, streaming arrivals):
   replay marker (the hash history is key-idempotent). A crashed query
   resumes from its checkpoint and re-runs the failed batch against the
   last COMMITTED hash snapshot.
-- NOT replay-safe for the survivor output: the hash commit happens
-  before the survivors are written, so a crash between the two loses
-  that batch's survivors — on replay every hash is already in history
-  and zero survivors re-emit.
+- survivors land before their hashes commit (plan, write, commit — the
+  ingest CLI's order). A failed write commits nothing, so the replay
+  dedups against the same history and writes the same survivors; a
+  crash after the write and before the commit re-writes that batch's
+  survivors on replay. At-least-once for the survivor output, never a
+  loss.
 - single writer per hash table (the incremental-dedup contract);
   Structured Streaming guarantees serial micro-batches within a query.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
+from clickhouse_k_means_spark.operators.dedup import (
+    _commit_history,
+    _exact_plan,
+    incremental_exact_dedup,
+)
 from clickhouse_k_means_spark.streaming.snapshot_sink import MicroBatchSink
 
 
@@ -53,24 +61,28 @@ class StreamingDedup(MicroBatchSink):
         self.n_survived = 0
 
     def process_batch(self, batch: DataFrame) -> DataFrame:
-        """Dedup one micro-batch against history; returns survivors."""
-        from clickhouse_k_means_spark.operators.dedup import (
-            incremental_exact_dedup,
-        )
-
+        """Dedup one micro-batch against history and commit its hashes;
+        returns survivors."""
         survivors, _ = incremental_exact_dedup(
             batch, self.store, table=self.table, text=self.text, key=self.key
         )
         return survivors
 
     def _commit(self, batch: DataFrame, _batch_id: int, n: int) -> None:
+        survivors, rows, n_new = _exact_plan(
+            batch, self.store, self.table, self.text, self.key, True
+        )
+        n_survived = 0
+        if n_new:
+            # the write counts what it lands: the survivors run once
+            written = Observation()
+            out = survivors.observe(written, F.count("*").alias("n"))
+            out.write.mode("append").parquet(self.sink_path)
+            n_survived = written.get["n"]
+        _commit_history(self.store, self.table, rows, n_new)
         self.n_batches += 1
         self.n_seen += n
-        survivors = self.process_batch(batch)
-        n = survivors.count()
-        self.n_survived += n
-        if n:
-            survivors.write.mode("append").parquet(self.sink_path)
+        self.n_survived += n_survived
 
     def attach(
         self,

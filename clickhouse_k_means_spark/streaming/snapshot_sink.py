@@ -45,7 +45,10 @@ silent loss. One writer per (query name, table).
 
 Key-idempotent sinks (the ANN appends, ``StreamingDedup``) and
 ``StreamingKMeans`` carry no marker: a replayed batch re-runs, and the
-append's or dedup's anti-join adds nothing for it.
+ANN append's anti-join adds nothing for it. ``StreamingDedup`` writes
+a batch's survivors before it commits their hashes, so a replay after
+a crash between the two writes those survivors again: at-least-once
+output, never a loss.
 """
 
 from __future__ import annotations

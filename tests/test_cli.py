@@ -610,6 +610,47 @@ def test_pipeline_cli_ingest_rollback_drops_created_tables(
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1}
 
 
+def test_pipeline_cli_ingest_failed_write_adds_no_version(
+    tmp_path, capsys, spark
+):
+    """ingest plans, writes the survivors, and only then commits their
+    history: a failed write leaves the history at its prior version
+    (no commit, and no rollback commit undoing it), and a retry lands
+    the batch's unique content."""
+    from clickhouse_k_means_spark.pipeline import main as pmain
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "alpha beta gamma")], "doc_id long, text string"
+    ).write.parquet(src)
+    state = str(tmp_path / "state")
+    assert pmain(["ingest", "--input", src, "--out", str(tmp_path / "k1"),
+                  "--mode", "exact", "--state", state]) == 0
+    store = SnapshotStateStore(state)
+    v_before = store.latest_version("seen_hashes")
+    capsys.readouterr()
+
+    src2 = str(tmp_path / "docs2")
+    spark.createDataFrame(
+        [(2, "eta theta iota"), (3, "eta theta iota")],
+        "doc_id long, text string",
+    ).write.parquet(src2)
+    blocker = tmp_path / "blocker"
+    blocker.write_text("not a directory")
+    with pytest.raises(BaseException):
+        pmain(["ingest", "--input", src2, "--out", str(blocker / "o"),
+               "--mode", "exact", "--state", state])
+    assert store.latest_version("seen_hashes") == v_before
+    capsys.readouterr()
+
+    out = str(tmp_path / "k2")
+    assert pmain(["ingest", "--input", src2, "--out", out,
+                  "--mode", "exact", "--state", state]) == 0
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {2}
+    assert store.latest_version("seen_hashes") == v_before + 1
+
+
 def test_pipeline_cli_compact(tmp_path, capsys, spark):
     """compact = snapshot-store OPTIMIZE (+ optional VACUUM) as a
     maintenance subcommand: many tiny ingest commits bin-pack into one

@@ -587,6 +587,35 @@ def test_streaming_dedup_across_microbatches(spark, tmp_path):
     assert store.latest_version("seen") == 2  # one snapshot per batch
 
 
+def test_streaming_dedup_failed_write_commits_no_hashes(spark, tmp_path):
+    """The survivors land before their hashes commit: a micro-batch
+    whose survivors write fails leaves the hash history without a
+    version, and replaying it into a good sink path lands every unique
+    document of the batch."""
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+    from clickhouse_k_means_spark.streaming.dedup_stream import StreamingDedup
+
+    store = SnapshotStateStore(str(tmp_path / "state"))
+    sd = StreamingDedup(store, table="seen")
+    batch = spark.createDataFrame(
+        [(1, "alpha text"), (2, "beta text"), (3, "alpha text")],
+        "doc_id long, text string",
+    )
+    # a FILE where the writer needs a directory
+    blocker = tmp_path / "blocker"
+    blocker.write_text("not a directory")
+    sd.sink_path = str(blocker / "out")
+    with pytest.raises(Exception):
+        sd._apply(batch, 0)
+    assert store.latest_version("seen") is None
+    sd.sink_path = str(tmp_path / "sink")
+    assert sd._apply(batch, 0) is True
+    out = spark.read.parquet(sd.sink_path)
+    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
+    assert store.latest_version("seen") == 1
+    assert (sd.n_batches, sd.n_seen, sd.n_survived) == (1, 3, 2)
+
+
 def test_streaming_assign_stateless(spark, sf_dir):
     from clickhouse_k_means_spark.streaming.windows import (
         stream_events,
@@ -2196,6 +2225,60 @@ def test_incremental_span_dedup_history_not_shuffled(spark, tmp_path):
     # reassembly shuffles on the doc key / span digest only; nothing
     # repartitions on text_hash (the history side)
     assert not any("text_hash" in s for s in info["shuffle_keys"]), info
+
+
+_PROBE_CASES = {
+    "exact": ("incremental_exact_dedup", {}),
+    "near": ("incremental_near_dedup", {}),
+    "span": ("incremental_span_dedup", {"span_tokens": 2}),
+    "cdc": ("incremental_cdc_dedup", {"divisor": 1}),
+}
+
+
+@pytest.mark.parametrize("verb", list(_PROBE_CASES))
+def test_history_probe_scans_history_once_behind_broadcast_batch(
+    spark, tmp_path, monkeypatch, verb
+):
+    """The frame ``_history_matches`` hands each verb (captured from a
+    real second-batch call) is one history FileScan joined to the
+    broadcast batch, with no hashpartitioning exchange: the history is
+    read once and never shuffled. It holds exactly the batch rows
+    that hit history."""
+    from clickhouse_k_means_spark.operators import dedup
+    from clickhouse_k_means_spark.plans.audit import plan_string
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    name, kw = _PROBE_CASES[verb]
+    fn = getattr(dedup, name)
+    store = SnapshotStateStore(str(tmp_path / verb))
+    schema = "doc_id bigint, text string"
+    fn(spark.createDataFrame([(1, "a b c d")], schema), store, **kw)
+    probes = []
+    real = dedup._history_matches
+
+    def spy(*args, **kwargs):
+        probes.append(real(*args, **kwargs))
+        return probes[-1]
+
+    monkeypatch.setattr(dedup, "_history_matches", spy)
+    b2 = spark.createDataFrame([(2, "a b c d"), (3, "p q r s")], schema)
+    fn(b2, store, **kw)
+    (hits,) = probes
+    assert {r["doc_id"] for r in hits.collect()} == {2}
+    plan = plan_string(hits).split("== Initial Plan ==")[0]
+    assert plan.count("FileScan") == 1, plan
+    assert "hashpartitioning" not in plan, plan
+    lines = plan.splitlines()
+    (at,) = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    depth = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    below = []
+    for ln in lines[at + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        below.append(ln)
+    # the broadcast side is the checkpointed batch, never the history
+    assert any("ExistingRDD" in ln for ln in below), plan
+    assert not any("FileScan" in ln for ln in below), plan
 
 
 def test_incremental_embed_dedup_cross_batch(spark, tmp_path):

@@ -711,7 +711,7 @@ def _sink_case(spark, tmp_path, kind: str):
 # runs none
 _SINK_BATCH_JOBS = {
     "snapshot": 2, "histogram": 4, "distinct": 4, "kmeans": 4,
-    "dedup": 20, "append": 11, "upsert": 9, "cdc": 11,
+    "dedup": 15, "append": 11, "upsert": 9, "cdc": 11,
 }
 
 

@@ -310,12 +310,13 @@ def test_truncate_then_ingest_does_not_crash(spark, snap):
 
 def test_incremental_dedup_broadcast_path_never_shuffles_history(spark, snap):
     """The ingest default (broadcast_batch=True) must read history
-    once through a broadcast LEFT SEMI filter and anti-join the batch
+    once joined to the broadcast batch and anti-join the batch
     against the (broadcast) hit set — NO shuffle of the history side
     at any size. Guarded on the physical plan: two BroadcastHashJoins,
     zero hash-partition exchanges."""
     from clickhouse_k_means_spark.operators.dedup import (
-        _history_anti_join,
+        _drop_matches,
+        _history_matches,
         incremental_exact_dedup,
     )
 
@@ -323,13 +324,19 @@ def test_incremental_dedup_broadcast_path_never_shuffles_history(spark, snap):
         [(1, "alpha text"), (2, "beta text")], "doc_id long, text string"
     )
     incremental_exact_dedup(b1, snap, table="seen")
-    seen = snap.read(spark, "seen").select("text_hash")
     batch_keep = spark.createDataFrame(
         [(10, "aa"), (11, "bb")], "doc_id long, text_hash string"
     )
     import re
 
     jvm = spark._jvm
+
+    def _fresh(broadcast_batch):
+        hits = _history_matches(
+            batch_keep, snap, "seen", {"text_hash": "text_hash"},
+            broadcast_batch,
+        )
+        return _drop_matches(batch_keep, hits, "text_hash", broadcast_batch)
 
     def _plan(df):
         return df._jdf.queryExecution().explainString(
@@ -341,7 +348,7 @@ def test_incremental_dedup_broadcast_path_never_shuffles_history(spark, snap):
     # the history side anyway — tiny test inputs would)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = _plan(_history_anti_join(batch_keep, seen, broadcast_batch=True))
+        plan = _plan(_fresh(broadcast_batch=True))
         # formatted explain prints each node twice (tree + detail);
         # count the numbered detail headers
         assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 2, plan
@@ -349,7 +356,7 @@ def test_incremental_dedup_broadcast_path_never_shuffles_history(spark, snap):
         # Arguments line says hashpartitioning(...)
         assert "hashpartitioning" not in plan, plan
         # the fallback backfill shape (corpus-sized batch) still shuffles
-        plan2 = _plan(_history_anti_join(batch_keep, seen, broadcast_batch=False))
+        plan2 = _plan(_fresh(broadcast_batch=False))
         assert "hashpartitioning" in plan2, plan2
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
