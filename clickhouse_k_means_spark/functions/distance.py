@@ -13,6 +13,7 @@ reference's scalar-subquery model arrays at k-means.sql:36).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -93,8 +94,10 @@ def cosine_similarity(a, b) -> Column:
 
 
 def _lit_f(x: float) -> str:
-    """Exact SQL double literal (repr round-trips float64)."""
-    return f"CAST({x!r} AS DOUBLE)"
+    """Exact SQL double literal (repr round-trips float64). NaN and
+    ±inf print as ``nan``/``inf``, which SQL would read as column
+    names, so those cast from a string."""
+    return f"CAST({x!r} AS DOUBLE)" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
 def _idx(name: str, d: int) -> str:

@@ -205,7 +205,9 @@ def test_fit_best_restarts_keep_every_setting_but_the_seed(spark, monkeypatch):
     quietly fall back to the sequential ++ init or the fused Lloyd
     step."""
     seen = []
-    fit = KMeansEngine.fit
+    # the per-restart body: every restart runs on fit_best's one
+    # prepared working set
+    fit = KMeansEngine._fit_on_prepared
     parallel_init = KMeansEngine.init_centroids_parallel
 
     def spy_fit(self, yh, *args, **kwargs):
@@ -219,7 +221,7 @@ def test_fit_best_restarts_keep_every_setting_but_the_seed(spark, monkeypatch):
         seen.append(("parallel_init", self.seed))
         return parallel_init(self, *args, **kwargs)
 
-    monkeypatch.setattr(KMeansEngine, "fit", spy_fit)
+    monkeypatch.setattr(KMeansEngine, "_fit_on_prepared", spy_fit)
     monkeypatch.setattr(KMeansEngine, "init_centroids_parallel", spy_init)
     yh = from_table(
         golden_points(spark, n_clusters=3, points_per_cluster=50, seed=7),

@@ -84,6 +84,25 @@ def test_pivot_clusters_grouped(spark):
     assert rows[0]["p1"] == 2.0 and rows[1]["p2"] == 4.0
 
 
+def test_to_tsv_string_pivot_export(spark):
+    """The reference's clipboard export (k-means.sh:45): TSVWithNames of
+    the pivoted model, a header row, tab-separated cells and the ' '
+    NULL token."""
+    from clickhouse_k_means_spark.sources.sinks import to_tsv_string
+
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 1), (3.0, 4.0, 2), (5.0, 6.5, 2)], "x double, y double, j int"
+    )
+    pivoted = pivot_clusters(df, [1, 2], exact_parity=True).orderBy("x")
+    assert to_tsv_string(pivoted).splitlines() == [
+        "x\tp1\tp2",
+        "1.0\t2.0\t ",
+        "3.0\t \t4.0",
+        "5.0\t \t6.5",
+    ]
+    assert to_tsv_string(pivoted, null_token="NULL").splitlines()[1] == "1.0\t2.0\tNULL"
+
+
 def test_top_k_and_by_group(spark):
     df = spark.createDataFrame(
         [(g, v) for g in range(3) for v in range(10)], "g int, v int"

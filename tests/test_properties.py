@@ -115,6 +115,45 @@ def test_fit_translation_shifts_centroids(spark):
         assert cb[1] - ca[1] == pytest.approx(-40.0)
 
 
+# ---- bad features raise a named error from prepare's aggregate ----
+
+_BAD_Y = {
+    "nan": [float("nan"), 1.0],
+    "inf": [float("inf"), 1.0],
+    "-inf": [1.0, float("-inf")],
+    "null_element": [1.0, None],
+    "null_y": None,
+}
+
+
+@pytest.mark.parametrize("parts", [1, 4])
+@pytest.mark.parametrize("path", ["plusplus", "parallel", "resume_fit", "fit_best"])
+@pytest.mark.parametrize("kind", list(_BAD_Y))
+def test_bad_features_raise_named_error(spark, tmp_path, kind, path, parts):
+    """A NULL ``Y`` or a NULL, NaN or infinite element is counted in the
+    working set's one aggregate and raises a ``ValueError`` naming ``Y``
+    and the count, before any init or Lloyd step reads the rows."""
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    rows = [(i, [float(i % 3), float(i // 3)]) for i in range(12)]
+    rows += [(12, _BAD_Y[kind]), (13, _BAD_Y[kind])]
+    yh = spark.createDataFrame(rows, "i long, Y array<double>").repartition(parts)
+    eng = KMeansEngine(k=2, seed=3, init="parallel" if path == "parallel" else "plusplus")
+    with pytest.raises(ValueError, match=r"^k-means: 2 of 14 rows of Y are NULL or hold"):
+        if path == "resume_fit":
+            store = SnapshotStateStore(str(tmp_path / "store"))
+            log = [(0, 1, [0.0, 0.0]), (0, 2, [2.0, 3.0])]
+            store.append(
+                spark.createDataFrame(log, "step bigint, j int, C array<double>"), "wcr"
+            )
+            eng.resume_fit(yh, store)
+        elif path == "fit_best":
+            eng.fit_best(yh, n_init=2)
+        else:
+            eng.fit(yh)
+
+
 # ---- extended-surface invariants (r5) ----
 
 texts = st.lists(

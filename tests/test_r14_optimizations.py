@@ -18,10 +18,14 @@ refactor that regresses it fails here and not only in a bench number:
 - ``_aqe_off``: scoped — the session flag is restored on exit, on
   the exception path too; so is ``spark.sql.shuffle.partitions`` when
   the scope sets it.
-- the ++ fit's job floor: each pick is two jobs (bucket sums, in-bucket
-  window), prepare is at most two, so a k=4 fit that converges in two
-  Lloyd steps runs at most 12 jobs; the init is the same model at any
-  input layout in both the xxhash and the reproducible mode.
+- the fit's job floor: each ++ pick is two jobs (bucket sums,
+  in-bucket window), prepare is at most two and its one aggregate also
+  makes the seeded first pick, so a k=4 fit that converges in two
+  Lloyd steps runs at most 10 jobs on a cached frame at full width
+  (prepare then needs no repartition); ``fit_best``, a reproducible-mode
+  fit, ``bisecting_fit`` and ``resume_fit`` are pinned too. The init
+  is the same model at any input layout in both the xxhash and the
+  reproducible mode, and a fit's step-0 model is the init's own.
 - checkpoint blocks: an init round's state and a bisecting split's
   assignment frame and parent are released once nothing reads them,
   so stored blocks stay flat per round and per split.
@@ -49,9 +53,9 @@ from __future__ import annotations
 import glob
 import os
 import random
-from contextlib import contextmanager
 
 import pytest
+from conftest import _job_ids
 from pyspark.sql import functions as F
 
 
@@ -171,20 +175,6 @@ def _blobs(spark, n_per: int = 250, seed: int = 0):
     )
 
 
-@contextmanager
-def _job_ids(sc, group: str):
-    """Collect the ids of every Spark job started inside the block."""
-    old = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", old)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_plusplus_fit_and_init_job_floor(spark):
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
 
@@ -195,21 +185,26 @@ def test_plusplus_fit_and_init_job_floor(spark):
         with _job_ids(sc, "pp-fit") as fit_jobs:
             res = KMeansEngine(k=4, seed=7).fit(yh)
         assert len(res.model) == 4 and res.n_iter == 2
-        assert len(fit_jobs) <= 12, fit_jobs
+        # prepare 1 (no repartition; its aggregate makes the first
+        # pick), init 7 (the distinct state's exchange, two per pick),
+        # Lloyd 2
+        assert len(fit_jobs) <= 10, fit_jobs
         for k in (3, 6):
             eng = KMeansEngine(k=k, seed=7)
             with _job_ids(sc, f"pp-init-{k}") as init_jobs:
                 eng.init_centroids(yh, random.Random(7))
-            # first pick + the distinct state's exchange, then two per pick
+            # called on its own: the first pick's one-row aggregate and
+            # the distinct state's exchange, then two per pick
             assert len(init_jobs) <= 2 * (k - 1) + 2, (k, init_jobs)
     finally:
         yh.unpersist()
 
 
 def test_parallel_init_first_pick_is_the_emptiness_check(spark):
-    """A k-means|| fit runs 11 jobs, one fewer than while the init
-    probed ``Y`` for emptiness before its first pick; an empty input
-    still raises the named error from the first pick's collect."""
+    """A k-means|| fit runs 10 jobs: prepare's aggregate makes the
+    first pick, so the init runs no probe of its own. Called on its
+    own, the init's first-pick aggregate is the emptiness check: an
+    empty input raises the named error."""
     from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
 
     sc = spark.sparkContext
@@ -219,13 +214,62 @@ def test_parallel_init_first_pick_is_the_emptiness_check(spark):
         with _job_ids(sc, "par-fit") as fit_jobs:
             res = KMeansEngine(k=4, seed=7, init="parallel").fit(yh)
         assert len(res.model) == 4 and res.n_iter == 2
-        assert len(fit_jobs) <= 11, fit_jobs
+        assert len(fit_jobs) <= 10, fit_jobs
         with pytest.raises(ValueError, match="input DataFrame is empty"):
             KMeansEngine(k=4, seed=7, init="parallel").init_centroids_parallel(
                 yh.limit(0), random.Random(7)
             )
     finally:
         yh.unpersist()
+
+
+def test_fit_paths_job_pins(spark, tmp_path):
+    """One prepare serves ``fit_best``'s restarts and makes every first
+    pick; a reproducible-mode fit takes its pick there too.
+    ``bisecting_fit`` (its own checkpointed base, one pick per split)
+    and ``resume_fit`` (no pick) stay at their counts."""
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine, bisecting_fit
+    from clickhouse_k_means_spark.sources.state import SnapshotStateStore
+
+    sc = spark.sparkContext
+    yh = _blobs(spark).cache()
+    try:
+        yh.count()
+        with _job_ids(sc, "pin-fit-best") as jobs:
+            KMeansEngine(k=4, seed=7).fit_best(yh, n_init=3)
+        # prepare 1, then per restart init 7, Lloyd 2, inertia 1
+        assert len(jobs) <= 31, jobs
+        with _job_ids(sc, "pin-reproducible") as jobs:
+            res = KMeansEngine(k=4, seed=7, mean_scales=[100] * 3).fit(yh)
+        assert res.n_iter == 2 and len(jobs) <= 12, jobs
+        with _job_ids(sc, "pin-bisecting") as jobs:
+            _, model = bisecting_fit(yh, k=4, seed=5)
+        assert len(model) == 4 and len(jobs) <= 38, jobs
+        store = SnapshotStateStore(str(tmp_path / "store"))
+        KMeansEngine(k=4, seed=7, max_iter=1).fit(yh, state_store=store)
+        with _job_ids(sc, "pin-resume") as jobs:
+            res = KMeansEngine(k=4, seed=7).resume_fit(yh, store)
+        assert res.converged and len(jobs) <= 4, jobs
+    finally:
+        yh.unpersist()
+
+
+@pytest.mark.parametrize("init", ["plusplus", "parallel"])
+@pytest.mark.parametrize("scales", [None, [100, 100, 100]], ids=["xxhash", "reproducible"])
+def test_fit_step0_is_the_init_on_its_own(spark, init, scales):
+    """prepare's first pick is salted by the first draw of
+    ``Random(seed)``, the draw the init takes itself: the step-0 model
+    of a fit equals the init run on its own, at any layout."""
+    from clickhouse_k_means_spark.plans.kmeans import KMeansEngine
+
+    base = _blobs(spark, n_per=50, seed=4)
+    eng = KMeansEngine(k=4, seed=13, max_iter=1, mean_scales=scales, init=init)
+    own = (eng.init_centroids_parallel if init == "parallel" else eng.init_centroids)(
+        base, random.Random(13)
+    )
+    for n in (1, 4, spark.sparkContext.defaultParallelism):
+        res = eng.fit(base.repartition(n))
+        assert [(j, c) for s, j, c in res.history if s == 0] == own, n
 
 
 @pytest.mark.parametrize("scales", [None, [100, 100, 100]], ids=["xxhash", "reproducible"])
